@@ -561,16 +561,16 @@ def weighted_sample(docs: DataFrame, k: int = 100, weight=None,
 
     Scale shape: map-only key computation + a global top-k that plans
     as TakeOrdered — no shuffle beyond the k-row collect tree.
-    ``weight`` must be a strictly positive column (default:
-    ``n_chars``).
+    ``weight`` defaults to ``n_chars``; rows whose weight is not
+    strictly positive (or null) are never sampled.
     """
     w = weight if weight is not None else F.col("n_chars")
     ids = F.col(id_col).cast("string")
     u = (F.conv(F.substring(F.md5(ids), 1, 8), 16, 10).cast("double")
          + 1.0) / float(1 << 32)
     key = F.round(F.log(u) / w, 8)
-    ranked = docs.select(id_col, w.cast("double").alias("weight"),
-                         key.alias("skey"))
+    ranked = docs.filter(w > 0).select(
+        id_col, w.cast("double").alias("weight"), key.alias("skey"))
     top = ranked.orderBy(F.desc("skey"), id_col).limit(k)
     rk = Window.orderBy(F.desc("skey"), id_col)
     return (top.withColumn("sample_rank", F.row_number().over(rk))

@@ -43,21 +43,17 @@ BEGIN_ARTIFACT = os.path.join(
 _BEGIN_CACHE: dict = {}
 
 # context columns arguments_with_context() adds (consumed and dropped
-# by repair_begins); _p1g/_p2g are the SAME-STREAM tags of the two
-# preceding tokens — the overlap guard's inputs (r4 VERDICT next #6)
-_CTX_COLS = ("_tok", "_p1", "_p1b", "_p2", "_p2b", "_nx", "_nxb",
-             "_p1g", "_p2g")
+# by repair_begins)
+_CTX_COLS = ("_tok", "_p1", "_p1b", "_p2", "_p2b", "_nx", "_nxb")
 # last-token context columns (consumed and dropped by repair_ends):
-# the span's last token, the two following tokens (text + begin +
-# same-stream tag) and the token before the last one (inside the span
-# when n_tokens > 1)
+# the span's last token, the two following tokens (text + begin) and
+# the token before the last one (inside the span when n_tokens > 1)
 _END_CTX_COLS = ("_ltok", "_ln1", "_ln1b", "_ln2", "_ln2b",
-                 "_lp1", "_lp1b", "_lg1", "_lg2")
+                 "_lp1", "_lp1b")
 # assemble_spans carry_last mapping that produces them
 _END_CARRY = {"_ltok": "token", "_ln1": "_nx", "_ln1b": "_nxb",
               "_ln2": "_n2", "_ln2b": "_n2b",
-              "_lp1": "_p1", "_lp1b": "_p1b",
-              "_lg1": "_ng1", "_lg2": "_ng2"}
+              "_lp1": "_p1", "_lp1b": "_p1b"}
 
 
 # artifact key prefix -> weights-dict key; "aend"/"tend" are the
@@ -218,26 +214,20 @@ def load_begin_weights(path: str | None = None):
     return _BEGIN_CACHE[p]
 
 
-def with_begin_context(tagged: DataFrame,
-                       tag_col: str | None = None) -> DataFrame:
+def with_begin_context(tagged: DataFrame) -> DataFrame:
     """Add sentence-scoped neighbor-token context columns to the token
     stream: previous/previous-2 token text + begin, next token text +
     begin.  The windows partition by doc_id and order by
     (sent_id, token_id) — the SAME partitioning every other tagging
     window uses, so no new Exchange enters the plan (the one-exchange
     gate in tests/test_plans.py covers the mode=model pipeline with
-    this stage active).  Cross-sentence neighbors are nulled.
-
-    ``tag_col`` additionally lags/leads the SAME-STREAM tag column
-    (trigger_tag for trigger spans, arg_tag for argument spans) into
-    _p1g/_p2g/_ng1/_ng2 — the overlap-guard inputs (a shift must not
-    absorb a token already owned by a neighboring same-stream span)."""
+    this stage active).  Cross-sentence neighbors are nulled."""
     w = Window.partitionBy("doc_id").orderBy("sent_id", "token_id")
     same1 = F.lag("sent_id", 1).over(w) == F.col("sent_id")
     same2 = F.lag("sent_id", 2).over(w) == F.col("sent_id")
     samen = F.lead("sent_id", 1).over(w) == F.col("sent_id")
     samen2 = F.lead("sent_id", 2).over(w) == F.col("sent_id")
-    out = (
+    return (
         tagged
         .withColumn("_p1", F.when(same1, F.lag("token", 1).over(w)))
         .withColumn("_p1b", F.when(same1, F.lag("begin", 1).over(w)))
@@ -248,32 +238,10 @@ def with_begin_context(tagged: DataFrame,
         .withColumn("_n2", F.when(samen2, F.lead("token", 2).over(w)))
         .withColumn("_n2b", F.when(samen2, F.lead("begin", 2).over(w)))
     )
-    if tag_col is not None:
-        out = (
-            out
-            .withColumn("_p1g", F.lag(tag_col, 1).over(w))
-            .withColumn("_p2g", F.lag(tag_col, 2).over(w))
-            .withColumn("_ng1", F.lead(tag_col, 1).over(w))
-            .withColumn("_ng2", F.lead(tag_col, 2).over(w))
-        )
-    return out
-
-
-def _ctx_carry(guard: bool) -> tuple[list[str], dict[str, str]]:
-    """(carry columns, carry_last map) for the span assembly — the
-    same-stream guard tags (_p1g/_p2g and the _lg1/_lg2 carry) only
-    when ``guard`` is True: the overlap guard was measured WORSE on
-    every config (artifacts/edge_audit.json), so the deployed path
-    skips computing the four tag lag/leads entirely."""
-    cols = [c for c in _CTX_COLS[1:] if guard or not c.endswith("g")]
-    last = {k: v for k, v in _END_CARRY.items()
-            if guard or not k.startswith("_lg")}
-    return cols, last
 
 
 def arguments_with_context(tagged: DataFrame,
-                           carry: list[str] | None = None,
-                           guard: bool = False) -> DataFrame:
+                           carry: list[str] | None = None) -> DataFrame:
     """extract_arguments over a context-augmented token stream; the
     span rows carry the first token's text (_tok) and its sentence
     neighbors (_p1/_p1b/_p2/_p2b/_nx/_nxb), plus the last token's
@@ -281,38 +249,30 @@ def arguments_with_context(tagged: DataFrame,
     _nx is the token AFTER the span's first token — i.e. the span's
     own second token when n_tokens > 1, which is exactly the +1-shift
     target; symmetrically _lp1 is the second-to-last token when
-    n_tokens > 1, the end head's -1 target.  ``guard=True``
-    additionally carries the same-stream tag context the overlap
-    guard reads (the measured-rejected path — audit only)."""
+    n_tokens > 1, the end head's -1 target."""
     from .linking import extract_arguments
 
-    cols, last = _ctx_carry(guard)
-    ctx = with_begin_context(tagged,
-                             tag_col="arg_tag" if guard else None) \
-        .withColumn("_tok", F.col("token"))
+    ctx = with_begin_context(tagged).withColumn("_tok", F.col("token"))
     return extract_arguments(
-        ctx, carry=list(carry or []) + ["_tok", *cols], carry_last=last)
+        ctx, carry=list(carry or []) + list(_CTX_COLS),
+        carry_last=_END_CARRY)
 
 
 def events_with_context(tagged: DataFrame,
-                        carry: list[str] | None = None,
-                        guard: bool = False) -> DataFrame:
+                        carry: list[str] | None = None) -> DataFrame:
     """extract_events variant of arguments_with_context — trigger
     spans carry the same neighbor-context columns for the trigger
     shift heads."""
     from .linking import extract_events
 
-    cols, last = _ctx_carry(guard)
-    ctx = with_begin_context(tagged,
-                             tag_col="trigger_tag" if guard else None) \
-        .withColumn("_tok", F.col("token"))
+    ctx = with_begin_context(tagged).withColumn("_tok", F.col("token"))
     return extract_events(
-        ctx, carry=list(carry or []) + ["_tok", *cols], carry_last=last)
+        ctx, carry=list(carry or []) + list(_CTX_COLS),
+        carry_last=_END_CARRY)
 
 
 def repair_begins(args: DataFrame, weights,
-                  label_col: str = "arg_type",
-                  overlap_guard: bool = False) -> DataFrame:
+                  label_col: str = "arg_type") -> DataFrame:
     """Apply a trained shift head to a span frame produced by
     arguments_with_context() / events_with_context() (``label_col``:
     "arg_type" for argument spans, "subtype" for trigger spans).
@@ -325,57 +285,33 @@ def repair_begins(args: DataFrame, weights,
 
     Overlap behavior (r4 ADVICE, MEASURED r5): a left shift may absorb
     the I- tail of the PRECEDING predicted span, so two repaired spans
-    can overlap.  The guard that suppresses those shifts
-    (``overlap_guard=True``) was built and measured head-on
-    (artifacts/edge_audit.json): it is slightly WORSE everywhere —
-    exact-(begin,end) F1 nugget 0.789 -> 0.783, argument 0.796 ->
-    0.785 — because the blocked shifts are mostly CORRECT repairs
-    whose neighbor tag was itself a tagging error.  The unguarded
-    default is therefore an evidence-backed choice, gated by
-    tests/test_begin_repair.py::test_edge_audit_recorded_and_floored."""
+    can overlap.  A guard that suppressed those shifts was built and
+    measured head-on: it was slightly WORSE everywhere — exact-(begin,
+    end) F1 nugget 0.789 -> 0.783, argument 0.796 -> 0.785 — because
+    the blocked shifts were mostly CORRECT repairs whose neighbor tag
+    was itself a tagging error (receipts in BASELINE.md)."""
     if weights is None:
         return args.drop(*_CTX_COLS)
     df = _with_shifts_jvm(args, weights, None, label_col,
                           ("_tok", "_p1", "_p2", "_nx"), (),
                           SHIFTS, None)
     df = df.withColumnRenamed("_shb", "_sh")
-    return _apply_begin(df, overlap_guard=overlap_guard).drop(*_CTX_COLS)
+    return _apply_begin(df).drop(*_CTX_COLS)
 
 
-def _free_pred(overlap_guard: bool):
-    """Shared guard predicate for both edge appliers: a neighbor tag
-    column is "free" (absorbable) when it is null or O; with the guard
-    off every column is free."""
-    def _free(col):
-        if not overlap_guard:
-            return F.lit(True)
-        return F.col(col).isNull() | (F.col(col) == "O")
-    return _free
-
-
-def _apply_begin(df: DataFrame, shift_col: str = "_sh",
-                 overlap_guard: bool = False) -> DataFrame:
+def _apply_begin(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
     """JVM-side begin edits for a predicted shift column: guard
     unavailable targets to keep-as-is, then rewrite text / begin /
     first_token_id / n_tokens.  Shared by repair_begins and the fused
-    repair_edges.
-
-    ``overlap_guard`` (r4 VERDICT next #6): additionally suppress a
-    LEFT shift whose absorbed token carries a non-O tag of the same
-    stream (_p1g/_p2g from with_begin_context(tag_col=...)) — the
-    absorbed token is the tail of the PRECEDING predicted span, so the
-    unguarded shift would create overlapping spans."""
+    repair_edges."""
     sh = F.col(shift_col)
-    _free = _free_pred(overlap_guard)
 
     # guard: fall back to 0 when the shift target does not exist
     df = df.withColumn(
         shift_col,
-        F.when((sh == -1) & F.col("_p1b").isNotNull()
-               & _free("_p1g"), -1)
+        F.when((sh == -1) & F.col("_p1b").isNotNull(), -1)
         .when((sh == -2) & F.col("_p2b").isNotNull()
-              & F.col("_p1b").isNotNull()
-              & _free("_p1g") & _free("_p2g"), -2)
+              & F.col("_p1b").isNotNull(), -2)
         .when((sh == 1) & F.col("_nxb").isNotNull()
               & (F.col("n_tokens") > 1), 1)
         .otherwise(0))
@@ -404,8 +340,7 @@ def _apply_begin(df: DataFrame, shift_col: str = "_sh",
 
 
 def repair_ends(args: DataFrame, weights,
-                label_col: str = "arg_type",
-                overlap_guard: bool = False) -> DataFrame:
+                label_col: str = "arg_type") -> DataFrame:
     """Right-edge twin of :func:`repair_begins` (r3 VERDICT next #5):
     a trained 4-class END_SHIFTS head snaps span ENDs onto the gold
     right-edge convention.  Consumes the last-token context columns
@@ -422,29 +357,23 @@ def repair_ends(args: DataFrame, weights,
                           ("_ltok", "_ln1", "_ln2", "_lp1"), (),
                           END_SHIFTS, None)
     df = df.withColumnRenamed("_shb", "_sh")
-    return _apply_end(df, overlap_guard=overlap_guard).drop(*_END_CTX_COLS)
+    return _apply_end(df).drop(*_END_CTX_COLS)
 
 
-def _apply_end(df: DataFrame, shift_col: str = "_sh",
-               overlap_guard: bool = False) -> DataFrame:
+def _apply_end(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
     """JVM-side end edits for a predicted end-shift column (guard +
     rewrite text / end / n_tokens).  Reads `begin` and `n_tokens`
     from the frame, so when composed after :func:`_apply_begin` the
     guards and substring arithmetic see the begin-adjusted values —
-    exactly the sequential repair_begins |> repair_ends semantics.
-    ``overlap_guard``: suppress a RIGHT extension whose absorbed token
-    (_lg1/_lg2) is owned by the FOLLOWING same-stream span."""
+    exactly the sequential repair_begins |> repair_ends semantics."""
     sh = F.col(shift_col)
-    _free = _free_pred(overlap_guard)
 
     # guard: keep-as-is when the shift target does not exist
     df = df.withColumn(
         shift_col,
-        F.when((sh == 1) & F.col("_ln1b").isNotNull()
-               & _free("_lg1"), 1)
+        F.when((sh == 1) & F.col("_ln1b").isNotNull(), 1)
         .when((sh == 2) & F.col("_ln1b").isNotNull()
-              & F.col("_ln2b").isNotNull()
-              & _free("_lg1") & _free("_lg2"), 2)
+              & F.col("_ln2b").isNotNull(), 2)
         .when((sh == -1) & F.col("_lp1b").isNotNull()
               & (F.col("n_tokens") > 1), -1)
         .otherwise(0))
@@ -475,8 +404,7 @@ def _apply_end(df: DataFrame, shift_col: str = "_sh",
 
 
 def repair_edges(args: DataFrame, begin_w, end_w,
-                 label_col: str = "arg_type",
-                 overlap_guard: bool = False) -> DataFrame:
+                 label_col: str = "arg_type") -> DataFrame:
     """Fused begin+end repair: both edge heads are scored on one frame
     — the end head's features (last-token context columns) are
     untouched by the begin edit, so both shifts can be predicted
@@ -493,16 +421,13 @@ def repair_edges(args: DataFrame, begin_w, end_w,
     if begin_w is None and end_w is None:
         return args.drop(*_CTX_COLS, *_END_CTX_COLS)
     if end_w is None:
-        return repair_begins(args, begin_w, label_col,
-                             overlap_guard=overlap_guard).drop(*_END_CTX_COLS)
+        return repair_begins(args, begin_w, label_col) \
+            .drop(*_END_CTX_COLS)
     if begin_w is None:
-        return repair_ends(args.drop(*_CTX_COLS), end_w, label_col,
-                           overlap_guard=overlap_guard)
+        return repair_ends(args.drop(*_CTX_COLS), end_w, label_col)
     df = _with_shifts_jvm(args, begin_w, end_w, label_col,
                           ("_tok", "_p1", "_p2", "_nx"),
                           ("_ltok", "_ln1", "_ln2", "_lp1"),
                           SHIFTS, END_SHIFTS)
-    df = _apply_begin(df, "_shb", overlap_guard=overlap_guard) \
-        .drop(*_CTX_COLS)
-    return _apply_end(df, "_she", overlap_guard=overlap_guard) \
-        .drop(*_END_CTX_COLS)
+    df = _apply_begin(df, "_shb").drop(*_CTX_COLS)
+    return _apply_end(df, "_she").drop(*_END_CTX_COLS)

@@ -69,12 +69,6 @@ COREF_ARTIFACT = os.path.join(
 # form; argoverlap and exact are the two extra surface signals the
 # BASELINE.md ceiling analysis measured (argument token overlap AUC
 # 0.571, trigger surface identity — the strongest same-hopper cue).
-# NOT here: the r5 sieve-chain overlap (operators/sieve.py — the
-# CoreNLP-chain substitute; reference consumes real chains via
-# iscoref, link_coref.py:311-332) was built and MEASURED DEAD for
-# event-coref precision (AUC 0.561 over 8 variants, oracle-ceiling
-# delta +0.001, receipts in BASELINE.md) — pair_matrices still
-# computes it as a diagnostic when the trainer supplies _chains.
 COREF_PAIR_FEATURES = [
     "nugdiff", "realisdiff", "argtype", "argcoref",
     "nugdist", "argmiss", "timedist", "argoverlap", "exact",
@@ -214,20 +208,8 @@ def pair_matrices(sub: pd.DataFrame, pubdate: tuple[int, int, int],
     ]
     times = ["" if t is None or t != t else str(t)
              for t in sub["time_surface"]]
-    # per-event sieve-chain multisets — DIAGNOSTIC ONLY (the trainer's
-    # AUC table supplies _chains; the deployed scorer never does —
-    # the chain feature measured dead, BASELINE.md r5)
-    chaincnt = ([Counter(c) if isinstance(c, (list, tuple)) else Counter()
-                 for c in sub["_chains"]]
-                if "_chains" in sub.columns else None)
-    # per-event mention totals are loop-invariant — hoist them out of
-    # the O(n^2) pair loop below
-    chaintot = ([sum(c.values()) for c in chaincnt]
-                if chaincnt is not None else None)
 
     m = {k: np.zeros((n, n)) for k in COREF_PAIR_FEATURES}
-    if chaincnt is not None:
-        m["chain"] = np.zeros((n, n))
     for i in range(n):
         for j in range(n):
             if i == j:
@@ -262,16 +244,6 @@ def pair_matrices(sub: pd.DataFrame, pubdate: tuple[int, int, int],
                 m["exact"][i, j] = (
                     1.0 if texts[i].lower() == texts[j].lower() else 0.0
                 )
-                if chaincnt is not None:
-                    # sieve-chain overlap diagnostic: fraction of
-                    # (arg_i, arg_j) cross pairs in the SAME
-                    # document-level chain (argcoref pairing with
-                    # transitive chains instead of containment)
-                    ci, cj = chaincnt[i], chaincnt[j]
-                    tot = chaintot[i] * chaintot[j]
-                    if tot:
-                        same = sum(v * cj[c] for c, v in ci.items())
-                        m["chain"][i, j] = same / tot
     return m
 
 
@@ -366,22 +338,14 @@ def _make_cluster_doc(trained):
 
 
 def coref_inputs(events: DataFrame, linked: DataFrame,
-                 pubdates: DataFrame | None = None,
-                 with_ments: bool = False) -> DataFrame:
+                 pubdates: DataFrame | None = None) -> DataFrame:
     """The per-event frame _cluster_doc consumes, BEFORE the groupBy:
     (doc_id, event_id, subtype, sent_id, event_text, realis,
     arg_types, arg_texts, time_surface, pubdate).  Exposed so
     train_coref.py can collect the identical inputs the deployed
-    clustering sees.  ``with_ments`` additionally packs the per-event
-    (sent, begin, text, type) mention list for the sieve-chain
-    DIAGNOSTIC (trainer-only; the feature measured dead for
-    deployment — BASELINE.md r5)."""
-    from .sieve import FIELD_SEP, MENT_SEP
-
+    clustering sees."""
     has_text = "arg_text" in linked.columns
     has_arg_id = "arg_id" in linked.columns
-    has_pos = (with_ments and has_text and "arg_sent" in linked.columns
-               and "arg_begin" in linked.columns)
     aggs = [
         F.concat_ws("|", F.array_sort(F.collect_list("arg_type"))).alias("arg_types"),
         (
@@ -399,21 +363,6 @@ def coref_inputs(events: DataFrame, linked: DataFrame,
                 if has_text else F.lit(None).cast("string")
             )
         ).alias("time_surface"),
-        # packed per-event mention list for the sieve (sent, begin,
-        # text, type) in reading order — consumed doc-level by
-        # _cluster_doc; empty when the caller's frame has no positions
-        (
-            F.concat_ws(MENT_SEP, F.transform(
-                F.array_sort(F.collect_list(F.struct(
-                    F.col("arg_sent").cast("long").alias("s"),
-                    F.col("arg_begin").cast("long").alias("b"),
-                    F.col("arg_text").alias("t"),
-                    F.col("arg_type").alias("y")))),
-                lambda x: F.concat_ws(
-                    FIELD_SEP, x["s"].cast("string"),
-                    x["b"].cast("string"), x["t"], x["y"])))
-            if has_pos else F.lit("")
-        ).alias("arg_ments"),
     ]
     argl = linked.groupBy("doc_id", "event_id").agg(*aggs)
     base = events.select(

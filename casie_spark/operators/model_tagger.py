@@ -60,8 +60,6 @@ VOCAB_SIZE = 1 << VOCAB_BITS
 BIGRAM_SIZE = 1 << 17
 TRIGRAM_SIZE = 1 << 18
 N_SHAPES = 10
-CNG_SIZE = 1 << 18   # hashed char-3..6-gram table rows
-CNG_MAX = 32         # padded bag width (id 0 = PAD row, pinned zero)
 
 TRIGGER_LABELS = ["O"] + list(config.EVENT_SUBTYPES)
 ARG_LABELS = ["O", "CVE", "Version", "Money", "Time", "Malware", "PII",
@@ -80,23 +78,13 @@ ARTIFACT_PATH = os.path.join(
 )
 
 _CTX_KEYS = ("t0", "s0", "tm1", "tp1", "sh", "b1", "b2", "tri",
-             "pf3", "sf3", "sf4", "cng", "c0f", "c0c", "cm1c", "cp1c",
-             "sev", "b")
+             "pf3", "sf3", "sf4", "sev", "b")
 # "sev" (sentence-has-decoded-trigger, a (2, L) table on the arg head)
 # is NOT a gather key: its ids come from the trigger head's decoded
 # path, so TaggerWeights.decode applies it explicitly between the two
 # head decodes rather than from feature_arrays.
-# "cng" is the hashed char-3..6-gram BAG (fastText-style subword
-# feature, Bojanowski et al. 2017): its ids are a padded (n, CNG_MAX)
-# matrix, gathered as table[ids].sum(axis=1) with the PAD row pinned
-# at zero.  Built as the r5 generalization channel (interior n-grams
-# the pf3/sf3/sf4 affix slices miss) and MEASURED-REJECTED for
-# deployment — held-out gains don't convert to triples and the
-# full-corpus fit dilutes (BASELINE.md r5).  The committed artifact
-# carries no cng table; train(cng_heads=...) reproduces the receipts.
-_WC_KEYS = ("c0f", "c0c", "cm1c", "cp1c")
 _GATHER_KEYS = ("t0", "s0", "tm1", "tp1", "sh", "b1", "b2", "tri",
-                "pf3", "sf3", "sf4", "cng", "c0f", "c0c", "cm1c", "cp1c")
+                "pf3", "sf3", "sf4")
 
 
 def token_id(tok: str) -> int:
@@ -149,50 +137,14 @@ def _ngram_id(s: str, size: int) -> int:
     return zlib.crc32(s.encode("utf-8")) % size
 
 
-def char_ngram_bag(tok: str) -> np.ndarray:
-    """Hashed bag of ALL char 3..6-grams of one lowercased token with
-    fastText boundary markers ('<tok>'), deduplicated and padded to a
-    fixed (CNG_MAX,) id row (PAD=0).  When a long token yields more
-    than CNG_MAX distinct grams, the smallest CNG_MAX hash ids are
-    kept — a deterministic MinHash-style subsample, independent of
-    gram order, identical at train and inference time."""
-    if not tok:
-        return np.zeros(CNG_MAX, np.int64)
-    t = "<" + tok + ">"
-    ids = {
-        2 + zlib.crc32(t[i:i + n].encode("utf-8")) % (CNG_SIZE - 2)
-        for n in (3, 4, 5, 6)
-        for i in range(len(t) - n + 1)
-    }
-    keep = sorted(ids)[:CNG_MAX]
-    out = np.zeros(CNG_MAX, np.int64)
-    out[:len(keep)] = keep
-    return out
-
-
-def _char_ngram_bags(low: list[str]) -> np.ndarray:
-    """(n, CNG_MAX) bag matrix for a batch, computed once per UNIQUE
-    lowercased surface (the Zipfian token stream makes the unique set
-    5-20x smaller than the batch) and scattered back."""
-    uniq, inv = np.unique(np.asarray(low, dtype=object), return_inverse=True)
-    bags = np.zeros((len(uniq), CNG_MAX), np.int64)
-    for u, tok in enumerate(uniq):
-        bags[u] = char_ngram_bag(tok)
-    return bags[inv]
-
-
-def feature_arrays(toks: list, prevs: list, nexts: list,
-                   cng: bool = True, wc: bool = True
+def feature_arrays(toks: list, prevs: list, nexts: list
                    ) -> dict[str, np.ndarray]:
     """Shared train/inference featurizer: hashed ids for the current
     token (raw + stem), its sentence neighbors (PAD at boundaries),
     its shape class, and the hashed bigrams/trigram around it (the
     memorization features — a linear sum over unigram tables cannot
     represent context-dependent labels; the n-gram rows can).  One
-    dict of int64 arrays per batch.  ``cng=False`` skips the char
-    n-gram bag matrix, ``wc=False`` the word-class ids (callers whose
-    heads carry no such table — the committed deployment artifacts
-    carry neither; both features were measured-rejected, BASELINE.md).
+    dict of int64 arrays per batch.
 
     All per-token hashes are computed once per UNIQUE surface and
     scattered back (r5 decode profile: featurization was 91% of the
@@ -256,26 +208,6 @@ def feature_arrays(toks: list, prevs: list, nexts: list,
                                       dtype=object), return_inverse=True)
     out["sh"] = np.fromiter((shape_id(t) for t in shu), dtype=np.int64,
                             count=len(shu))[shinv]
-    if cng:
-        # full char-3..6-gram bags (r5): interior subword shape of the
-        # CURRENT token (computed only when a head carries the table —
-        # the committed deployment artifact does not; see BASELINE.md)
-        out["cng"] = _char_ngram_bags(low)
-    if wc:
-        # induced word-class ids (PPMI-SVD clusters,
-        # operators/word_classes — the Domain-Word2vec substitute).
-        # Keys are added only when the artifact exists; heads trained
-        # without them simply skip the gathers — and inference callers
-        # whose heads carry no wc table pass wc=False so the (dict
-        # lookup per token) id pass is skipped entirely.
-        from .word_classes import load_word_classes
-
-        wcm = load_word_classes()
-        if wcm is not None:
-            out["c0f"] = wcm.class_ids(low, coarse=False)
-            out["c0c"] = wcm.class_ids(low, coarse=True)
-            out["cm1c"] = wcm.class_ids(plo, coarse=True)
-            out["cp1c"] = wcm.class_ids(nlo, coarse=True)
     return out
 
 
@@ -303,20 +235,11 @@ class TaggerWeights:
             return self.w_trigger[f["s0"]], self.w_arg[f["t0"]]
         return _ctx_logits(self.trig_ctx, f), _ctx_logits(self.arg_ctx, f)
 
-    def _needs_cng(self) -> bool:
-        return any(ctx is not None and "cng" in ctx
-                   for ctx in (self.trig_ctx, self.arg_ctx))
-
-    def _needs_wc(self) -> bool:
-        return any(ctx is not None and any(k in ctx for k in _WC_KEYS)
-                   for ctx in (self.trig_ctx, self.arg_ctx))
-
     def score(self, toks: list, prevs: list, nexts: list
               ) -> tuple[np.ndarray, np.ndarray]:
         """Batch -> (trigger label indices, arg label indices) by
         per-token argmax (no sequence structure)."""
-        f = feature_arrays(toks, prevs, nexts, cng=self._needs_cng(),
-                           wc=self._needs_wc())
+        f = feature_arrays(toks, prevs, nexts)
         trig_logits, arg_logits = self._logits(f)
         return trig_logits.argmax(axis=1), arg_logits.argmax(axis=1)
 
@@ -334,8 +257,7 @@ class TaggerWeights:
         batch — no extra pass over the data.  The table is trained on
         PREDICTED flags from fold-wise cross-decoding
         (train_tagger._cross_fit_flags), matching this cascade."""
-        f = feature_arrays(toks, prevs, nexts, cng=self._needs_cng(),
-                           wc=self._needs_wc())
+        f = feature_arrays(toks, prevs, nexts)
         trig_logits, arg_logits = self._logits(f)
 
         def _path(logits, tr):
@@ -437,10 +359,7 @@ def _ctx_logits(tables: dict[str, np.ndarray], f: dict[str, np.ndarray]
     # span-identity arg head, Dice F1 0.81 -> 0.66 at the selected λ)
     for k in _GATHER_KEYS:
         if k in tables:
-            g = tables[k][f[k]]
-            # bag features (cng) index with an (n, G) id matrix — sum
-            # the G gathered rows; the PAD row is pinned at zero
-            out += g if g.ndim == 2 else g.sum(axis=1)
+            out += tables[k][f[k]]
     return out
 
 

@@ -41,7 +41,9 @@ def bucketed_interval_join(points: DataFrame, intervals: DataFrame,
     """
     p = points.withColumn(
         "_b", F.floor(F.col(ts_col) / bucket_secs).cast("long"))
-    i = intervals.withColumn(
+    # an empty or inverted interval contains no point; dropping it
+    # first keeps its bucket sequence from running end -> start
+    i = intervals.filter(F.col(end_col) > F.col(start_col)).withColumn(
         "_b",
         F.explode(F.sequence(
             F.floor(F.col(start_col) / bucket_secs).cast("long"),

@@ -344,15 +344,12 @@ def exact_span_audit(spark, tagger_weights=None) -> dict:
         ("argument", arguments_with_context, "arg", "arg_end", "arg_type"),
     ):
         out[head] = {}
-        for cfg, bw, ew, guard in (
-            ("none", None, None, False),
-            ("begin", w.get(bkey), None, False),
-            ("begin+end", w.get(bkey), w.get(ekey), False),
-            # the overlap guard (r4 VERDICT next #6) measured head-on
-            ("begin+end+guard", w.get(bkey), w.get(ekey), True),
+        for cfg, bw, ew in (
+            ("none", None, None),
+            ("begin", w.get(bkey), None),
+            ("begin+end", w.get(bkey), w.get(ekey)),
         ):
-            spans = repair_edges(ctx_fn(tagged, guard=guard), bw, ew,
-                                 label_col=lab, overlap_guard=guard) \
+            spans = repair_edges(ctx_fn(tagged), bw, ew, label_col=lab) \
                 .select("doc_id", F.col(lab).alias("label"), "begin", "end")
             out[head][cfg] = {
                 "begin_only": span_exact_prf(spans, gold[head],

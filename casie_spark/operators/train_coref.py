@@ -80,7 +80,7 @@ def build_inputs(spark) -> pd.DataFrame:
     linked = truncate(link(events, extract_arguments(tagged, carry=["role"]),
                            tagged))
     pubdates = ann.select("doc_id", F.col("info.date").alias("pubdate"))
-    base = coref_inputs(events, linked, pubdates, with_ments=True)
+    base = coref_inputs(events, linked, pubdates)
     gev = gold_events(ann).select(
         "doc_id", "hopper_id", F.col("nugget_begin").alias("begin"))
     pdf = (
@@ -101,19 +101,6 @@ def build_groups(pdf: pd.DataFrame) -> list[dict]:
     matrices, gold hopper ids, fold assignment.  Groups of one event
     are threshold-independent singletons — excluded from training and
     from threshold selection, included as singletons in B-cubed."""
-    if "arg_ments" in pdf.columns and "_chains" not in pdf.columns:
-        # document-level sieve chains (operators/sieve.py) — computed
-        # per DOC before the (doc, subtype) grouping, mirroring
-        # _cluster_doc exactly
-        from .sieve import doc_chain_sets
-
-        pdf = pdf.copy()
-        chains = pd.Series([None] * len(pdf), index=pdf.index, dtype=object)
-        for _doc, dsub in pdf.groupby("doc_id", sort=False):
-            cs = doc_chain_sets(dsub["arg_ments"].fillna("").tolist())
-            chains.loc[dsub.index] = pd.Series(cs, index=dsub.index,
-                                               dtype=object)
-        pdf["_chains"] = chains
     groups = []
     for (doc_id, subtype), sub in pdf.groupby(["doc_id", "subtype"],
                                               sort=True):
@@ -377,21 +364,6 @@ def main() -> None:  # pragma: no cover - CLI entry
     print("\nper-feature AUC (raw value vs same-hopper):")
     for k, name in enumerate(COREF_PAIR_FEATURES):
         print(f"  {name:12s} {rank_auc(X[:, k], y):.3f}")
-    # sieve-chain DIAGNOSTIC (operators/sieve.py): measured dead in r5
-    # (AUC 0.561, oracle-ceiling delta +0.001 — BASELINE.md) and kept
-    # out of COREF_PAIR_FEATURES; printed so the receipt reproduces
-    chain_vals, chain_labs = [], []
-    for g in groups:
-        if g["mats"] is None or "chain" not in g["mats"]:
-            continue
-        n = len(g["event_ids"])
-        iu, ju = np.triu_indices(n, k=1)
-        chain_vals.append(g["mats"]["chain"][iu, ju])
-        chain_labs.append((g["hoppers"][iu] == g["hoppers"][ju]).astype(float))
-    if chain_vals:
-        cv_, cl_ = np.concatenate(chain_vals), np.concatenate(chain_labs)
-        print(f"  {'chain*':12s} {rank_auc(cv_, cl_):.3f}  "
-              "(diagnostic only, not in the scorer)")
 
     cv = cross_validate(groups, X, y, fold)
     print("\n5-fold cross-fitted (honest) clustering quality:")

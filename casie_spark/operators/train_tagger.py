@@ -40,11 +40,9 @@ import os
 
 import numpy as np
 
-from .. import config
 from .model_tagger import (
     ARTIFACT_PATH,
     BIGRAM_SIZE,
-    CNG_SIZE,
     GOLD_ARG_LABELS,
     N_SHAPES,
     TRIGGER_LABELS,
@@ -106,8 +104,7 @@ def build_training_frame(spark):
 
 
 def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
-                seed: int, drop_keys: tuple = (),
-                word_dropout: float = 0.0) -> dict[str, np.ndarray]:
+                seed: int, drop_keys: tuple = ()) -> dict[str, np.ndarray]:
     """Mini-batch AVERAGED PERCEPTRON over the summed-gather linear
     model: on each mistake, +w at the gold label row and -w at the
     predicted one, per feature table (w = inverse-class-frequency^0.15,
@@ -117,15 +114,7 @@ def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
     Mistake-driven updates reach high accuracy on the near-separable
     memorization objective where plain SGD under-trains; per-epoch
     weight averaging gives the usual stability.  Deterministic: fixed
-    seed, fixed epoch/batch schedule.
-
-    ``word_dropout``: probability per (example, epoch) of treating the
-    CURRENT token as unseen — its identity features (t0/s0/b1/b2/tri)
-    contribute nothing and receive no update for that example, so the
-    score must come from shape/affix/word-class rows.  This simulates
-    the held-out regime at train time (word dropout, Iyyer et al.
-    2015); without it the memorization features fix every training
-    mistake first and the generalizing rows are starved."""
+    seed, fixed epoch/batch schedule."""
     rng = np.random.default_rng(seed)
     shapes = {
         "t0": (VOCAB_SIZE, n_labels), "s0": (VOCAB_SIZE, n_labels),
@@ -136,18 +125,6 @@ def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
         "pf3": (VOCAB_SIZE, n_labels), "sf3": (VOCAB_SIZE, n_labels),
         "sf4": (VOCAB_SIZE, n_labels), "b": (n_labels,),
     }
-    if "cng" in f:  # char-3..6-gram bag (r5 generalization channel)
-        shapes["cng"] = (CNG_SIZE, n_labels)
-    # induced word-class tables (sized by the committed unsupervised
-    # artifact; keys exist in `f` only when it is present)
-    from .word_classes import ID_OFFSET, load_word_classes
-
-    wc = load_word_classes()
-    if wc is not None and "c0f" in f:
-        shapes["c0f"] = (wc.n_fine + ID_OFFSET, n_labels)
-        shapes["c0c"] = (wc.n_coarse + ID_OFFSET, n_labels)
-        shapes["cm1c"] = (wc.n_coarse + ID_OFFSET, n_labels)
-        shapes["cp1c"] = (wc.n_coarse + ID_OFFSET, n_labels)
     # sentence-has-trigger flag (cross-fitted PREDICTED flags — the
     # caller injects f["sev"]; only the arg head trains with it)
     if "sev" in f:
@@ -162,46 +139,23 @@ def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
     cw = (cw / cw[0]).astype(np.float32)  # O has weight 1
 
     gather = tuple(k for k in shapes if k != "b")
-    # token-identity features silenced when the example's current
-    # token is dropped (they all contain the current token's surface)
-    lex = tuple(k for k in gather if k in ("t0", "s0", "b1", "b2", "tri"))
     navg = 0
     for ep in range(EPOCHS):
         order = rng.permutation(n)
-        dropped = (rng.random(n) < word_dropout) if word_dropout > 0 \
-            else np.zeros(n, dtype=bool)
         for s in range(0, n, BATCH):
             idx = order[s:s + BATCH]
-            keep = ~dropped[idx]
             logits = tables["b"][None, :].repeat(len(idx), axis=0)
             for k in gather:
-                if f[k].ndim == 2:  # bag feature: sum the gathered rows
-                    logits += tables[k][f[k][idx]].sum(axis=1)
-                elif k in lex and word_dropout > 0:
-                    logits += tables[k][f[k][idx]] * keep[:, None]
-                else:
-                    logits += tables[k][f[k][idx]]
+                logits += tables[k][f[k][idx]]
             pred = logits.argmax(axis=1)
             mist = pred != y[idx]
             if mist.any():
                 mi = idx[mist]
                 pm = pred[mist]
                 wts = cw[y[mi]]
-                mkeep = keep[mist]
                 for k in gather:
-                    if f[k].ndim == 2:
-                        ids = f[k][mi]                  # (m, G) with PAD=0
-                        wb = wts[:, None] * (ids != 0)  # PAD rows get 0
-                        np.add.at(tables[k], (ids, y[mi][:, None]), wb)
-                        np.add.at(tables[k], (ids, pm[:, None]), -wb)
-                    elif k in lex and word_dropout > 0:
-                        mk, yk, pk, wk = (mi[mkeep], y[mi][mkeep],
-                                          pm[mkeep], wts[mkeep])
-                        np.add.at(tables[k], (f[k][mk], yk), wk)
-                        np.add.at(tables[k], (f[k][mk], pk), -wk)
-                    else:
-                        np.add.at(tables[k], (f[k][mi], y[mi]), wts)
-                        np.add.at(tables[k], (f[k][mi], pm), -wts)
+                    np.add.at(tables[k], (f[k][mi], y[mi]), wts)
+                    np.add.at(tables[k], (f[k][mi], pm), -wts)
                 np.add.at(tables["b"], y[mi], wts)
                 np.add.at(tables["b"], pm, -wts)
         if ep >= AVG_FROM:
@@ -254,9 +208,7 @@ def sentence_starts(pdf) -> np.ndarray:
 
 
 def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
-                     lam: float = 2.0,
-                     trig_drop: tuple = ("c0f", "c0c", "cm1c", "cp1c",
-                                         "cng")) -> np.ndarray:
+                     lam: float = 2.0) -> np.ndarray:
     """Predicted sentence-has-trigger flags via fold-wise
     cross-decoding (the r3 'sev' retry — training on GOLD flags
     measured triple F1 0.729 -> 0.711 because inference flags come
@@ -285,7 +237,7 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
         # same recipe as the deployment trigger head, fit on the
         # other folds only
         head = _train_head(ftr, yt[tr], len(TRIGGER_LABELS),
-                           SEED + 100 + k, drop_keys=trig_drop)
+                           SEED + 100 + k)
         tables = {kk: v.astype(np.float32) for kk, v in head.items()}
         # folds split whole docs, so both subsets keep sentence
         # contiguity; a row is a sentence start in the subset iff it
@@ -301,8 +253,7 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
     return flags
 
 
-def train(pdf, sev: bool = True,
-          cng_heads: tuple = ()) -> dict[str, np.ndarray]:
+def train(pdf, sev: bool = True) -> dict[str, np.ndarray]:
     """pandas frame from build_training_frame -> artifact arrays.
     ``sev``: train the arg head with the cross-fitted
     sentence-has-predicted-trigger table (see _cross_fit_flags) —
@@ -310,25 +261,11 @@ def train(pdf, sev: bool = True,
     0.890 with precision also up), held-out arg F1 +0.013, held-out
     nugget +0.009; the r3 gold-flag variant of the same idea was
     rejected (0.729 -> 0.711 triples) because gold flags mismatch the
-    decoded cascade.
-    ``cng_heads``: which heads train with the hashed char-3..6-gram
-    bag table ("trig"/"arg").  Default OFF — the r5 measurement
-    (BASELINE.md) rejected every configuration: trigger-only lifts
-    held-out nugget F1 0.466 -> 0.488 but drags held-out triples
-    0.179 -> 0.167 through the arg cascade; both-heads is flat on
-    triples (0.1785) and DILUTES the full-corpus fit exactly like the
-    rejected word-dropout/word-class experiments (nugget Dice 0.802 ->
-    0.764, arg 0.843 -> 0.804, triples 0.748 -> 0.676 after a full
-    downstream retrain).  The flag stays for reproduction of the
-    receipts."""
+    decoded cascade."""
     toks = pdf["token"].astype(str).tolist()
     prevs = pdf["prev"].tolist()
     nexts = pdf["next"].tolist()
-    # skip the measured-rejected feature matrices unless a head
-    # actually trains with them: wc keys are unconditionally dropped
-    # below, and the cng bag (the most expensive featurizer pass) is
-    # only consumed when cng_heads asks for the receipt reproduction
-    f = feature_arrays(toks, prevs, nexts, cng=bool(cng_heads), wc=False)
+    f = feature_arrays(toks, prevs, nexts)
 
     trig_idx = {t: i for i, t in enumerate(TRIGGER_LABELS)}
     arg_idx = {t: i for i, t in enumerate(GOLD_ARG_LABELS)}
@@ -336,36 +273,23 @@ def train(pdf, sev: bool = True,
     ya = pdf["arg_label"].map(lambda v: arg_idx.get(v, 0)).to_numpy(np.int64)
 
     # Per-head feature sets, selected by measurement (r4 sweeps,
-    # BASELINE.md "Word classes + word dropout — measured, rejected"):
+    # BASELINE.md):
     # - affix tables go to the TRIGGER head only: type-level trigger
     #   classification transfers through suffixes ("-ware", "-tion"),
     #   while the argument head is span-identity — adding affixes to
     #   it measured Dice F1 0.81 -> 0.66 (diluted averaged-perceptron
     #   capacity);
-    # - induced word-class tables (operators/word_classes) on EITHER
-    #   head: +0.004 held-out nugget F1 but ~1 pt full-corpus nugget
-    #   Dice and 3 pts recall at matched λ (0.807 -> 0.794/0.796) —
-    #   same dilution mechanism, rejected for deployment;
-    # - word dropout (0.1/0.2/0.3 per head): +0.007 held-out nugget
-    #   at trig p=0.2 but compounding full-corpus recall cost; on the
-    #   argument head it collapsed recall outright (0.328 -> 0.256) —
-    #   rejected;
     # - the sev table (cross-fitted predicted sentence flags) is the
     #   r4 keeper — see the docstring numbers.
-    wc_drop = ("c0f", "c0c", "cm1c", "cp1c")
-    trig_drop = wc_drop + (() if "trig" in cng_heads else ("cng",))
-    arg_drop = ("pf3", "sf3", "sf4") + wc_drop + (
-        () if "arg" in cng_heads else ("cng",))
-    trig = _train_head(f, yt, len(TRIGGER_LABELS), SEED,
-                       drop_keys=trig_drop)
+    trig = _train_head(f, yt, len(TRIGGER_LABELS), SEED)
     fa = f
     if sev:
         fa = dict(f)
         # the cross-fit trigger heads mirror the deployment trigger
         # recipe so the arg head trains against the cascade it will see
-        fa["sev"] = _cross_fit_flags(pdf, f, yt, trig_drop=trig_drop)
+        fa["sev"] = _cross_fit_flags(pdf, f, yt)
     arg = _train_head(fa, ya, len(GOLD_ARG_LABELS), SEED + 1,
-                      drop_keys=arg_drop)
+                      drop_keys=("pf3", "sf3", "sf4"))
 
     out: dict[str, np.ndarray] = {}
     for k, v in trig.items():
@@ -525,8 +449,7 @@ def doc_fold(doc_id: str, n_folds: int = N_FOLDS) -> int:
     return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % n_folds
 
 
-def holdout_main(cng_heads: tuple = (),
-                 out_path: str | None = None) -> None:  # pragma: no cover - CLI entry
+def holdout_main(out_path: str | None = None) -> None:  # pragma: no cover - CLI entry
     """Held-out evaluation (r2 VERDICT missing #3): train on folds
     1..4 (~80% of documents), select λ on the TRAIN docs only, score
     mention Dice AND end-to-end triples on the untouched fold-0 docs.
@@ -559,7 +482,7 @@ def holdout_main(cng_heads: tuple = (),
     print(f"docs: {len(train_docs)} train / {len(test_docs)} held out; "
           f"rows: {len(train_pdf)}/{len(pdf)}")
 
-    arrays = train(train_pdf, cng_heads=cng_heads)
+    arrays = train(train_pdf)
     raw = raw_transitions(train_pdf)
 
     print("selecting λ on the train split:")
@@ -621,7 +544,6 @@ def holdout_main(cng_heads: tuple = (),
                     "out; emissions + transitions + λ + begin repair + "
                     "role/realis heads + link ranker all fit on train "
                     "folds only",
-        "cng_heads": list(cng_heads),
         "n_folds": N_FOLDS,
         "n_train_docs": len(train_docs),
         "n_test_docs": len(test_docs),
@@ -642,14 +564,14 @@ def holdout_main(cng_heads: tuple = (),
     spark.stop()
 
 
-def main(cng_heads: tuple = ()) -> None:  # pragma: no cover - CLI entry
+def main() -> None:  # pragma: no cover - CLI entry
     from ..session import get_spark
 
     spark = get_spark("train-tagger", master="local[16]",
                       shuffle_partitions=16)
     pdf = build_training_frame(spark)
     print(f"training rows: {len(pdf)}")
-    arrays = train(pdf, cng_heads=cng_heads)
+    arrays = train(pdf)
     raw = raw_transitions(pdf)
     print("selecting transition scale:")
     lam = select_transition_scale(spark, arrays, raw)
@@ -673,11 +595,9 @@ def main(cng_heads: tuple = ()) -> None:  # pragma: no cover - CLI entry
 if __name__ == "__main__":
     import sys
 
-    cng = [a.split("=", 1)[1] for a in sys.argv if a.startswith("--cng=")]
-    heads = tuple(h for h in (cng[0].split(",") if cng else []) if h)
     if "--holdout" in sys.argv:
         outp = [a.split("=", 1)[1] for a in sys.argv
                 if a.startswith("--out=")]
-        holdout_main(cng_heads=heads, out_path=outp[0] if outp else None)
+        holdout_main(out_path=outp[0] if outp else None)
     else:
-        main(cng_heads=heads)
+        main()

@@ -3382,7 +3382,7 @@ def oracle_sql(sf_dir: str = "") -> dict[str, str]:
                                        md5(doc_id::varchar), 1, 8))::bigint
                                      + 1.0) / 4294967296.0)
                                  / n_chars, 8) AS skey
-                    FROM documents) t
+                    FROM documents WHERE n_chars > 0) t
             ) r WHERE sample_rank <= 100
         """,
         "q63_crawl_delta": """

@@ -71,24 +71,16 @@ def test_keep_class_is_identity(spark, tagged):
     assert got[34]["n_tokens"] == 2
     # begin-context columns dropped; end-context columns survive for
     # the subsequent repair_ends stage, which drops them (even when
-    # its weights are None).  The deployed (guard=False) frame skips
-    # the same-stream guard tags entirely — the overlap guard measured
-    # worse everywhere (artifacts/edge_audit.json), so its four token-
-    # stream lag/leads and two carry_last aggregates are not computed;
-    # guard=True (the audit path) still carries the full set.
+    # its weights are None).
     from casie_spark.operators.begin_repair import (
         _END_CTX_COLS,
         repair_ends,
     )
 
     leftover = [c for c in out.columns if c.startswith("_")]
-    assert sorted(leftover) == sorted(
-        c for c in _END_CTX_COLS if not c.startswith("_lg"))
+    assert sorted(leftover) == sorted(_END_CTX_COLS)
     done = repair_ends(out, None)
     assert not [c for c in done.columns if c.startswith("_")]
-
-    guarded = arguments_with_context(tagged, guard=True)
-    assert {"_p1g", "_p2g", "_lg1", "_lg2"} <= set(guarded.columns)
 
 
 def test_shift_minus1_applies_and_guards(spark, tagged):
@@ -229,13 +221,10 @@ def test_featurizer_deterministic_and_null_safe():
 
 
 def test_edge_audit_recorded_and_floored():
-    """Exact-edge audit artifact (r4 VERDICT next #5/#6 — regenerate
+    """Exact-edge audit artifact (r4 VERDICT next #5 — regenerate
     with `python -m casie_spark.operators.train_begin --audit`):
-    begin repair must lift exact-begin span F1, the END head must lift
-    exact-(begin,end) F1 on BOTH heads, and the measured receipt for
-    the overlap guard (slightly negative everywhere: nugget (b,e)
-    0.789 -> 0.783, argument 0.796 -> 0.785) is pinned so the
-    unguarded default stays an evidence-backed choice."""
+    begin repair must lift exact-begin span F1, and the END head must
+    lift exact-(begin,end) F1 on BOTH heads."""
     import json
 
     from casie_spark.operators.train_begin import EDGE_AUDIT_PATH
@@ -244,8 +233,7 @@ def test_edge_audit_recorded_and_floored():
         audit = json.load(fh)
     for head in ("nugget", "argument"):
         cfgs = audit[head]
-        assert set(cfgs) == {"none", "begin", "begin+end",
-                             "begin+end+guard"}
+        assert set(cfgs) == {"none", "begin", "begin+end"}
         # begin repair pays on the exact-begin key (measured +0.038)
         assert cfgs["begin"]["begin_only"]["f1"] >= \
             cfgs["none"]["begin_only"]["f1"] + 0.02
@@ -254,9 +242,6 @@ def test_edge_audit_recorded_and_floored():
             cfgs["begin"]["begin_end"]["f1"] + 0.01
         # floors with margin (measured nugget 0.789 / argument 0.796)
         assert cfgs["begin+end"]["begin_end"]["f1"] >= 0.76
-        # overlap-guard receipt: measured no-better-than unguarded
-        assert cfgs["begin+end+guard"]["begin_end"]["f1"] <= \
-            cfgs["begin+end"]["begin_end"]["f1"] + 0.005
 
 
 def test_jvm_scorer_parity_with_python_logits(spark):

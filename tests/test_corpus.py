@@ -436,6 +436,19 @@ def test_weighted_sample_invariants(spark):
     assert len(out3) == 10
 
 
+
+def test_weighted_sample_skips_non_positive_weights(spark):
+    """A zero weight would divide by zero and a negative one would
+    flip its key's sign to the top of the ranking: neither row is
+    sampled."""
+    from casie_spark.corpus import weighted_sample
+
+    docs = spark.createDataFrame([(1, 0), (2, -5), (3, 100)],
+                                 "doc_id long, n_chars long")
+    out = weighted_sample(docs, k=3).collect()
+    assert [(r["doc_id"], r["weight"], r["sample_rank"]) for r in out] \
+        == [(3, 100.0, 1)]
+
 def test_shard_checksums_detect_mutation_and_order_invariance(spark):
     """Integrity audit semantics: identical content -> identical
     checksums under any partitioning/ordering; a single-row text

@@ -188,7 +188,7 @@ def test_feature_arrays_unique_scatter_parity(toks):
 
     prevs = [None] + toks[:-1]
     nexts = toks[1:] + [None]
-    f = feature_arrays(toks, prevs, nexts, cng=False, wc=False)
+    f = feature_arrays(toks, prevs, nexts)
 
     def norm(t):
         return "" if t is None or (
@@ -219,63 +219,3 @@ def test_feature_arrays_unique_scatter_parity(toks):
     for k, v in ref.items():
         assert list(f[k]) == v, k
 
-
-# ---------------------------------------------------------------------------
-# char_ngram_bag (the hashed subword kernel behind the "cng" feature)
-# ---------------------------------------------------------------------------
-
-def test_char_ngram_bag_golden():
-    """Pinned ids for representative tokens — the committed rejection
-    receipts (BASELINE.md hash-capacity table) were measured against
-    exactly these hashes, so any drift invalidates them."""
-    import numpy as np
-
-    from casie_spark.operators.model_tagger import CNG_MAX, char_ngram_bag
-
-    assert char_ngram_bag("").tolist() == [0] * CNG_MAX
-    a = char_ngram_bag("a")          # "<a>" has exactly one 3-gram
-    assert a[0] == 244359 and (a[1:] == 0).all()
-    flaw = char_ngram_bag("flaw")
-    nz = flaw[flaw > 0]
-    assert len(nz) == 10
-    assert nz[:4].tolist() == [25122, 44660, 146521, 158978]
-    long = char_ngram_bag("pseudopseudohypoparathyroidism-attack-vector")
-    assert (long > 0).sum() == CNG_MAX          # truncated, fully packed
-    assert long[0] == 632 and long[-1] == 54740  # smallest-id subsample
-    assert isinstance(flaw, np.ndarray) and flaw.dtype == np.int64
-
-
-@given(st.text(max_size=24))
-@settings(max_examples=200, deadline=None)
-def test_char_ngram_bag_invariants(tok):
-    from casie_spark.operators.model_tagger import (
-        CNG_MAX, CNG_SIZE, char_ngram_bag)
-
-    bag = char_ngram_bag(tok)
-    assert bag.shape == (CNG_MAX,)
-    nz = bag[bag > 0]
-    # PAD(0) only as a trailing block; live ids never collide with the
-    # PAD/OOV rows (>= 2), stay in-table, strictly increase (dedup +
-    # smallest-kept subsample is order-canonical)
-    assert (bag[len(nz):] == 0).all()
-    assert all(2 <= i < CNG_SIZE for i in nz.tolist())
-    assert (nz[1:] > nz[:-1]).all() if len(nz) > 1 else True
-    if tok:
-        assert len(nz) >= 1        # "<t>" always yields a 3-gram
-    # deterministic (train/serve share one function)
-    assert (char_ngram_bag(tok) == bag).all()
-
-
-@given(st.lists(st.text(max_size=10), min_size=1, max_size=30))
-@settings(max_examples=100, deadline=None)
-def test_char_ngram_bags_unique_scatter_parity(low):
-    """The unique-scatter batch form is row-identical to the per-token
-    kernel — same contract the other featurizers prove above."""
-    import numpy as np
-
-    from casie_spark.operators.model_tagger import (
-        _char_ngram_bags, char_ngram_bag)
-
-    got = _char_ngram_bags(low)
-    want = np.stack([char_ngram_bag(t) for t in low])
-    assert (got == want).all()

@@ -64,3 +64,13 @@ def test_random_differential_multiple_bucket_widths(spark):
     want = _naive(points, intervals)
     for b in (64, 100, 1000):
         assert _run(spark, points, intervals, b) == want, b
+
+
+def test_inverted_interval_joins_nothing(spark):
+    """An interval whose end precedes its start contains no point and
+    must not explode into the buckets between end and start (a 10**15
+    second span would overflow the bucket sequence and abort the
+    whole join)."""
+    intervals = [(1, 30, 864000, -10**15), (1, 31, 500, 500)]
+    points = [(1, 1, 0), (2, 1, 500), (3, 1, 863999)]
+    assert _run(spark, points, intervals, 86400) == set()

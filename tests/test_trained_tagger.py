@@ -13,6 +13,7 @@ import numpy as np
 from casie_spark.operators.model_tagger import (
     ARTIFACT_PATH,
     _CTX_KEYS,
+    _GATHER_KEYS,
     load_weights,
 )
 
@@ -20,24 +21,29 @@ from casie_spark.operators.model_tagger import (
 def test_artifact_present_and_well_formed():
     w = load_weights(ARTIFACT_PATH)
     assert w.trig_ctx is not None, "trained artifact missing"
-    # r4 key sets (train_tagger.train): the trigger head carries the
-    # lexical/shape/affix gather set; word-class tables are excluded
-    # from BOTH heads (measured capacity dilution, r4), the r5 char
-    # n-gram bag likewise (measured dilution, BASELINE.md r5), and the
-    # argument head additionally omits the affixes but carries the
-    # decode-time "sev" table (cross-fitted predicted sentence flags)
-    rejected = {"c0f", "c0c", "cm1c", "cp1c", "cng"}
-    for k in (set(_CTX_KEYS) - {"sev"} - rejected):
+    # key sets (train_tagger.train): the trigger head carries the
+    # lexical/shape/affix gather set; the argument head omits the
+    # affixes but carries the decode-time "sev" table (cross-fitted
+    # predicted sentence flags)
+    for k in (set(_CTX_KEYS) - {"sev"}):
         assert k in w.trig_ctx, k
         assert np.isfinite(w.trig_ctx[k]).all()
-    for k in (set(_CTX_KEYS) - {"pf3", "sf3", "sf4"} - rejected):
+    for k in (set(_CTX_KEYS) - {"pf3", "sf3", "sf4"}):
         assert k in w.arg_ctx, k
         assert np.isfinite(w.arg_ctx[k]).all()
-    # the rejected features must NOT be in the deployed artifact
-    assert not (rejected & set(w.trig_ctx)) and not (rejected & set(w.arg_ctx))
     assert w.arg_ctx["sev"].shape[0] == 2
     assert w.trigger_labels[0] == "O" and w.arg_labels[0] == "O"
     assert len(w.arg_labels) == 22  # full gold argument inventory
+    # every committed per-head table is one inference actually reads:
+    # _ctx_logits iterates _GATHER_KEYS only ("sev" is applied by
+    # decode), so a table under any other key would ship and be
+    # silently ignored; read the raw file — load_weights filters
+    consumed = set(_GATHER_KEYS) | {"b", "sev"}
+    names = np.load(ARTIFACT_PATH, allow_pickle=False).files
+    for head in ("trig", "arg"):
+        keys = {n[len(head) + 1:] for n in names
+                if n.startswith(head + "_")} - {"trans", "start", "labels"}
+        assert keys <= consumed, (head, sorted(keys - consumed))
 
 
 def test_trained_tagger_beats_rule_floor(spark):
