@@ -18,7 +18,11 @@ that gap:
   from zips) and extracted once to a content-addressed per-user cache
   so ``np.load`` keeps operating on a normal file.
 
-Executors never need either: weights are loaded on the driver and
+Every loader and trainer reads and writes its ``.npz`` through
+:func:`load_artifact` / :func:`save_artifact`: one resolve-load-parse
+path with one per-path cache, which a save invalidates.
+
+Executors never need any of this: weights are loaded on the driver and
 broadcast (SURVEY.md S5), so only the driver-side import path must be
 zip-safe.  ``tests/test_deploy.py`` runs the whole loader surface in a
 subprocess whose only package source is the zip.
@@ -30,6 +34,8 @@ import hashlib
 import os
 import tempfile
 import zipfile
+
+import numpy as np
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _ARTIFACTS_DIR = os.path.join(_PKG_DIR, "artifacts")
@@ -103,8 +109,8 @@ def _extracted_resource(name: str) -> str | None:
     zip with different weights never collides with a stale extraction.
     Successful resolutions are memoized per process (name -> path), so
     repeated loader calls don't re-read + re-hash the zip bytes;
-    absence is NOT memoized (matching the loaders' own no-pinning
-    convention — a cheap ``is_file()`` probe re-runs instead).  A
+    absence is NOT memoized (matching :func:`load_artifact`'s
+    no-pinning convention — a cheap ``is_file()`` probe re-runs instead).  A
     pre-existing cache file is trusted only after its bytes hash to the
     expected digest — a planted or truncated file is overwritten, never
     loaded.
@@ -144,12 +150,42 @@ def resolve_artifact(path: str) -> str:
     including "missing" probes before training) is returned unchanged;
     a missing path *inside* ``casie_spark/artifacts`` is retried
     through the package import source, covering the ``--py-files``
-    zip deployment.  Loaders keep their existing
-    ``os.path.exists`` / cache-by-path logic untouched.
+    zip deployment.  :func:`load_artifact` applies its
+    ``os.path.exists`` / cache-by-path logic to the resolved path.
     """
     if os.path.exists(path) or os.path.dirname(path) != _ARTIFACTS_DIR:
         return path
     return _extracted_resource(os.path.basename(path)) or path
+
+
+_ARTIFACT_CACHE: dict = {}
+
+
+def load_artifact(path: str, parse):
+    """``parse(arrays)`` of the ``.npz`` at ``path`` (resolved through
+    :func:`resolve_artifact`; ``arrays`` is a name -> ndarray dict), or
+    None when the file is absent.  Cached per (process, path).  Neither
+    absence nor a None parse (a stale artifact from an older feature
+    set) is cached, so a later :func:`save_artifact` is picked up."""
+    p = resolve_artifact(path)
+    if p in _ARTIFACT_CACHE:
+        return _ARTIFACT_CACHE[p]
+    if not os.path.exists(p):
+        return None
+    with np.load(p, allow_pickle=False) as z:
+        out = parse({k: z[k] for k in z.files})
+    if out is not None:
+        _ARTIFACT_CACHE[p] = out
+    return out
+
+
+def save_artifact(arrays, path: str) -> str:
+    """Write ``arrays`` as a compressed ``.npz`` at ``path`` and drop
+    that path's cached parse, so the next load sees the new tables."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    np.savez_compressed(path, **arrays)
+    _ARTIFACT_CACHE.pop(resolve_artifact(path), None)
+    return path
 
 
 def main() -> None:  # pragma: no cover - thin CLI

@@ -40,8 +40,6 @@ BEGIN_ARTIFACT = os.path.join(
     "artifacts", "begin_weights.npz",
 )
 
-_BEGIN_CACHE: dict = {}
-
 # context columns arguments_with_context() adds (consumed and dropped
 # by repair_begins)
 _CTX_COLS = ("_tok", "_p1", "_p1b", "_p2", "_p2b", "_nx", "_nxb")
@@ -72,7 +70,7 @@ _HEAD_KEYS = {"arg": "arg", "trig": "trig",
 # no Python hashing).  Pure-JVM scoring was built and measured twice
 # and lost both times — see _with_shifts_jvm's docstring for the
 # receipts.  Differential parity vs the Python featurizer + float64
-# _logits is gated in test_begin_repair.
+# perceptron.gather_logits is gated in test_begin_repair.
 # ---------------------------------------------------------------------
 
 def _hid_col(prefix: str, *cols):
@@ -141,7 +139,7 @@ def _with_shifts_jvm(df: DataFrame, begin_t: dict, end_t: dict | None,
     ever reach Python and no Python hashing runs — and ONE slim
     pandas_udf per span frame turns the int ids into shifts (numpy
     table gathers + argmax over the broadcast weights, float64 in
-    _KEYS order — bit-identical to train_begin._logits).  The two
+    _KEYS order — bit-identical to the trainer's scorer).  The two
     pure-JVM alternatives lose: one broadcast join per table costs
     ~20 AQE broadcast stages of scheduling latency (5.0 s vs this
     design's ~1 s standalone), and stack+single-join+sum-agg pays a
@@ -150,6 +148,7 @@ def _with_shifts_jvm(df: DataFrame, begin_t: dict, end_t: dict | None,
     of 9 strings, and the UDF body is pure gathers."""
     from pyspark.sql.functions import pandas_udf
 
+    from .perceptron import gather_logits
     from .train_begin import _KEYS
 
     ids_b = _edge_id_cols(label_col, *begin_cols)
@@ -164,16 +163,13 @@ def _with_shifts_jvm(df: DataFrame, begin_t: dict, end_t: dict | None,
     @pandas_udf("int")
     def _shift_ids(*id_cols: pd.Series) -> pd.Series:
         bw, ew = bc.value
-        n = len(id_cols[0])
-        lb = bw["b"].astype(np.float64)[None, :].repeat(n, axis=0)
-        for ki, k in enumerate(_KEYS):
-            lb += bw[k][id_cols[ki].to_numpy()]
+        ids = [c.to_numpy() for c in id_cols]
+        lb = gather_logits(bw, dict(zip(_KEYS, ids)), _KEYS, np.float64)
         b_sh = np.asarray(b_shifts, np.int32)[lb.argmax(axis=1)]
         if not fused:
             return pd.Series(b_sh)
-        le = ew["b"].astype(np.float64)[None, :].repeat(n, axis=0)
-        for ki, k in enumerate(_KEYS):
-            le += ew[k][id_cols[10 + ki].to_numpy()]
+        le = gather_logits(ew, dict(zip(_KEYS, ids[len(_KEYS):])), _KEYS,
+                           np.float64)
         e_sh = np.asarray(e_shifts, np.int32)[le.argmax(axis=1)]
         # pack: (begin_shift + 2) * 8 + (end_shift + 1), both in-range
         return pd.Series((b_sh + 2) * 8 + (e_sh + 1))
@@ -189,29 +185,26 @@ def _with_shifts_jvm(df: DataFrame, begin_t: dict, end_t: dict | None,
     )
 
 
-def load_begin_weights(path: str | None = None):
-    """{"arg": tables, "trig": tables[, "arg_end": tables,
-    "trig_end": tables]} from the trained edge-repair artifact
-    (operators/train_begin.py trains one shift head per span kind and
-    edge — argument spans keyed by arg_type, trigger spans by
-    subtype), or None when absent.  Cached per (process, path); an
-    absent artifact is not pinned."""
-    from ..deploy import resolve_artifact
-
-    p = resolve_artifact(path or BEGIN_ARTIFACT)
-    if p in _BEGIN_CACHE:
-        return _BEGIN_CACHE[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
+def parse_begin_weights(arrays):
+    """Artifact arrays -> {"arg": tables, "trig": tables[, "arg_end":
+    tables, "trig_end": tables]} (one shift head per span kind and
+    edge, keyed by the ``_HEAD_KEYS`` prefixes), or None when empty."""
     out = {}
     for prefix, head in _HEAD_KEYS.items():
-        tables = {k[len(prefix) + 1:]: z[k].astype(np.float32)
-                  for k in z.files if k.startswith(prefix + "_")}
+        tables = {k[len(prefix) + 1:]: arrays[k].astype(np.float32)
+                  for k in arrays if k.startswith(prefix + "_")}
         if tables:
             out[head] = tables
-    _BEGIN_CACHE[p] = out or None
-    return _BEGIN_CACHE[p]
+    return out or None
+
+
+def load_begin_weights(path: str | None = None):
+    """The trained edge-repair heads (operators/train_begin.py — argument
+    spans keyed by arg_type, trigger spans by subtype), or None when
+    absent.  Cached per (process, path) by deploy.load_artifact."""
+    from ..deploy import load_artifact
+
+    return load_artifact(path or BEGIN_ARTIFACT, parse_begin_weights)
 
 
 def with_begin_context(tagged: DataFrame) -> DataFrame:

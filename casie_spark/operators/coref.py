@@ -278,28 +278,22 @@ def trained_distance(m: dict[str, np.ndarray], tw) -> np.ndarray:
     return dist
 
 
-_COREF_CACHE: dict[str, tuple | None] = {}
+def parse_coref_weights(arrays):
+    """Artifact arrays -> (w, b, mu, sd, threshold), or None for a
+    stale artifact from an older feature set."""
+    if arrays["w"].shape[0] != len(COREF_PAIR_FEATURES):
+        return None
+    return (arrays["w"].astype(np.float64), float(arrays["b"]),
+            arrays["mu"].astype(np.float64), arrays["sd"].astype(np.float64),
+            float(arrays["thr"]))
 
 
 def load_coref_weights(path: str | None = None):
-    """(w, b, mu, sd, threshold) or None when no artifact.  Cached per
-    (process, path); absence is NOT pinned (matching load_begin_weights
-    — a probe before training must not mask a later save)."""
-    from ..deploy import resolve_artifact
+    """(w, b, mu, sd, threshold) or None when no (current) artifact.
+    Cached per (process, path) by deploy.load_artifact."""
+    from ..deploy import load_artifact
 
-    p = resolve_artifact(path or COREF_ARTIFACT)
-    if p in _COREF_CACHE:
-        return _COREF_CACHE[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    if z["w"].shape[0] != len(COREF_PAIR_FEATURES):
-        return None  # stale artifact from an older feature set
-    out = (z["w"].astype(np.float64), float(z["b"]),
-           z["mu"].astype(np.float64), z["sd"].astype(np.float64),
-           float(z["thr"]))
-    _COREF_CACHE[p] = out
-    return out
+    return load_artifact(path or COREF_ARTIFACT, parse_coref_weights)
 
 
 def _make_cluster_doc(trained):

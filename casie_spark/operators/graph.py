@@ -202,8 +202,10 @@ def negative_samples(edges: DataFrame, n_neg: int = 3,
     """Filtered tail-corruption negatives for link-prediction training
     (the corrupted-triple recipe of Bordes et al. 2013): for each
     positive edge and sample slot ``i`` in [0, n_neg), replace the
-    tail with the entity whose dense index is
-    ``hash16(src|dst|i) % |E|``, then drop candidates that collide
+    tail with the entity whose dense index is ``h(src|dst|i) % |E|``
+    (h = the first 15 hex digits of the md5, a 60-bit non-negative
+    bigint: a 16-bit hash could never pick an entity whose index is
+    >= 65,536), then drop candidates that collide
     with the true tail or with ANY positive edge (the "filtered"
     setting — unfiltered negatives teach the model to score true
     edges low).  Returns (src, dst, sample_id, neg_dst); fully
@@ -215,8 +217,6 @@ def negative_samples(edges: DataFrame, n_neg: int = 3,
     or shuffle-hash anti-join on (src, neg) against the positive set.
     No driver state, no RNG — the hash IS the sampler.
     """
-    from ..functions.textstats import hash16
-
     pos = materialize(edges.select(F.col(src_col).alias("src"),
                                    F.col(dst_col).alias("dst")).distinct())
     ents = materialize(
@@ -228,8 +228,9 @@ def negative_samples(edges: DataFrame, n_neg: int = 3,
     cand = (pos.select(
         "src", "dst",
         F.explode(F.sequence(F.lit(0), F.lit(n_neg - 1))).alias("sample_id"))
-        .withColumn("idx", hash16(F.concat_ws(
-            "|", "src", "dst", F.col("sample_id").cast("string"))) % n))
+        .withColumn("idx", F.conv(F.substring(F.md5(F.concat_ws(
+            "|", "src", "dst", F.col("sample_id").cast("string"))), 1, 15),
+            16, 10).cast("bigint") % n))
     out = (cand.join(ents, "idx")
            .select("src", "dst", "sample_id", F.col("v").alias("neg_dst"))
            .filter(F.col("neg_dst") != F.col("dst")))

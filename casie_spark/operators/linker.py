@@ -276,30 +276,22 @@ def candidate_frame(events: DataFrame, args: DataFrame,
     )
 
 
-_LINKER_CACHE: dict[str, tuple | None] = {}
+def parse_linker_weights(arrays):
+    """Artifact arrays -> (w_base, w_pair, lex_trig, lex_arg), or None
+    for a stale artifact from an older feature set (the caller then
+    falls back to the rule cascade rather than crash mid-pipeline)."""
+    if arrays["w_base"].shape[0] != N_BASE:
+        return None
+    return tuple(arrays[k].astype(np.float64)
+                 for k in ("w_base", "w_pair", "lex_trig", "lex_arg"))
 
 
 def load_linker_weights(path: str | None = None):
-    """(w_base, w_pair, lex_trig, lex_arg) or None when no artifact.
-    Cached per (process, path); absence is NOT pinned (matching
-    load_begin_weights — a probe before training must not mask the
-    artifact save_artifact writes later)."""
-    from ..deploy import resolve_artifact
+    """(w_base, w_pair, lex_trig, lex_arg) or None when no (current)
+    artifact.  Cached per (process, path) by deploy.load_artifact."""
+    from ..deploy import load_artifact
 
-    p = resolve_artifact(path or LINKER_ARTIFACT)
-    if p in _LINKER_CACHE:
-        return _LINKER_CACHE[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    if z["w_base"].shape[0] != N_BASE:
-        # stale artifact from an older feature set — fall back to the
-        # rule cascade rather than crash mid-pipeline
-        return None
-    out = (z["w_base"].astype(np.float64), z["w_pair"].astype(np.float64),
-           z["lex_trig"].astype(np.float64), z["lex_arg"].astype(np.float64))
-    _LINKER_CACHE[p] = out
-    return out
+    return load_artifact(path or LINKER_ARTIFACT, parse_linker_weights)
 
 
 def with_score_jvm(cand: DataFrame, weights) -> DataFrame:

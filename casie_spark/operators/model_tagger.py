@@ -41,6 +41,7 @@ Two weight providers:
 
 from __future__ import annotations
 
+import functools
 import os
 import unicodedata
 import zlib
@@ -52,6 +53,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
+from .perceptron import gather_logits
 
 PAD_ID = 0   # x2index.py:20-26 reserves 0/1
 OOV_ID = 1
@@ -233,7 +235,12 @@ class TaggerWeights:
     def _logits(self, f: dict[str, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
         if self.trig_ctx is None:
             return self.w_trigger[f["s0"]], self.w_arg[f["t0"]]
-        return _ctx_logits(self.trig_ctx, f), _ctx_logits(self.arg_ctx, f)
+        # each head gathers its OWN tables: the trigger head carries the
+        # affix tables (pf3/sf3/sf4 generalize type-level trigger
+        # classification) while the argument head omits them (measured:
+        # affixes dilute the span-identity arg head, Dice F1 0.81 -> 0.66)
+        return tuple(gather_logits(t, f, [k for k in _GATHER_KEYS if k in t])
+                     for t in (self.trig_ctx, self.arg_ctx))
 
     def score(self, toks: list, prevs: list, nexts: list
               ) -> tuple[np.ndarray, np.ndarray]:
@@ -350,19 +357,6 @@ def _viterbi_bucket(logits, starts, lengths, trans, start_scores, out):
     out[flat_idx] = labels[sent_of, pos_of]
 
 
-def _ctx_logits(tables: dict[str, np.ndarray], f: dict[str, np.ndarray]
-                ) -> np.ndarray:
-    out = tables["b"][None, :].astype(np.float32).repeat(len(f["t0"]), axis=0)
-    # iterate the head's OWN tables: the trigger head carries affix
-    # tables (pf3/sf3/sf4 generalize type-level trigger classification)
-    # while the argument head omits them (measured: affixes dilute the
-    # span-identity arg head, Dice F1 0.81 -> 0.66 at the selected λ)
-    for k in _GATHER_KEYS:
-        if k in tables:
-            out += tables[k][f[k]]
-    return out
-
-
 def _stemmed_forms(w: str) -> set[str]:
     """Both the raw and stem form — lookups stem the query token, so
     the stem form is the one that matters; the raw form is kept for
@@ -433,69 +427,43 @@ def distill_rule_weights() -> TaggerWeights:
     return TaggerWeights(wt, wa)
 
 
-# keyed by path (ADVICE r2: a global single-slot cache pinned the first
-# result and ignored the path argument of later calls)
-_CACHED_WEIGHTS: dict[str, TaggerWeights] = {}
-_CACHED_FALLBACK: list[TaggerWeights] = []
+def parse_weights(arrays) -> TaggerWeights:
+    """Artifact arrays (``trig_*`` / ``arg_*`` tables, label lists and
+    optional ``{head}_trans`` / ``{head}_start`` Viterbi scores) ->
+    TaggerWeights; shared by :func:`load_weights` and the trainer."""
+    def _trans(head):
+        if f"{head}_trans" not in arrays:
+            return None
+        return {"trans": arrays[f"{head}_trans"].astype(np.float32),
+                "start": arrays[f"{head}_start"].astype(np.float32)}
+
+    return TaggerWeights(
+        w_trigger=np.zeros((VOCAB_SIZE, len(TRIGGER_LABELS)), np.float32),
+        w_arg=np.zeros((VOCAB_SIZE, len(GOLD_ARG_LABELS)), np.float32),
+        trigger_labels=[str(s) for s in arrays["trigger_labels"]],
+        arg_labels=[str(s) for s in arrays["arg_labels"]],
+        trig_ctx={k: arrays[f"trig_{k}"].astype(np.float32)
+                  for k in _CTX_KEYS if f"trig_{k}" in arrays},
+        arg_ctx={k: arrays[f"arg_{k}"].astype(np.float32)
+                 for k in _CTX_KEYS if f"arg_{k}" in arrays},
+        trig_trans=_trans("trig"),
+        arg_trans=_trans("arg"),
+    )
+
+
+@functools.cache
+def _distilled() -> TaggerWeights:
+    return distill_rule_weights()
 
 
 def load_weights(path: str = ARTIFACT_PATH) -> TaggerWeights:
-    """Trained artifact if present, else the distilled fallback.
-    Cached per (process, path) — the driver builds the broadcast from
-    it.  ``invalidate_weight_cache`` drops entries after retraining.
-    The default path is zip-safe (deploy.resolve_artifact) so a
-    ``--py-files`` deployment still loads the trained weights.
+    """Trained artifact if present, else the distilled fallback (not
+    pinned under the path: the next call re-checks it).  Zip-safe and
+    cached per (process, path) via deploy.load_artifact — the driver
+    builds the broadcast from it."""
+    from ..deploy import load_artifact
 
-    Absence is NOT pinned (the convention every other loader and
-    ``deploy._extracted_resource`` follow): the distilled fallback is
-    cached under its own slot, so a probe that ran before training does
-    not keep serving rule-distilled weights after ``train_tagger``
-    writes the artifact — the next call re-checks the path."""
-    from ..deploy import resolve_artifact
-
-    path = resolve_artifact(path)
-    cached = _CACHED_WEIGHTS.get(path)
-    if cached is not None:
-        return cached
-    if os.path.exists(path):
-        z = np.load(path, allow_pickle=False)
-        trig_ctx = {k: z[f"trig_{k}"].astype(np.float32)
-                    for k in _CTX_KEYS if f"trig_{k}" in z.files}
-        arg_ctx = {k: z[f"arg_{k}"].astype(np.float32)
-                   for k in _CTX_KEYS if f"arg_{k}" in z.files}
-
-        def _trans(head):
-            if f"{head}_trans" not in z.files:
-                return None
-            return {"trans": z[f"{head}_trans"].astype(np.float32),
-                    "start": z[f"{head}_start"].astype(np.float32)}
-
-        w = TaggerWeights(
-            w_trigger=np.zeros((VOCAB_SIZE, len(TRIGGER_LABELS)), np.float32),
-            w_arg=np.zeros((VOCAB_SIZE, len(GOLD_ARG_LABELS)), np.float32),
-            trigger_labels=[str(s) for s in z["trigger_labels"]],
-            arg_labels=[str(s) for s in z["arg_labels"]],
-            trig_ctx=trig_ctx,
-            arg_ctx=arg_ctx,
-            trig_trans=_trans("trig"),
-            arg_trans=_trans("arg"),
-        )
-        _CACHED_WEIGHTS[path] = w
-        return w
-    # artifact absent: serve (and memoize) the fallback WITHOUT pinning
-    # it under the path key — the existence probe re-runs next call
-    if not _CACHED_FALLBACK:  # pragma: no cover - artifact is committed
-        _CACHED_FALLBACK.append(distill_rule_weights())
-    return _CACHED_FALLBACK[0]  # pragma: no cover
-
-
-def invalidate_weight_cache(path: str | None = None) -> None:
-    """Drop cached weights (all paths, or one) after saving an artifact."""
-    if path is None:
-        _CACHED_WEIGHTS.clear()
-        _CACHED_FALLBACK.clear()
-    else:
-        _CACHED_WEIGHTS.pop(path, None)
+    return load_artifact(path, parse_weights) or _distilled()
 
 
 def tag_model(tokens: DataFrame, weights: TaggerWeights | None = None,

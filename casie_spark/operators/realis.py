@@ -113,33 +113,22 @@ def classify_realis_rules(ctx_df: DataFrame, events: DataFrame) -> DataFrame:
     )
 
 
-_REALIS_WEIGHTS: dict = {}
+def parse_realis_weights(arrays):
+    """Artifact arrays -> (tables, labels) for the realis head."""
+    tables = {k[7:]: arrays[k].astype(np.float32)
+              for k in arrays if k.startswith("realis_")
+              and k != "realis_labels"}
+    return tables, [str(s) for s in arrays["realis_labels"]]
 
 
 def load_realis_weights(path: str | None = None):
     """(tables, labels) from the trained realis artifact
     (operators/train_realis.py), or None when absent.  Cached per
-    (process, path) like load_role_weights — an absent artifact is NOT
-    pinned, so a later save_artifact is picked up."""
-    import os
-
-    import numpy as np
-
-    from ..deploy import resolve_artifact
+    (process, path) by deploy.load_artifact."""
+    from ..deploy import load_artifact
     from .train_realis import REALIS_ARTIFACT
 
-    p = resolve_artifact(path or REALIS_ARTIFACT)
-    if p in _REALIS_WEIGHTS:
-        return _REALIS_WEIGHTS[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    tables = {k[7:]: z[k].astype(np.float32)
-              for k in z.files if k.startswith("realis_")
-              and k != "realis_labels"}
-    labels = [str(s) for s in z["realis_labels"]]
-    _REALIS_WEIGHTS[p] = (tables, labels)
-    return _REALIS_WEIGHTS[p]
+    return load_artifact(path or REALIS_ARTIFACT, parse_realis_weights)
 
 
 def trained_realis_provider(weights=None):

@@ -47,32 +47,21 @@ def role_lookup_df(spark: SparkSession) -> DataFrame:
     )
 
 
-# keyed by path (ADVICE r2: a single-slot cache pinned the first result)
-_ROLE_WEIGHTS: dict[str, tuple] = {}
+def parse_role_weights(arrays):
+    """Artifact arrays -> (tables, labels) for the role-phrase head."""
+    tables = {k[5:]: arrays[k].astype(np.float32)
+              for k in arrays if k.startswith("role_") and k != "role_labels"}
+    return tables, [str(s) for s in arrays["role_labels"]]
 
 
 def load_role_weights(path: str | None = None):
     """(tables, labels) from the trained role-phrase artifact
     (operators/train_roles.py), or None when absent.  Cached per
-    (process, path); the provider broadcasts it."""
-    import os
-
-    import numpy as np
-
-    from ..deploy import resolve_artifact
+    (process, path) by deploy.load_artifact; the provider broadcasts it."""
+    from ..deploy import load_artifact
     from .train_roles import ROLE_ARTIFACT
 
-    p = resolve_artifact(path or ROLE_ARTIFACT)
-    if p in _ROLE_WEIGHTS:
-        return _ROLE_WEIGHTS[p]
-    if not os.path.exists(p):
-        return None
-    z = np.load(p, allow_pickle=False)
-    tables = {k[5:]: z[k].astype(np.float32)
-              for k in z.files if k.startswith("role_") and k != "role_labels"}
-    labels = [str(s) for s in z["role_labels"]]
-    _ROLE_WEIGHTS[p] = (tables, labels)
-    return _ROLE_WEIGHTS[p]
+    return load_artifact(path or ROLE_ARTIFACT, parse_role_weights)
 
 
 def trained_role_provider(weights=None):
@@ -93,11 +82,13 @@ def trained_role_provider(weights=None):
         @pandas_udf("string")
         def predict(sub: pd.Series, at: pd.Series,
                     txt: pd.Series) -> pd.Series:
-            from .train_roles import _logits, role_features
+            from .perceptron import gather_logits
+            from .train_roles import ROLE_KEYS, role_features
 
             tables, labels = bc.value
             f = role_features(sub.tolist(), at.tolist(), txt.tolist())
-            out = np.array(labels, dtype=object)[_logits(tables, f).argmax(1)]
+            out = np.array(labels, dtype=object)[
+                gather_logits(tables, f, ROLE_KEYS).argmax(1)]
             return pd.Series(out)
 
         return cand.select(

@@ -15,7 +15,8 @@ This trains that capability the same way as the other recovered heads
 capacity lives inside its BiLSTM-CRF span decoder, whose blobs are
 absent upstream): a summed-gather linear model over hashed surface
 features of the span's first token and its sentence neighbors,
-mini-batch averaged perceptron, fixed seed/schedule, bit-reproducible
+trained by the summed-gather averaged perceptron
+(operators/perceptron.py), fixed seed/schedule, bit-reproducible
 artifact.  Classes are token shifts {-2, -1, 0, +1} applied to the
 predicted span begin (begin_repair.SHIFTS).  TWO heads share the
 recipe: argument spans (keyed by arg_type) and trigger spans (keyed
@@ -41,16 +42,18 @@ import os
 import numpy as np
 
 from .model_tagger import N_SHAPES, VOCAB_SIZE, shape_id, token_id
+from .perceptron import gather_logits, train_head
 
 SEED = 20260819
-EPOCHS = 24
-BATCH = 256
-AVG_FROM = 20
 
 # gather-table keys: unigram surface forms, pairwise and triple
 # interactions (the measured majority-table keys), prev-token shape
 _KEYS = ("at", "t0", "p1", "p2", "nx", "at_t0", "at_p1", "p1_t0",
          "at_p1_t0", "sh_p1")
+# table shapes of one 4-class shift head (begin_repair.SHIFTS /
+# END_SHIFTS), in gather order
+SHAPES = {**{k: ((N_SHAPES if k == "sh_p1" else VOCAB_SIZE), 4)
+             for k in _KEYS}, "b": (4,)}
 
 
 def _h(*parts: str) -> int:
@@ -80,54 +83,6 @@ def begin_features(arg_types: list, toks: list, p1s: list, p2s: list,
         cols["at_p1_t0"][i] = _h("D", a, p1, t)
         cols["sh_p1"][i] = shape_id(p1)
     return cols
-
-
-def _logits(tables: dict[str, np.ndarray], f: dict[str, np.ndarray]
-            ) -> np.ndarray:
-    # float64 accumulation in _KEYS order: float32 table rows upcast
-    # exactly, and left-to-right float64 addition is what the deployed
-    # scorer (begin_repair._with_shifts_jvm: JVM crc32/shape ids + one
-    # int-only pandas_udf doing the same gathers) computes — the two
-    # paths are bit-identical, incl. argmax ties (test_begin_repair)
-    out = tables["b"][None, :].astype(np.float64).repeat(
-        len(f["t0"]), axis=0)
-    for k in _KEYS:
-        out += tables[k][f[k]]
-    return out
-
-
-def train_begin_head(f: dict[str, np.ndarray], y: np.ndarray,
-                     n_labels: int) -> dict[str, np.ndarray]:
-    rng = np.random.default_rng(SEED)
-    shapes = {k: ((N_SHAPES if k == "sh_p1" else VOCAB_SIZE), n_labels)
-              for k in _KEYS}
-    shapes["b"] = (n_labels,)
-    tables = {k: np.zeros(s, np.float32) for k, s in shapes.items()}
-    avg = {k: np.zeros(s, np.float64) for k, s in shapes.items()}
-    n = len(y)
-    navg = 0
-    for ep in range(EPOCHS):
-        order = rng.permutation(n)
-        for s0 in range(0, n, BATCH):
-            idx = order[s0:s0 + BATCH]
-            logits = tables["b"][None, :].repeat(len(idx), axis=0)
-            for k in _KEYS:
-                logits += tables[k][f[k][idx]]
-            pred = logits.argmax(axis=1)
-            mist = pred != y[idx]
-            if mist.any():
-                mi = idx[mist]
-                pm = pred[mist]
-                for k in _KEYS:
-                    np.add.at(tables[k], (f[k][mi], y[mi]), 1.0)
-                    np.add.at(tables[k], (f[k][mi], pm), -1.0)
-                np.add.at(tables["b"], y[mi], 1.0)
-                np.add.at(tables["b"], pm, -1.0)
-        if ep >= AVG_FROM:
-            for k in tables:
-                avg[k] += tables[k]
-            navg += 1
-    return {k: (avg[k] / max(navg, 1)).astype(np.float32) for k in tables}
 
 
 def build_training_frame(spark, doc_ids=None, tagger_weights=None,
@@ -233,15 +188,20 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
 
 
 def train(pdf) -> dict[str, np.ndarray]:
-    """One head's aligned-pair frame -> unprefixed float16 tables."""
-    from .begin_repair import SHIFTS
-
+    """One head's aligned-pair frame -> unprefixed float16 tables.
+    Prints the shift accuracy of the stored tables next to the
+    keep-as-is baseline (class 2 = shift 0 in SHIFTS and END_SHIFTS)."""
     f = begin_features(pdf["label"].tolist(), pdf["_tok"].tolist(),
                        pdf["_p1"].tolist(), pdf["_p2"].tolist(),
                        pdf["_nx"].tolist())
     y = pdf["cls"].to_numpy(np.int64)
-    tables = train_begin_head(f, y, len(SHIFTS))
-    return {k: v.astype(np.float16) for k, v in tables.items()}
+    tables = {k: v.astype(np.float16)
+              for k, v in train_head(f, y, SHAPES, SEED).items()}
+    pred = gather_logits({k: v.astype(np.float32) for k, v in tables.items()},
+                         f, _KEYS, np.float64).argmax(axis=1)
+    print(f"  {len(y)} aligned pairs: accuracy {(pred == y).mean():.4f} "
+          f"(keep-as-is baseline {(y == 2).mean():.4f})")
+    return tables
 
 
 # artifact key prefix -> (head, edge); mirrors begin_repair._HEAD_KEYS
@@ -255,44 +215,21 @@ def train_arrays(spark, doc_ids=None, tagger_weights=None
     begin heads, aend_* / tend_* end heads).  The end heads train on
     begin-repaired spans from the begin heads fit in the same call —
     matching the inference cascade."""
-    from .begin_repair import _HEAD_KEYS  # noqa: F401 (contract doc)
+    from .begin_repair import parse_begin_weights
 
     out: dict[str, np.ndarray] = {}
     begin_w = None
     for prefix, head, edge in _TRAIN_HEADS:
         if edge == "end" and begin_w is None:
-            begin_w = arrays_to_weights(out)
+            begin_w = parse_begin_weights(out)
         pdf = build_training_frame(spark, doc_ids=doc_ids,
                                    tagger_weights=tagger_weights,
                                    head=head, edge=edge,
                                    begin_weights=begin_w)
+        print(f"{prefix} ({head} {edge}):")
         for k, v in train(pdf).items():
             out[f"{prefix}_{k}"] = v
     return out
-
-
-def arrays_to_weights(arrays):
-    """train_arrays() dict -> the {"arg": tables, "trig": tables,
-    "arg_end": tables, "trig_end": tables} structure
-    load_begin_weights returns."""
-    from .begin_repair import _HEAD_KEYS
-
-    out = {}
-    for prefix, head in _HEAD_KEYS.items():
-        tables = {k[len(prefix) + 1:]: arrays[k].astype(np.float32)
-                  for k in arrays if k.startswith(prefix + "_")}
-        if tables:
-            out[head] = tables
-    return out or None
-
-
-def save_artifact(arrays, path: str | None = None) -> str:
-    from .begin_repair import BEGIN_ARTIFACT
-
-    p = path or BEGIN_ARTIFACT
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    np.savez_compressed(p, **arrays)
-    return p
 
 
 EDGE_AUDIT_PATH = os.path.join(
@@ -382,34 +319,13 @@ def audit_main() -> None:  # pragma: no cover - CLI entry
 
 
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
-    from .begin_repair import END_SHIFTS, SHIFTS
+    from .begin_repair import BEGIN_ARTIFACT
 
     spark = get_spark("train-begin", master="local[16]",
                       shuffle_partitions=16)
-    arrays: dict[str, np.ndarray] = {}
-    begin_w = None
-    for prefix, head, edge in _TRAIN_HEADS:
-        if edge == "end" and begin_w is None:
-            begin_w = arrays_to_weights(arrays)
-        pdf = build_training_frame(spark, head=head, edge=edge,
-                                   begin_weights=begin_w)
-        print(f"{prefix} ({head} {edge}): aligned pairs: {len(pdf)}")
-        tables16 = train(pdf)
-        for k, v in tables16.items():
-            arrays[f"{prefix}_{k}"] = v
-        tables = {k: v.astype(np.float32) for k, v in tables16.items()}
-        f = begin_features(pdf["label"].tolist(), pdf["_tok"].tolist(),
-                           pdf["_p1"].tolist(), pdf["_p2"].tolist(),
-                           pdf["_nx"].tolist())
-        y = pdf["cls"].to_numpy(np.int64)
-        pred = _logits(tables, f).argmax(axis=1)
-        keep = SHIFTS.index(0) if edge == "begin" else END_SHIFTS.index(0)
-        base = float((y == keep).mean())
-        acc = float((pred == y).mean())
-        print(f"{prefix}: {edge} accuracy {acc:.4f} "
-              f"(keep-as-is baseline {base:.4f})")
-    path = save_artifact(arrays)
+    path = save_artifact(train_arrays(spark), BEGIN_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
 
     # end-to-end triple quality with the repair head active
@@ -418,9 +334,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     from ..pipeline import run_pipeline
     from ..scoring import triple_prf
     from ..sources.annotations import gold_triples, load_annotations
-    from . import begin_repair
 
-    begin_repair._BEGIN_CACHE.clear()
     ann = load_annotations(spark).cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
     pred_df = run_pipeline(docs, id_col="doc_id", mode="model")

@@ -32,8 +32,6 @@ Run: python -m casie_spark.operators.train_coref
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -344,13 +342,8 @@ def cross_validate(groups: list[dict], X, y, fold, n_folds: int = 5) -> dict:
     }
 
 
-def save_artifact(arrays, path: str = COREF_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
 
     spark = get_spark("train-coref", master="local[16]",
@@ -381,7 +374,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     path = save_artifact({
         "w": w, "b": np.float64(b), "mu": mu, "sd": sd,
         "thr": np.float64(thr),
-    })
+    }, COREF_ARTIFACT)
     print(f"saved {path}")
     spark.stop()
 

@@ -36,6 +36,7 @@ from .linker import (
     N_PAIR,
     base_vector,
     candidate_frame,
+    parse_linker_weights,
 )
 
 SEED = 20260817
@@ -202,10 +203,7 @@ def train(pools) -> dict[str, np.ndarray]:
 
 def pick_accuracy(pools, arrays) -> dict:
     """Pick accuracy over labeled pools (multi and all)."""
-    w = arrays["w_base"].astype(np.float64)
-    wp = arrays["w_pair"].astype(np.float64)
-    l1w = arrays["lex_trig"].astype(np.float64)
-    l2w = arrays["lex_arg"].astype(np.float64)
+    w, wp, l1w, l2w = parse_linker_weights(arrays)
     n_multi = r_multi = n_all = r_all = 0
     for X, pair, l1, l2, gold in pools:
         if not len(gold):
@@ -221,22 +219,8 @@ def pick_accuracy(pools, arrays) -> dict:
             "all_acc": r_all / max(n_all, 1), "n_all": n_all}
 
 
-def arrays_to_weights(arrays):
-    """train() arrays -> the (w_base, w_pair, lex_trig, lex_arg) tuple
-    linker.link_trained consumes (same shape as load_linker_weights)."""
-    return (arrays["w_base"].astype(np.float64),
-            arrays["w_pair"].astype(np.float64),
-            arrays["lex_trig"].astype(np.float64),
-            arrays["lex_arg"].astype(np.float64))
-
-
-def save_artifact(arrays, path: str = LINKER_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
 
     spark = get_spark("train-linker", master="local[16]",
@@ -248,7 +232,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     acc = pick_accuracy(pools, arrays)
     print(f"pick accuracy: multi {acc['multi_acc']:.3f} "
           f"({acc['n_multi']} pools), all {acc['all_acc']:.3f}")
-    path = save_artifact(arrays)
+    path = save_artifact(arrays, LINKER_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e3:.0f} KB)")
 
     # end-to-end triple quality with the trained linker
@@ -257,9 +241,7 @@ def main() -> None:  # pragma: no cover - CLI entry
     from ..pipeline import run_pipeline
     from ..scoring import triple_prf
     from ..sources.annotations import gold_triples, load_annotations
-    from . import linker
 
-    linker._LINKER_CACHE.clear()
     ann = load_annotations(spark).cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
     pred = run_pipeline(docs, id_col="doc_id", mode="model")

@@ -5,8 +5,9 @@ build_model :116-157, over the ±7-token W2 context windows that
 recovered from the gold corpus like the tagger and role models.
 
 Model: logits = T_trig[hash(trigger head)] + Σ_{w in ctx} T_ctx[hash(w)]
-+ bias — a bag-of-context linear scorer trained with the mini-batch
-averaged perceptron (fixed seed/schedule, bit-reproducible artifact).
++ bias — a bag-of-context linear scorer trained with a per-sample
+averaged perceptron on the shared schedule (perceptron.EPOCHS / BATCH
+/ AVG_FROM; fixed seed, bit-reproducible artifact).
 The cue-rule provider scores 0.628 on the corpus against a 0.619
 majority baseline; the trained head separates Generic/Other cues the
 hand list misses.
@@ -22,15 +23,13 @@ import os
 import numpy as np
 
 from .model_tagger import VOCAB_SIZE, token_id
+from .perceptron import AVG_FROM, BATCH, EPOCHS
 
 REALIS_ARTIFACT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "artifacts", "realis_weights.npz",
 )
 SEED = 20260819
-EPOCHS = 24
-BATCH = 256
-AVG_FROM = 20
 
 
 def realis_features(texts: list, ctxs: list
@@ -151,36 +150,19 @@ def train(pdf) -> dict[str, np.ndarray]:
     return out
 
 
-def arrays_to_weights(arrays):
-    """train() arrays -> the (tables, labels) tuple
-    realis.trained_realis_provider consumes (same shape as
-    realis.load_realis_weights returns from the committed artifact)."""
-    tables = {k[7:]: arrays[k].astype(np.float32)
-              for k in arrays if k.startswith("realis_")
-              and k != "realis_labels"}
-    labels = [str(s) for s in arrays["realis_labels"]]
-    return tables, labels
-
-
-def save_artifact(arrays, path: str = REALIS_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
+    from .realis import parse_realis_weights
 
     spark = get_spark("train-realis", master="local[16]",
                       shuffle_partitions=16)
     pdf = build_training_frame(spark)
     print(f"training rows: {len(pdf)}")
     arrays = train(pdf)
-    path = save_artifact(arrays)
+    path = save_artifact(arrays, REALIS_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
-    tables = {k[7:]: arrays[k].astype(np.float32)
-              for k in arrays if k.startswith("realis_") and k != "realis_labels"}
-    labels = [str(s) for s in arrays["realis_labels"]]
+    tables, labels = parse_realis_weights(arrays)
     trig, widx, wsamp = realis_features(
         pdf["text"].tolist(), pdf["ctx"].tolist())
     pred = np.array(labels, dtype=object)[

@@ -7,8 +7,9 @@ The gold corpus carries every argument's role, so the capability is
 recovered the same way as the taggers: a summed-gather linear model —
 tables for the (subtype, arg_type) pair, the hashed argument HEAD word
 (last token, the reference's headentity, prepare.py:183-189), the
-hashed first word, and a bias — trained with the same mini-batch
-averaged perceptron, fixed seed/schedule, bit-reproducible artifact.
+hashed first word, and a bias — trained by the same summed-gather
+averaged perceptron (operators/perceptron.py), fixed seed/schedule,
+bit-reproducible artifact.
 
 Run:  python -m casie_spark.operators.train_roles
 writes casie_spark/artifacts/role_weights.npz and prints accuracy
@@ -23,15 +24,14 @@ import numpy as np
 
 from .. import config
 from .model_tagger import VOCAB_SIZE, token_id
+from .perceptron import gather_logits, train_head
 
 ROLE_ARTIFACT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "artifacts", "role_weights.npz",
 )
 SEED = 20260818
-EPOCHS = 24
-BATCH = 256
-AVG_FROM = 20
+ROLE_KEYS = ("pair", "head", "first")  # gather order
 
 SUBTYPES = list(config.EVENT_SUBTYPES)
 ARG_TYPES = sorted({a for v in config.PAIR.values() for a in v})
@@ -68,47 +68,6 @@ def role_features(subtypes: list, arg_types: list, texts: list
     }
 
 
-def _logits(tables: dict[str, np.ndarray], f: dict[str, np.ndarray]
-            ) -> np.ndarray:
-    out = tables["b"][None, :].astype(np.float32).repeat(len(f["pair"]), axis=0)
-    for k in ("pair", "head", "first"):
-        out += tables[k][f[k]]
-    return out
-
-
-def train_role_head(f: dict[str, np.ndarray], y: np.ndarray,
-                    n_labels: int) -> dict[str, np.ndarray]:
-    rng = np.random.default_rng(SEED)
-    shapes = {"pair": (N_PAIRS, n_labels), "head": (VOCAB_SIZE, n_labels),
-              "first": (VOCAB_SIZE, n_labels), "b": (n_labels,)}
-    tables = {k: np.zeros(s, np.float32) for k, s in shapes.items()}
-    avg = {k: np.zeros(s, np.float64) for k, s in shapes.items()}
-    n = len(y)
-    navg = 0
-    for ep in range(EPOCHS):
-        order = rng.permutation(n)
-        for s in range(0, n, BATCH):
-            idx = order[s:s + BATCH]
-            logits = tables["b"][None, :].repeat(len(idx), axis=0)
-            for k in ("pair", "head", "first"):
-                logits += tables[k][f[k][idx]]
-            pred = logits.argmax(axis=1)
-            mist = pred != y[idx]
-            if mist.any():
-                mi = idx[mist]
-                pm = pred[mist]
-                for k in ("pair", "head", "first"):
-                    np.add.at(tables[k], (f[k][mi], y[mi]), 1.0)
-                    np.add.at(tables[k], (f[k][mi], pm), -1.0)
-                np.add.at(tables["b"], y[mi], 1.0)
-                np.add.at(tables["b"], pm, -1.0)
-        if ep >= AVG_FROM:
-            for k in tables:
-                avg[k] += tables[k]
-            navg += 1
-    return {k: (avg[k] / max(navg, 1)).astype(np.float32) for k in tables}
-
-
 def build_training_frame(spark, doc_ids=None):
     """``doc_ids``: optional iterable restricting the gold arguments to
     a document subset (the held-out protocol trains on folds 1..4)."""
@@ -135,47 +94,34 @@ def train(pdf) -> dict[str, np.ndarray]:
     f = role_features(pdf["subtype"].tolist(), pdf["arg_type"].tolist(),
                       pdf["text"].tolist())
     y = pdf["role"].map(lid).to_numpy(np.int64)
-    tables = train_role_head(f, y, len(labels))
+    n = len(labels)
+    shapes = {**{k: (N_PAIRS if k == "pair" else VOCAB_SIZE, n)
+                 for k in ROLE_KEYS}, "b": (n,)}
+    tables = train_head(f, y, shapes, SEED)
     out = {f"role_{k}": v.astype(np.float16) for k, v in tables.items()}
     out["role_labels"] = np.array(labels)
     return out
 
 
-def arrays_to_weights(arrays):
-    """train() arrays -> the (tables, labels) tuple
-    roles.trained_role_provider consumes (same shape as
-    roles.load_role_weights returns from the committed artifact)."""
-    tables = {k[5:]: arrays[k].astype(np.float32)
-              for k in arrays if k.startswith("role_") and k != "role_labels"}
-    labels = [str(s) for s in arrays["role_labels"]]
-    return tables, labels
-
-
-def save_artifact(arrays, path: str = ROLE_ARTIFACT) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
-
-
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
+    from .roles import parse_role_weights
 
     spark = get_spark("train-roles", master="local[8]", shuffle_partitions=8)
     pdf = build_training_frame(spark)
     print(f"training rows: {len(pdf)}")
     arrays = train(pdf)
-    path = save_artifact(arrays)
+    path = save_artifact(arrays, ROLE_ARTIFACT)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
 
     # accuracy: trained vs the deterministic first-legal-role fallback
-    tables = {k[5:]: arrays[f"role_{k[5:]}"].astype(np.float32)
-              for k in arrays if k.startswith("role_") and k != "role_labels"}
-    labels = [str(s) for s in arrays["role_labels"]]
+    tables, labels = parse_role_weights(arrays)
     f = role_features(pdf["subtype"].tolist(), pdf["arg_type"].tolist(),
                       pdf["text"].tolist())
-    pred = np.array(labels, dtype=object)[_logits(tables, f).argmax(axis=1)]
+    pred = np.array(labels, dtype=object)[
+        gather_logits(tables, f, ROLE_KEYS).argmax(axis=1)]
     acc = (pred == pdf["role"].to_numpy()).mean()
-    from .roles import is_ambiguous_role  # noqa: F401 (doc pointer)
     amb = pdf.apply(
         lambda r: r["arg_type"] in config.AMBIGUOUS_LIST.get(r["subtype"], []),
         axis=1).to_numpy()

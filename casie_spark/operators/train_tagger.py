@@ -7,11 +7,12 @@ whose weight blobs are absent upstream (.MISSING_LARGE_BLOBS); the gold
 corpus itself IS present, so the tagging capability is recovered by
 training deterministically here.  The model is intentionally the
 simplest thing that fits the broadcast-gather inference contract
-(model_tagger.TaggerWeights): per-head logits are a sum of five
-embedding-table gathers (current token, stem, prev, next, shape) plus
-a bias — trained with mini-batch softmax-cross-entropy SGD, fixed
-seed, fixed epochs, data in (doc_id, sent_id, token_id) order, so the
-artifact is bit-reproducible.  A second, closed-form phase fits the
+(model_tagger.TaggerWeights): per-head logits are a sum of
+embedding-table gathers (token, stem, neighbors, shape, n-grams,
+affixes) plus a bias — trained by the summed-gather averaged
+perceptron (operators/perceptron.py), fixed seed, fixed epochs, data
+in (doc_id, sent_id, token_id) order, so the artifact is
+bit-reproducible.  A second, closed-form phase fits the
 CRF-analog transition scores (fit_transitions) and picks their scale
 against the real pipeline metric (select_transition_scale), enabling
 per-sentence Viterbi decoding at inference.
@@ -41,6 +42,7 @@ import os
 import numpy as np
 
 from .model_tagger import (
+    _GATHER_KEYS,
     ARTIFACT_PATH,
     BIGRAM_SIZE,
     GOLD_ARG_LABELS,
@@ -49,15 +51,26 @@ from .model_tagger import (
     TRIGRAM_SIZE,
     VOCAB_SIZE,
     feature_arrays,
+    parse_weights,
 )
+from .perceptron import gather_logits, train_head
 
 SEED = 20260817
-EPOCHS = 24
-BATCH = 256          # small batches: less mini-batch staleness, more
-                     # mistake-driven steps -> near-ceiling train fit
-AVG_FROM = 20        # average the last epochs only (early epochs are
-                     # still far from the solution and dilute the mean)
-CLASS_WEIGHT_POW = 0.15
+CLASS_WEIGHT_POW = 0.15  # inverse-class-frequency exponent of the
+                         # perceptron updates (O is ~30:1 in the stream)
+# Per-head table sets in gather order, selected by measurement (r4
+# sweeps, BASELINE.md): the affix tables (pf3/sf3/sf4) go to the
+# TRIGGER head only — type-level trigger classification transfers
+# through suffixes ("-ware", "-tion"), while the argument head is
+# span-identity and adding affixes to it measured Dice F1 0.81 -> 0.66
+# (diluted capacity); the argument head instead carries the sev table
+# (cross-fitted predicted sentence-has-trigger flags, see train()).
+TRIG_KEYS = _GATHER_KEYS + ("b",)
+ARG_KEYS = tuple(k for k in _GATHER_KEYS
+                 if k not in ("pf3", "sf3", "sf4")) + ("b", "sev")
+_ROWS = {"sh": N_SHAPES, "b1": BIGRAM_SIZE, "b2": BIGRAM_SIZE,
+         "tri": TRIGRAM_SIZE, "sev": 2}
+
 TRANS_SMOOTH = 0.5   # add-k smoothing for the label-bigram counts
 # Candidate scales for the transition term (0 = per-token argmax); the
 # trainer picks one per head against the real pipeline metric.  A
@@ -67,6 +80,12 @@ LAMBDA_GRID = (0.0, 1.0, 2.0, 2.5, 3.0, 4.0, 6.0, 8.0)
 PRECISION_FLOOR = 0.70  # select-λ objective: nugget precision must
                         # clear this (the structured decode exists to
                         # fix over-prediction), then max joint F1
+
+
+def head_shapes(keys, n_labels: int) -> dict[str, tuple]:
+    """Perceptron table shapes for one tagger head's ``keys``."""
+    return {k: (n_labels,) if k == "b" else (_ROWS.get(k, VOCAB_SIZE),
+                                             n_labels) for k in keys}
 
 
 def build_training_frame(spark):
@@ -101,68 +120,6 @@ def build_training_frame(spark):
         .orderBy("doc_id", "sent_id", "token_id")
     )
     return out.toPandas()
-
-
-def _train_head(f: dict[str, np.ndarray], y: np.ndarray, n_labels: int,
-                seed: int, drop_keys: tuple = ()) -> dict[str, np.ndarray]:
-    """Mini-batch AVERAGED PERCEPTRON over the summed-gather linear
-    model: on each mistake, +w at the gold label row and -w at the
-    predicted one, per feature table (w = inverse-class-frequency^0.15,
-    the A1 class-frequency -> class-weights computation, reference
-    role_phrase.py:270-281 — so the ~30:1 O class cannot drown the
-    trigger/argument classes).
-    Mistake-driven updates reach high accuracy on the near-separable
-    memorization objective where plain SGD under-trains; per-epoch
-    weight averaging gives the usual stability.  Deterministic: fixed
-    seed, fixed epoch/batch schedule."""
-    rng = np.random.default_rng(seed)
-    shapes = {
-        "t0": (VOCAB_SIZE, n_labels), "s0": (VOCAB_SIZE, n_labels),
-        "tm1": (VOCAB_SIZE, n_labels), "tp1": (VOCAB_SIZE, n_labels),
-        "sh": (N_SHAPES, n_labels),
-        "b1": (BIGRAM_SIZE, n_labels), "b2": (BIGRAM_SIZE, n_labels),
-        "tri": (TRIGRAM_SIZE, n_labels),
-        "pf3": (VOCAB_SIZE, n_labels), "sf3": (VOCAB_SIZE, n_labels),
-        "sf4": (VOCAB_SIZE, n_labels), "b": (n_labels,),
-    }
-    # sentence-has-trigger flag (cross-fitted PREDICTED flags — the
-    # caller injects f["sev"]; only the arg head trains with it)
-    if "sev" in f:
-        shapes["sev"] = (2, n_labels)
-    for k in drop_keys:
-        shapes.pop(k, None)
-    tables = {k: np.zeros(s, np.float32) for k, s in shapes.items()}
-    avg = {k: np.zeros(s, np.float64) for k, s in shapes.items()}
-    n = len(y)
-    counts = np.bincount(y, minlength=n_labels).astype(np.float64)
-    cw = (n / np.maximum(counts, 1.0)) ** CLASS_WEIGHT_POW
-    cw = (cw / cw[0]).astype(np.float32)  # O has weight 1
-
-    gather = tuple(k for k in shapes if k != "b")
-    navg = 0
-    for ep in range(EPOCHS):
-        order = rng.permutation(n)
-        for s in range(0, n, BATCH):
-            idx = order[s:s + BATCH]
-            logits = tables["b"][None, :].repeat(len(idx), axis=0)
-            for k in gather:
-                logits += tables[k][f[k][idx]]
-            pred = logits.argmax(axis=1)
-            mist = pred != y[idx]
-            if mist.any():
-                mi = idx[mist]
-                pm = pred[mist]
-                wts = cw[y[mi]]
-                for k in gather:
-                    np.add.at(tables[k], (f[k][mi], y[mi]), wts)
-                    np.add.at(tables[k], (f[k][mi], pm), -wts)
-                np.add.at(tables["b"], y[mi], wts)
-                np.add.at(tables["b"], pm, -wts)
-        if ep >= AVG_FROM:
-            for k in tables:
-                avg[k] += tables[k]
-            navg += 1
-    return {k: (avg[k] / max(navg, 1)).astype(np.float32) for k in tables}
 
 
 def fit_transitions(y: np.ndarray, starts: np.ndarray, n_labels: int,
@@ -217,11 +174,7 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
     the cascade it will actually see).  Doc-level md5 subfolds; each
     fold is decoded by a head + fixed-λ transitions fit on the other
     folds.  Deterministic.  Returns int64 0/1 per row."""
-    from .model_tagger import (
-        _ctx_logits,
-        sentence_flag_ids,
-        viterbi_segments,
-    )
+    from .model_tagger import sentence_flag_ids, viterbi_segments
 
     folds = pdf["doc_id"].map(lambda d: doc_fold(d, n_folds)).to_numpy()
     n = len(pdf)
@@ -236,8 +189,9 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
         ftr = {kk: v[tr] for kk, v in f.items()}
         # same recipe as the deployment trigger head, fit on the
         # other folds only
-        head = _train_head(ftr, yt[tr], len(TRIGGER_LABELS),
-                           SEED + 100 + k)
+        head = train_head(ftr, yt[tr],
+                          head_shapes(TRIG_KEYS, len(TRIGGER_LABELS)),
+                          SEED + 100 + k, CLASS_WEIGHT_POW)
         tables = {kk: v.astype(np.float32) for kk, v in head.items()}
         # folds split whole docs, so both subsets keep sentence
         # contiguity; a row is a sentence start in the subset iff it
@@ -247,7 +201,8 @@ def _cross_fit_flags(pdf, f, yt, n_folds: int = 5,
         sc = _scaled(fit_transitions(yt[tr], starts_tr,
                                      len(TRIGGER_LABELS)), lam)
         fte = {kk: v[te] for kk, v in f.items()}
-        path = viterbi_segments(_ctx_logits(tables, fte), starts_te,
+        path = viterbi_segments(gather_logits(tables, fte, _GATHER_KEYS),
+                                starts_te,
                                 sc["trans"], sc["start"])
         flags[te] = sentence_flag_ids(path, starts_te, len(path))
     return flags
@@ -272,24 +227,17 @@ def train(pdf, sev: bool = True) -> dict[str, np.ndarray]:
     yt = pdf["trig_label"].map(lambda v: trig_idx.get(v, 0)).to_numpy(np.int64)
     ya = pdf["arg_label"].map(lambda v: arg_idx.get(v, 0)).to_numpy(np.int64)
 
-    # Per-head feature sets, selected by measurement (r4 sweeps,
-    # BASELINE.md):
-    # - affix tables go to the TRIGGER head only: type-level trigger
-    #   classification transfers through suffixes ("-ware", "-tion"),
-    #   while the argument head is span-identity — adding affixes to
-    #   it measured Dice F1 0.81 -> 0.66 (diluted averaged-perceptron
-    #   capacity);
-    # - the sev table (cross-fitted predicted sentence flags) is the
-    #   r4 keeper — see the docstring numbers.
-    trig = _train_head(f, yt, len(TRIGGER_LABELS), SEED)
+    trig = train_head(f, yt, head_shapes(TRIG_KEYS, len(TRIGGER_LABELS)),
+                      SEED, CLASS_WEIGHT_POW)
     fa = f
+    arg_keys = ARG_KEYS if sev else ARG_KEYS[:-1]
     if sev:
         fa = dict(f)
         # the cross-fit trigger heads mirror the deployment trigger
         # recipe so the arg head trains against the cascade it will see
         fa["sev"] = _cross_fit_flags(pdf, f, yt)
-    arg = _train_head(fa, ya, len(GOLD_ARG_LABELS), SEED + 1,
-                      drop_keys=("pf3", "sf3", "sf4"))
+    arg = train_head(fa, ya, head_shapes(arg_keys, len(GOLD_ARG_LABELS)),
+                     SEED + 1, CLASS_WEIGHT_POW)
 
     out: dict[str, np.ndarray] = {}
     for k, v in trig.items():
@@ -315,29 +263,10 @@ def raw_transitions(pdf) -> dict[str, tuple[np.ndarray, np.ndarray]]:
     }
 
 
-def weights_from_arrays(arrays: dict[str, np.ndarray],
-                        trig_trans=None, arg_trans=None):
-    """In-memory TaggerWeights from artifact arrays (mirrors
-    model_tagger.load_weights without the file round-trip)."""
-    from .model_tagger import _CTX_KEYS, TaggerWeights
-
-    return TaggerWeights(
-        w_trigger=np.zeros((VOCAB_SIZE, len(TRIGGER_LABELS)), np.float32),
-        w_arg=np.zeros((VOCAB_SIZE, len(GOLD_ARG_LABELS)), np.float32),
-        trigger_labels=[str(s) for s in arrays["trigger_labels"]],
-        arg_labels=[str(s) for s in arrays["arg_labels"]],
-        trig_ctx={k: arrays[f"trig_{k}"].astype(np.float32)
-                  for k in _CTX_KEYS if f"trig_{k}" in arrays},
-        arg_ctx={k: arrays[f"arg_{k}"].astype(np.float32)
-                 for k in _CTX_KEYS if f"arg_{k}" in arrays},
-        trig_trans=trig_trans,
-        arg_trans=arg_trans,
-    )
-
-
-def select_transition_scale(spark, arrays, raw) -> dict[str, float]:
+def select_transition_scale(spark, arrays, raw, doc_ids=None) -> float:
     """Deterministic JOINT λ choice: run the REAL pipeline metric
-    (evaluate, mode=model) once per grid value with λ·(trans, start)
+    (evaluate, mode=model, over ``doc_ids`` — the held-out protocol
+    passes its train docs) once per grid value with λ·(trans, start)
     wired into both heads, then pick ONE λ shared by both.
 
     Per-head selection was tried and rejected: the heads are coupled
@@ -354,25 +283,20 @@ def select_transition_scale(spark, arrays, raw) -> dict[str, float]:
     bit-reproducible artifact."""
     results = []
     for lam in LAMBDA_GRID:
-        w = weights_from_arrays(
-            arrays,
-            trig_trans=_scaled(raw["trig"], lam),
-            arg_trans=_scaled(raw["arg"], lam),
-        )
-        m = evaluate(spark, "model", tagger_weights=w)
+        w = parse_weights(with_transitions(arrays, raw, lam))
+        m = evaluate(spark, "model", tagger_weights=w, doc_ids=doc_ids)
         results.append((lam, m))
         print(f"  λ={lam:g}: nugget P {m['nugget']['precision']:.3f} "
               f"R {m['nugget']['recall']:.3f} F1 {m['nugget']['f1']:.3f} | "
               f"arg P {m['argument']['precision']:.3f} "
               f"R {m['argument']['recall']:.3f} F1 {m['argument']['f1']:.3f}")
 
-    lam = max(
+    return max(
         results,
         key=lambda r: (r[1]["nugget"]["precision"] >= PRECISION_FLOOR,
                        r[1]["nugget"]["f1"] + r[1]["argument"]["f1"],
                        -r[0]),
     )[0]
-    return {"trig": lam, "arg": lam}
 
 
 def _scaled(raw_pair, lam: float):
@@ -383,11 +307,16 @@ def _scaled(raw_pair, lam: float):
             "start": (start * lam).astype(np.float32)}
 
 
-def save_artifact(arrays: dict[str, np.ndarray],
-                  path: str = ARTIFACT_PATH) -> str:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    np.savez_compressed(path, **arrays)
-    return path
+def with_transitions(arrays, raw, lam: float) -> dict[str, np.ndarray]:
+    """Artifact arrays plus both heads' λ-scaled Viterbi scores
+    (``{head}_trans`` / ``{head}_start``; none at λ = 0)."""
+    out = dict(arrays)
+    for head in ("trig", "arg"):
+        sc = _scaled(raw[head], lam)
+        if sc is not None:
+            out[f"{head}_trans"], out[f"{head}_start"] = \
+                sc["trans"], sc["start"]
+    return out
 
 
 def evaluate(spark, mode: str = "model", tagger_weights=None,
@@ -486,25 +415,10 @@ def holdout_main(out_path: str | None = None) -> None:  # pragma: no cover - CLI
     raw = raw_transitions(train_pdf)
 
     print("selecting λ on the train split:")
-    results = []
-    for lam in LAMBDA_GRID:
-        w = weights_from_arrays(arrays,
-                                trig_trans=_scaled(raw["trig"], lam),
-                                arg_trans=_scaled(raw["arg"], lam))
-        m = evaluate(spark, "model", tagger_weights=w, doc_ids=train_docs)
-        results.append((lam, m))
-        print(f"  λ={lam:g}: nugget P {m['nugget']['precision']:.3f} "
-              f"F1 {m['nugget']['f1']:.3f} | "
-              f"arg F1 {m['argument']['f1']:.3f}")
-    lam = max(results,
-              key=lambda r: (r[1]["nugget"]["precision"] >= PRECISION_FLOOR,
-                             r[1]["nugget"]["f1"] + r[1]["argument"]["f1"],
-                             -r[0]))[0]
+    lam = select_transition_scale(spark, arrays, raw, doc_ids=train_docs)
     print(f"selected λ (train-only): {lam:g}")
 
-    w = weights_from_arrays(arrays,
-                            trig_trans=_scaled(raw["trig"], lam),
-                            arg_trans=_scaled(raw["arg"], lam))
+    w = parse_weights(with_transitions(arrays, raw, lam))
     mention = evaluate(spark, "model", tagger_weights=w, doc_ids=test_docs)
     mention_train = evaluate(spark, "model", tagger_weights=w,
                              doc_ids=train_docs)
@@ -513,21 +427,25 @@ def holdout_main(out_path: str | None = None) -> None:  # pragma: no cover - CLI
     # link ranker): each trains on the SAME train docs, so nothing the
     # held-out triple number touches has seen fold 0
     from . import train_begin, train_linker, train_realis, train_roles
+    from .begin_repair import parse_begin_weights
+    from .linker import parse_linker_weights
+    from .realis import parse_realis_weights
+    from .roles import parse_role_weights
 
-    begin_w = train_begin.arrays_to_weights(
+    begin_w = parse_begin_weights(
         train_begin.train_arrays(spark, doc_ids=train_docs,
                                  tagger_weights=w))
-    role_w = train_roles.arrays_to_weights(
+    role_w = parse_role_weights(
         train_roles.train(train_roles.build_training_frame(
             spark, doc_ids=train_docs)))
-    realis_w = train_realis.arrays_to_weights(
+    realis_w = parse_realis_weights(
         train_realis.train(train_realis.build_training_frame(
             spark, doc_ids=train_docs)))
     link_pools = train_linker._pool_arrays(
         train_linker.build_training_pools(
             spark, doc_ids=train_docs, tagger_weights=w,
             begin_weights=begin_w))
-    link_w = train_linker.arrays_to_weights(train_linker.train(link_pools))
+    link_w = parse_linker_weights(train_linker.train(link_pools))
     mw = {"begin": begin_w, "role": role_w, "realis": realis_w,
           "linker": link_w}
 
@@ -565,6 +483,7 @@ def holdout_main(out_path: str | None = None) -> None:  # pragma: no cover - CLI
 
 
 def main() -> None:  # pragma: no cover - CLI entry
+    from ..deploy import save_artifact
     from ..session import get_spark
 
     spark = get_spark("train-tagger", master="local[16]",
@@ -575,18 +494,9 @@ def main() -> None:  # pragma: no cover - CLI entry
     raw = raw_transitions(pdf)
     print("selecting transition scale:")
     lam = select_transition_scale(spark, arrays, raw)
-    print(f"selected λ: {lam}")
-    for head in ("trig", "arg"):
-        sc = _scaled(raw[head], lam[head])
-        if sc is not None:
-            arrays[f"{head}_trans"] = sc["trans"]
-            arrays[f"{head}_start"] = sc["start"]
-    path = save_artifact(arrays)
+    print(f"selected λ: {lam:g}")
+    path = save_artifact(with_transitions(arrays, raw, lam), ARTIFACT_PATH)
     print(f"wrote {path} ({os.path.getsize(path) / 1e6:.1f} MB)")
-    # force a reload so evaluate() sees the new artifact
-    from . import model_tagger
-
-    model_tagger.invalidate_weight_cache()
     print("model:", evaluate(spark, "model"))
     print("rules:", evaluate(spark, "rules"))
     spark.stop()

@@ -1319,7 +1319,7 @@ def q56_negative_samples(spark, sf_dir):
     """Filtered tail-corruption negatives over the q45 graph
     (graph.negative_samples — the Bordes et al. 2013 corrupted-triple
     training-pair generator, hash-deterministic so shards regenerate
-    identically on resume): dense entity index, hash16-indexed tail
+    identically on resume): dense entity index, md5-indexed tail
     replacement, anti-join filter against the positive set.  The
     oracle replays the identical index, hash and filter in DuckDB."""
     from .operators.graph import negative_samples
@@ -2486,11 +2486,10 @@ def _triangle_oracle() -> str:
 
 
 def _negative_samples_oracle(n_neg: int = 3) -> str:
-    """q56: identical edge synthesis, dense entity index, hash16 tail
-    pick, true-tail and positive-set filters."""
-    from .functions.textstats import hash16_sql
-
-    h = hash16_sql("c.src || '|' || c.dst || '|' || c.i::varchar")
+    """q56: identical edge synthesis, dense entity index, 60-bit md5
+    tail pick, true-tail and positive-set filters."""
+    h = ("('0x' || substring(md5(c.src || '|' || c.dst || '|' || "
+         "c.i::varchar), 1, 15))::bigint")
     slots = ", ".join(str(i) for i in range(n_neg))
     return ("WITH " + _GRAPH_EDGES_CTE.strip() + f"""
         , pos AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),

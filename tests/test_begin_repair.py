@@ -247,7 +247,7 @@ def test_edge_audit_recorded_and_floored():
 def test_jvm_scorer_parity_with_python_logits(spark):
     """The deployed shift scorer (JVM crc32/shape feature ids + one
     int-only pandas_udf of numpy gathers + argmax) is bit-identical to
-    the Python featurizer + float64 _logits + np.argmax on the
+    the Python featurizer + float64 gather_logits + np.argmax on the
     COMMITTED artifact — including null neighbors, unicode, and
     tie-prone near-zero rows."""
     import numpy as np
@@ -257,7 +257,7 @@ def test_jvm_scorer_parity_with_python_logits(spark):
         _with_shifts_jvm,
         load_begin_weights,
     )
-    from casie_spark.operators.train_begin import _logits, begin_features
+    from casie_spark.operators.perceptron import gather_logits
 
     w = load_begin_weights()
     if w is None:
@@ -294,10 +294,12 @@ def test_jvm_scorer_parity_with_python_logits(spark):
     for r in got:
         fb = begin_features([r["arg_type"]], [r["_tok"]], [r["_p1"]],
                             [r["_p2"]], [r["_nx"]])
-        exp_b = (-2, -1, 0, 1)[int(_logits(w["arg"], fb).argmax(axis=1)[0])]
+        exp_b = (-2, -1, 0, 1)[int(gather_logits(
+            w["arg"], fb, _KEYS, np.float64).argmax(axis=1)[0])]
         fe = begin_features([r["arg_type"]], [r["_ltok"]], [r["_ln1"]],
                             [r["_ln2"]], [r["_lp1"]])
-        exp_e = END_SHIFTS[int(_logits(w["arg_end"], fe).argmax(axis=1)[0])]
+        exp_e = END_SHIFTS[int(gather_logits(
+            w["arg_end"], fe, _KEYS, np.float64).argmax(axis=1)[0])]
         assert r["_shb"] == exp_b, r
         assert r["_she"] == exp_e, r
 

@@ -148,3 +148,84 @@ def test_spark_submit_pyfiles_end_to_end(bundle, tmp_path):
     lines = [ln for ln in r.stdout.splitlines() if ln.startswith("TRIPLES=")]
     assert lines, r.stdout[-2000:]
     assert int(lines[0].split("=", 1)[1]) > 0
+
+
+def _role_arrays(b):
+    import numpy as np
+
+    return {"role_pair": np.zeros((3, 1), np.float16),
+            "role_head": np.zeros((3, 1), np.float16),
+            "role_first": np.zeros((3, 1), np.float16),
+            "role_b": np.array([b], np.float16),
+            "role_labels": np.array(["Victim"])}
+
+
+def _realis_arrays(b):
+    import numpy as np
+
+    return {"realis_trig": np.zeros((3, 1), np.float16),
+            "realis_ctx": np.zeros((3, 1), np.float16),
+            "realis_b": np.array([b], np.float16),
+            "realis_labels": np.array(["Actual"])}
+
+
+def _coref_arrays(b):
+    import numpy as np
+
+    from casie_spark.operators.coref import COREF_PAIR_FEATURES
+
+    n = len(COREF_PAIR_FEATURES)
+    return {"w": np.ones(n), "b": np.float64(b), "mu": np.zeros(n),
+            "sd": np.ones(n), "thr": np.float64(0.5)}
+
+
+@pytest.mark.parametrize("head", ["roles", "realis", "coref"])
+def test_resave_is_not_masked_by_loader_cache(head, tmp_path):
+    """Saving a retrained artifact over an already-loaded path must
+    reach the next load: the loader cache may not keep serving the
+    tables it parsed before the save."""
+    from casie_spark.deploy import save_artifact
+    from casie_spark.operators.coref import load_coref_weights
+    from casie_spark.operators.realis import load_realis_weights
+    from casie_spark.operators.roles import load_role_weights
+
+    arrays, load, bias = {
+        "roles": (_role_arrays, load_role_weights, lambda w: w[0]["b"][0]),
+        "realis": (_realis_arrays, load_realis_weights,
+                   lambda w: w[0]["b"][0]),
+        "coref": (_coref_arrays, load_coref_weights, lambda w: w[1]),
+    }[head]
+    path = str(tmp_path / f"{head}.npz")
+    save_artifact(arrays(1.0), path)
+    assert bias(load(path)) == 1.0
+    save_artifact(arrays(2.0), path)
+    assert bias(load(path)) == 2.0
+
+
+def test_artifact_inventory_matches_loaders():
+    """Every committed .npz is the default artifact of one of the six
+    loaders, and every loader finds its trained artifact — an orphaned
+    artifact (one no loader reads) or a missing one fails here."""
+    import glob
+
+    from casie_spark.deploy import _ARTIFACTS_DIR
+    from casie_spark.operators.begin_repair import (
+        BEGIN_ARTIFACT, load_begin_weights)
+    from casie_spark.operators.coref import COREF_ARTIFACT, load_coref_weights
+    from casie_spark.operators.linker import (
+        LINKER_ARTIFACT, load_linker_weights)
+    from casie_spark.operators.model_tagger import ARTIFACT_PATH, load_weights
+    from casie_spark.operators.realis import load_realis_weights
+    from casie_spark.operators.roles import load_role_weights
+    from casie_spark.operators.train_realis import REALIS_ARTIFACT
+    from casie_spark.operators.train_roles import ROLE_ARTIFACT
+
+    loaders = {ARTIFACT_PATH: load_weights, BEGIN_ARTIFACT: load_begin_weights,
+               ROLE_ARTIFACT: load_role_weights,
+               REALIS_ARTIFACT: load_realis_weights,
+               LINKER_ARTIFACT: load_linker_weights,
+               COREF_ARTIFACT: load_coref_weights}
+    assert set(glob.glob(os.path.join(_ARTIFACTS_DIR, "*.npz"))) == set(loaders)
+    for path, load in loaders.items():
+        assert load() is not None, path
+    assert load_weights().trig_ctx is not None  # not the distilled fallback

@@ -175,6 +175,26 @@ def test_negative_samples_invariants(spark):
     assert max(per_edge.values()) <= 3
 
 
+def test_negative_samples_reach_entities_past_16_bits(spark):
+    """With more than 65,536 entities the sampler must be able to pick
+    every one of them: with 70,000 entities, some negatives land on an
+    entity whose dense index is >= 65,536 (a 16-bit hash mod |E| never
+    does)."""
+    from pyspark.sql import functions as F
+
+    from casie_spark.operators.graph import negative_samples
+
+    half = 35_000
+    # entities 0..69,999 as zero-padded strings, so the dense index
+    # (row_number over the sorted entity) equals the number
+    e = spark.range(half).select(
+        F.lpad(F.col("id").cast("string"), 6, "0").alias("src"),
+        F.lpad((F.col("id") + half).cast("string"), 6, "0").alias("dst"))
+    neg = negative_samples(e, n_neg=1)
+    hi = neg.filter(F.col("neg_dst").cast("int") >= 65_536).count()
+    assert hi > 0
+
+
 def _ref_lpa(pairs, iters):
     adj = {}
     for s, d in pairs:

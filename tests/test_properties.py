@@ -219,3 +219,145 @@ def test_feature_arrays_unique_scatter_parity(toks):
     for k, v in ref.items():
         assert list(f[k]) == v, k
 
+
+
+# --- averaged-perceptron heads: golden bit-identity ------------------------
+#
+# The hashes below were recorded from the per-head trainers and loaders
+# that operators/perceptron.py and deploy.load_artifact replaced: the
+# same seeded synthetic (f, y) trained by train_begin.train_begin_head,
+# train_roles.train_role_head and train_tagger._train_head (trigger head
+# with class weights; argument head with "sev" and without the affix
+# tables), and every committed artifact as parsed by the six loaders.
+# The annotated training corpus is not part of the repository, so these
+# pins are what shows that retraining and serving are unchanged.
+
+def _synth_head_data(sizes, n_labels, seed, n=3000):
+    """Seeded (f, y): ids from a small vocabulary (rows repeat, so the
+    tables get shared updates), mostly class 0, labels a function of
+    the first two features plus 5% noise."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    f = {k: rng.integers(0, min(m, 400), n).astype(np.int64)
+         for k, m in sizes.items()}
+    k0, k1 = list(sizes)[:2]
+    y = np.where(rng.random(n) < 0.6, 0,
+                 1 + (f[k0] * 7 + f[k1]) % (n_labels - 1))
+    noise = rng.random(n) < 0.05
+    y[noise] = rng.integers(0, n_labels, int(noise.sum()))
+    return f, y.astype(np.int64)
+
+
+def _tables_sha256(tables):
+    """Digest of key order, dtype, shape and bytes of every table."""
+    import hashlib
+
+    import numpy as np
+
+    h = hashlib.sha256()
+    for k, v in tables.items():
+        h.update(f"{k}|{v.dtype.str}|{v.shape}|".encode())
+        h.update(np.ascontiguousarray(v).tobytes())
+    return h.hexdigest()
+
+
+def _parsed_sha256(obj):
+    """Digest of a loader's parsed weights (dataclass / dict / tuple /
+    ndarray / scalar tree; dict keys sorted)."""
+    import dataclasses
+    import hashlib
+
+    import numpy as np
+
+    h = hashlib.sha256()
+
+    def feed(o):
+        if dataclasses.is_dataclass(o):
+            for fld in dataclasses.fields(o):
+                h.update(fld.name.encode())
+                feed(getattr(o, fld.name))
+        elif isinstance(o, dict):
+            for k in sorted(o):
+                h.update(f"<{k}>".encode())
+                feed(o[k])
+        elif isinstance(o, (list, tuple)):
+            h.update(b"[")
+            for v in o:
+                feed(v)
+            h.update(b"]")
+        elif isinstance(o, np.ndarray):
+            h.update(f"{o.dtype.str}|{o.shape}|".encode())
+            h.update(np.ascontiguousarray(o).tobytes())
+        else:
+            h.update(repr(o).encode())
+
+    feed(obj)
+    return h.hexdigest()
+
+
+_HEAD_GOLDEN = {
+    "begin": "67254d5141eb2139462414b9793bd420b5bb762dc8d2fb8c210ac496ceee9a2f",
+    "roles": "ba102f215c3d308786f7a1e12db9bafff99791c7e9b44c1e961ca4e60ce28491",
+    "tagger_trigger": "9e8d5031e8c44db2325b98032c55bd653226ca1cd7c11d3044e0ae69e21194f8",
+    "tagger_argument": "ca3928759848cf1a076be7cdd85c7af91e32212d3a2297c5622d18d4c7bb4e38",
+}
+
+
+def test_perceptron_heads_golden():
+    from casie_spark.operators import train_begin, train_roles, train_tagger
+    from casie_spark.operators.model_tagger import (
+        BIGRAM_SIZE, GOLD_ARG_LABELS, N_SHAPES, TRIGGER_LABELS,
+        TRIGRAM_SIZE, VOCAB_SIZE)
+    from casie_spark.operators.perceptron import train_head
+
+    v = VOCAB_SIZE
+    tag_sizes = {"t0": v, "s0": v, "tm1": v, "tp1": v, "sh": N_SHAPES,
+                 "b1": BIGRAM_SIZE, "b2": BIGRAM_SIZE, "tri": TRIGRAM_SIZE,
+                 "pf3": v, "sf3": v, "sf4": v}
+    got = {}
+    f, y = _synth_head_data(
+        {k: (N_SHAPES if k == "sh_p1" else v) for k in train_begin._KEYS},
+        4, 1)
+    got["begin"] = _tables_sha256(
+        train_head(f, y, train_begin.SHAPES, train_begin.SEED))
+    f, y = _synth_head_data(
+        {"pair": train_roles.N_PAIRS, "head": v, "first": v}, 6, 2)
+    got["roles"] = _tables_sha256(train_head(
+        f, y, {"pair": (train_roles.N_PAIRS, 6), "head": (v, 6),
+               "first": (v, 6), "b": (6,)}, train_roles.SEED))
+    nt, na = len(TRIGGER_LABELS), len(GOLD_ARG_LABELS)
+    f, y = _synth_head_data(tag_sizes, nt, 3)
+    got["tagger_trigger"] = _tables_sha256(train_head(
+        f, y, train_tagger.head_shapes(train_tagger.TRIG_KEYS, nt),
+        train_tagger.SEED, train_tagger.CLASS_WEIGHT_POW))
+    f, y = _synth_head_data({**tag_sizes, "sev": 2}, na, 4)
+    got["tagger_argument"] = _tables_sha256(train_head(
+        f, y, train_tagger.head_shapes(train_tagger.ARG_KEYS, na),
+        train_tagger.SEED + 1, train_tagger.CLASS_WEIGHT_POW))
+    assert got == _HEAD_GOLDEN
+
+
+_ARTIFACT_GOLDEN = {
+    "tagger": "951aa95aec0e20d570405b9a17d596a2340af772e8c5da64d3d22964aa45c870",
+    "begin": "ecd5dd8d4b5935888304585a2465c0970e056c8b7967cc7f4ee07219a193581a",
+    "role": "4be458190a93dc1e56566fe7df013dbe24d72745abc354a68df00d30307c646e",
+    "realis": "bee1588b21b14e840da8541696d96853462e0df1bbeb7cd4a21c606dcd8db4a0",
+    "linker": "d442471484efd91054fd347480c28b40c4133a4e83b030b4dbf8770bd5207e17",
+    "coref": "a29af8862d43436271cf794ebfda12f13f19748cb66cd0c68add53814813a2c6",
+}
+
+
+def test_committed_artifacts_parse_golden():
+    from casie_spark.operators.begin_repair import load_begin_weights
+    from casie_spark.operators.coref import load_coref_weights
+    from casie_spark.operators.linker import load_linker_weights
+    from casie_spark.operators.model_tagger import load_weights
+    from casie_spark.operators.realis import load_realis_weights
+    from casie_spark.operators.roles import load_role_weights
+
+    got = {name: _parsed_sha256(fn()) for name, fn in (
+        ("tagger", load_weights), ("begin", load_begin_weights),
+        ("role", load_role_weights), ("realis", load_realis_weights),
+        ("linker", load_linker_weights), ("coref", load_coref_weights))}
+    assert got == _ARTIFACT_GOLDEN

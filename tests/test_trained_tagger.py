@@ -35,7 +35,7 @@ def test_artifact_present_and_well_formed():
     assert w.trigger_labels[0] == "O" and w.arg_labels[0] == "O"
     assert len(w.arg_labels) == 22  # full gold argument inventory
     # every committed per-head table is one inference actually reads:
-    # _ctx_logits iterates _GATHER_KEYS only ("sev" is applied by
+    # TaggerWeights gathers _GATHER_KEYS only ("sev" is applied by
     # decode), so a table under any other key would ship and be
     # silently ignored; read the raw file — load_weights filters
     consumed = set(_GATHER_KEYS) | {"b", "sev"}
