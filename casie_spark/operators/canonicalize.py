@@ -13,21 +13,25 @@ Three layers:
    — at 10^12 pages live calls are impossible, so the dictionary is
    pre-resolved and broadcast (SURVEY.md section 2.1 S8).
 2. ``minhash_edges`` — surface forms that miss the dictionary are
-   clustered: char-3-shingles -> K xxhash64 min-signatures -> banded
-   buckets -> candidate pairs -> exact Jaccard verification.  All
-   JVM-side (transform/aggregate/xxhash64 on arrays).
+   clustered: char-3-shingles -> K xxhash64 min-signatures -> one band
+   key per band -> candidate pairs from the repo's one banding
+   self-join (``dedup.minhash_candidate_pairs``) -> exact Jaccard
+   verification.  All JVM-side (transform/aggregate/xxhash64 on
+   arrays).
 3. ``connected_components`` — iterative min-label propagation over the
    candidate edges (no GraphFrames dependency); converges in
    O(component diameter) joins, each keyed on the label column with
-   AQE handling skew.
+   AQE handling skew.  One truncate barrier per iteration, which also
+   carries the convergence count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..util import materialize, truncate
+from .dedup import minhash_candidate_pairs
 
 _VENDORS = {
     "adobe": "vendor:adobe", "microsoft": "vendor:microsoft",
@@ -135,6 +139,17 @@ def minhash_edges(surfaces: DataFrame, id_col: str = "surface_id",
                   bands: int = 8, threshold: float = 0.5) -> DataFrame:
     """Candidate near-identical surface pairs -> verified Jaccard edges.
 
+    Each surface gets ``n_hashes`` xxhash64 min-signatures over its
+    char-3-shingles; band ``b`` is keyed by ``F.hash`` over its
+    ``n_hashes // bands`` rows (column ``minh{b}``).  Candidate pairs
+    come from :func:`dedup.minhash_candidate_pairs`, the one banding
+    self-join: bands unpivoted into (band, bucket) rows, over-full
+    buckets (> 1,000 members: a boilerplate surface with k² pairs and
+    no near-dup signal) dropped, one self-join on (band, bucket).  A
+    pair shares a bucket only within one band, so this finds exactly
+    the pairs a per-band join loop would.  Each pair's shingle arrays
+    are joined back for the exact Jaccard check.
+
     Returns (src, dst) with src < dst.
     """
     rows_per_band = n_hashes // bands
@@ -148,48 +163,34 @@ def minhash_edges(surfaces: DataFrame, id_col: str = "surface_id",
             F.transform("sh", lambda s: F.xxhash64(F.concat(F.lit(str(seed)), s)))
         )
 
-    sig = sh.select(
-        "sid", "sh", *[minhash(k).alias(f"h{k}") for k in range(n_hashes)]
-    )
-    band_cols = [
-        F.hash(*[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    # sig is referenced twice per band below; materialize eagerly or the
-    # whole upstream lineage re-executes 2*bands times
-    sig = materialize(sig.select("sid", "sh", *band_cols))
-
-    pairs = None
-    max_bucket = 1000  # LSH skew guard: an over-full band bucket means a
-    # boilerplate surface shared by k docs — k² pairs with no near-dup
-    # signal; drop it before the self-join (same rule as
-    # dedup.minhash_candidate_pairs).  The size window rides the join's
-    # own hashpartitioning(bk) exchange.
-    for b in range(bands):
-        banded = sig.select("sid", "sh", F.col(f"band{b}").alias("bk"))
-        bw = Window.partitionBy("bk")
-        banded = (
-            banded.withColumn("_bsz", F.count("*").over(bw))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-        left = banded.select(F.col("sid").alias("src"), F.col("sh").alias("sh1"),
-                             "bk")
-        right = banded.select(F.col("sid").alias("dst"), F.col("sh").alias("sh2"),
-                              "bk")
-        p = left.join(right, "bk").filter(F.col("src") < F.col("dst")).drop("bk")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.dropDuplicates(["src", "dst"])
-
+    h = [minhash(k) for k in range(n_hashes)]
+    # sig feeds the banding self-join and both shingle join-backs;
+    # materialize it or the shingle + signature subtree runs per reference
+    sig = materialize(sh.select(
+        "sid", "sh",
+        *[F.hash(*h[b * rows_per_band:(b + 1) * rows_per_band]).alias(f"minh{b}")
+          for b in range(bands)],
+    ))
+    pairs = minhash_candidate_pairs(sig, bands, id_col="sid", max_bucket=1000)
+    left = sig.select(F.col("sid").alias("doc_a"), F.col("sh").alias("sh1"))
+    right = sig.select(F.col("sid").alias("doc_b"), F.col("sh").alias("sh2"))
     jac = F.size(F.array_intersect("sh1", "sh2")) / F.size(F.array_union("sh1", "sh2"))
-    return pairs.filter(jac >= threshold).select("src", "dst")
+    return (
+        pairs.join(left, "doc_a").join(right, "doc_b")
+        .filter(jac >= threshold)
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    )
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame,
                          id_col: str = "sid", max_iter: int = 15) -> DataFrame:
     """Min-label propagation: (id, component) with component = min id
-    reachable.  Each iteration is two shuffles; terminates early when
-    no label changes."""
+    reachable.  Each iteration is two shuffles and one truncate
+    barrier; the number of changed labels is an ``Observation`` on the
+    truncated frame, so the convergence test runs no job of its own.
+    Stops when no label changes or after ``max_iter`` iterations.
+    Empty vertices give an empty result; a vertex with no edge is its
+    own component."""
     labels = materialize(
         vertices.select(F.col(id_col).alias("id")).withColumn("label", F.col("id"))
     )
@@ -214,11 +215,13 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
             )
         )
         # truncate, not materialize: each iteration's plan embeds the
-        # previous one — persist alone lets the tree grow exponentially
-        new_labels = truncate(new_labels)
-        changed = new_labels.filter(F.coalesce("_chg", F.lit(False))).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
+        # previous one — persist alone lets the tree grow exponentially.
+        # The changed-label count rides the truncate's own job
+        obs = Observation()
+        labels = truncate(
+            new_labels.observe(obs, F.count_if("_chg").alias("changed"))
+        ).drop("_chg")
+        if obs.get["changed"] == 0:
             break
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("component"))
 

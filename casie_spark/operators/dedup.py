@@ -94,9 +94,12 @@ def minhash_signature(shingles: DataFrame, n_hashes: int = 4,
 def minhash_candidate_pairs(sig: DataFrame, n_hashes: int = 4,
                             id_col: str = "doc_id",
                             max_bucket: int | None = 1000) -> DataFrame:
-    """LSH banding with band size 1: docs sharing any minhash column
-    become a candidate pair (doc_a < doc_b, distinct).  Self-join runs
-    per-bucket, so cost is Σ bucket² — linear for near-dup corpora.
+    """LSH banding: docs sharing any band key ``minh0`` ..
+    ``minh{n_hashes-1}`` become a candidate pair (doc_a < doc_b,
+    distinct).  A key is one minhash here (band size 1) or a hash over
+    a band's minhashes (``canonicalize.minhash_edges``); this is the
+    repo's one banding self-join.  Self-join runs per-bucket, so cost
+    is Σ bucket² — linear for near-dup corpora.
 
     ``max_bucket`` drops over-full buckets before the self-join (the
     standard LSH skew guard): one boilerplate shingle shared by k docs

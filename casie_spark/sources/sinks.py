@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import manifests
-from ..util import materialize, truncate
+from ..util import cache_lazy, track_persists, truncate
 from ..operators.canonicalize import canonicalize_surfaces, default_dictionary
 from ..operators.coref import cluster_events
 from ..pipeline import tagged_tokens
@@ -38,7 +38,9 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
                 dictionary: DataFrame | None = None,
                 id_col: str = "url") -> tuple[DataFrame, DataFrame]:
     """documents -> (vertices, edges) with canonical entity ids and
-    per-doc event-coref cluster ids."""
+    per-doc event-coref cluster ids.  ``edges`` is cached lazily and
+    ``vertices`` derive from it, so whichever is written first fills
+    the cache; call inside ``util.track_persists()`` to release it."""
     spark = documents.sparkSession
     tagged = tagged_tokens(documents, id_col=id_col, mode=mode, gold=gold)
     # truncate (not persist) at the graph path's barriers: the coref +
@@ -65,7 +67,8 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
             .withColumnRenamed("_url", "doc_id")
         )
 
-    events = truncate(_restore(events))
+    # events has one consumer left (cluster_events), so no barrier
+    events = _restore(events)
     linked = truncate(_restore(linked))
 
     # timedist needs each document's <date> header; EVENT-scale join
@@ -106,6 +109,10 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
             F.lit(1.0).alias("confidence"),
         )
     )
+    # the edge and vertex writes are two sequential actions over this
+    # frame: the first populates the cache, the second reads it instead
+    # of re-running coref and the canonicalize join tail
+    edges = cache_lazy(edges)
 
     entity_verts = (
         edges.groupBy(F.col("obj_id").alias("vertex_id"))
@@ -225,25 +232,27 @@ def resumable_run(documents: DataFrame, out_dir: str, n_buckets: int = 16,
         for r in docs.select("bucket").distinct().collect()
     }
     t0 = time.perf_counter()
-    vertices, edges = build_graph(docs.drop("bucket"), mode=mode, id_col=id_col)
-    edges = manifests.with_bucket(edges, "doc_id", n_buckets)
-    edges.persist()
-    per_bucket = {
-        r["bucket"]: r["n"]
-        for r in edges.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-    }
-    per_bucket = {b: per_bucket.get(b, 0) for b in pending if b in input_buckets}
-    # dynamic partition overwrite, NOT append: the manifest row lands
-    # AFTER the data write, so a crash between the two leaves committed
-    # parquet with no manifest — the resume reprocesses those buckets,
-    # and an append would duplicate every edge in them.  Overwriting
-    # exactly the (event_subtype, bucket) partitions present in this
-    # batch is idempotent because the pipeline is deterministic over
-    # the same input buckets (same rule as corpus.write_training_shards)
-    (edges.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("event_subtype", "bucket")
-     .parquet(os.path.join(out_dir, "edges")))
+    # the scope frees build_graph's barriers and its edge cache, which
+    # the bucket count and the write below both read
+    with track_persists():
+        _, edges = build_graph(docs.drop("bucket"), mode=mode, id_col=id_col)
+        edges = manifests.with_bucket(edges, "doc_id", n_buckets)
+        per_bucket = {
+            r["bucket"]: r["n"]
+            for r in edges.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+        }
+        per_bucket = {b: per_bucket.get(b, 0) for b in pending if b in input_buckets}
+        # dynamic partition overwrite, NOT append: the manifest row lands
+        # AFTER the data write, so a crash between the two leaves committed
+        # parquet with no manifest — the resume reprocesses those buckets,
+        # and an append would duplicate every edge in them.  Overwriting
+        # exactly the (event_subtype, bucket) partitions present in this
+        # batch is idempotent because the pipeline is deterministic over
+        # the same input buckets (same rule as corpus.write_training_shards)
+        (edges.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("event_subtype", "bucket")
+         .parquet(os.path.join(out_dir, "edges")))
     wall_ms = int((time.perf_counter() - t0) * 1000)
     manifests.record(spark, out_dir, stage, per_bucket, wall_ms)
     return {"processed_buckets": sorted(pending),

@@ -38,6 +38,96 @@ def test_minhash_edges_find_near_identical(spark):
     assert all(3 not in e for e in got)
 
 
+
+def _minhash_edges_per_band(surfaces, id_col="surface_id", surface_col="surface",
+                            n_hashes=16, bands=8, threshold=0.5):
+    """Reference: the one-self-join-per-band LSH loop that
+    ``minhash_edges`` replaced (bucket-size guard applied per band)."""
+    from pyspark.sql import Window
+
+    from casie_spark.operators.canonicalize import shingles
+    from casie_spark.util import materialize
+
+    rows_per_band = n_hashes // bands
+    sh = surfaces.select(
+        F.col(id_col).alias("sid"),
+        shingles(F.col(surface_col)).alias("sh"),
+    ).filter(F.size("sh") > 0)
+
+    def minhash(seed):
+        return F.array_min(
+            F.transform("sh", lambda s: F.xxhash64(F.concat(F.lit(str(seed)), s)))
+        )
+
+    sig = sh.select("sid", "sh", *[minhash(k).alias(f"h{k}") for k in range(n_hashes)])
+    sig = materialize(sig.select("sid", "sh", *[
+        F.hash(*[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
+        .alias(f"band{b}") for b in range(bands)]))
+    pairs = None
+    for b in range(bands):
+        banded = (
+            sig.select("sid", "sh", F.col(f"band{b}").alias("bk"))
+            .withColumn("_bsz", F.count("*").over(Window.partitionBy("bk")))
+            .filter(F.col("_bsz") <= 1000).drop("_bsz")
+        )
+        left = banded.select(F.col("sid").alias("src"), F.col("sh").alias("sh1"), "bk")
+        right = banded.select(F.col("sid").alias("dst"), F.col("sh").alias("sh2"), "bk")
+        p = left.join(right, "bk").filter(F.col("src") < F.col("dst")).drop("bk")
+        pairs = p if pairs is None else pairs.unionByName(p)
+    pairs = pairs.dropDuplicates(["src", "dst"])
+    jac = F.size(F.array_intersect("sh1", "sh2")) / F.size(F.array_union("sh1", "sh2"))
+    return pairs.filter(jac >= threshold).select("src", "dst")
+
+
+def _edge_set(df):
+    return {(r["src"], r["dst"]) for r in df.collect()}
+
+
+def test_minhash_edges_match_per_band_reference(spark):
+    """The single (band, bucket) self-join finds exactly the edges of
+    the per-band loop: seeded near-duplicate surface sets with signed
+    64-bit ids, and one set whose shared band buckets exceed the
+    1,000-member skew guard."""
+    import random
+
+    vocab = ["acme", "corp", "cyber", "lab", "lazarus", "group", "apt",
+             "bank", "intl", "systems", "fancy", "bear", "x", "networks"]
+
+    def mutate(rng, s):
+        i = rng.randrange(len(s) + 1)
+        return s[:i] + rng.choice("abcdefgh ") + s[i + 1:]
+
+    for seed in (0, 1, 2):
+        rng = random.Random(seed)
+        base = [" ".join(rng.choice(vocab) for _ in range(rng.randint(1, 4)))
+                for _ in range(40)]
+        surfaces = set(base)
+        surfaces |= {mutate(rng, rng.choice(base)) for _ in range(120)}
+        surfaces |= {"", "ab"}  # shorter than one shingle
+        ids = rng.sample(range(-2**60, 2**60), len(surfaces))
+        surf = spark.createDataFrame(list(zip(ids, sorted(surfaces))),
+                                     "surface_id long, surface string")
+        want = _edge_set(_minhash_edges_per_band(surf))
+        assert len(want) > 20
+        assert _edge_set(minhash_edges(surf)) == want
+
+    # 1,100 surfaces sharing a 600-char prefix and differing in a
+    # 3-letter suffix: in every band nearly all of them share one
+    # bucket, which the guard drops, so few of the 604,450 pairs (all
+    # with Jaccard > 0.99) become edges
+    rng = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    prefix = "".join(rng.choice(letters + "0123456789") for _ in range(600))
+    suffixes = rng.sample([a + b + c for a in letters for b in letters
+                           for c in letters], 1100)
+    surf = spark.createDataFrame(
+        [(i, prefix + sfx) for i, sfx in enumerate(suffixes)],
+        "surface_id long, surface string")
+    want = _edge_set(_minhash_edges_per_band(surf))
+    assert len(want) < 20_000
+    assert _edge_set(minhash_edges(surf)) == want
+
+
 def test_connected_components_chain(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 99]], "sid long")
@@ -91,6 +181,24 @@ def test_connected_components_random_differential(spark):
         got = {r["sid"]: r["component"]
                for r in connected_components(edges, verts, max_iter=40).collect()}
         assert got == want
+
+
+
+def test_connected_components_degenerate_inputs(spark):
+    """Empty vertex sets and edge-free graphs return (the convergence
+    count still arrives) with identity labels."""
+    no_edges = spark.createDataFrame([], "src long, dst long")
+    no_verts = spark.createDataFrame([], "sid long")
+    verts = spark.createDataFrame([(5,), (3,), (9,)], "sid long")
+    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+
+    assert connected_components(no_edges, no_verts).collect() == []
+    assert connected_components(edges, no_verts).collect() == []
+    assert connected_components(edges.filter("src > 9"),
+                                verts.filter("sid > 9")).collect() == []
+    got = {r["sid"]: r["component"]
+           for r in connected_components(no_edges, verts).collect()}
+    assert got == {3: 3, 5: 5, 9: 9}
 
 
 def test_canonicalize_end_to_end(spark):

@@ -4,11 +4,14 @@ from __future__ import annotations
 
 import tempfile
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from casie_spark.manifests import pending_buckets, read_manifest
+from casie_spark.operators.canonicalize import build_dictionary
 from casie_spark.sources.documents import synth_documents
 from casie_spark.sources.sinks import build_graph, resumable_run, write_graph
+from casie_spark.util import track_persists
 
 
 def test_build_and_write_graph(spark, tmp_path):
@@ -30,6 +33,57 @@ def test_build_and_write_graph(spark, tmp_path):
     assert "event_subtype" in e.columns
     kinds = {r["kind"] for r in v.select("kind").distinct().collect()}
     assert kinds == {"entity", "event"}
+
+
+def test_graph_path_job_budget(spark, tmp_path):
+    """build_graph + write_graph on 40 pages stays inside a Spark job
+    budget (one banded LSH self-join, the convergence count riding the
+    components barrier, edges cached for both writes), writes what it
+    built, and renders every output plan below maxPlanStringLength."""
+    docs = synth_documents(spark, 40).persist()
+    docs.count()
+    out = str(tmp_path / "graph")
+    sc = spark.sparkContext
+    group = "graph_job_budget"
+    ov, oe = Observation(), Observation()
+    sc.setJobGroup(group, group)
+    try:
+        with track_persists():
+            vertices, edges = build_graph(docs, dictionary=build_dictionary(spark))
+            vertices = vertices.observe(ov, F.count(F.lit(1)).alias("rows"))
+            edges = edges.observe(oe, F.count(F.lit(1)).alias("rows"))
+            write_graph(vertices, edges, out)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        docs.unpersist()
+    assert jobs <= 110, jobs
+
+    e = spark.read.parquet(out + "/edges")
+    v = spark.read.parquet(out + "/vertices")
+    assert e.count() == oe.get["rows"] > 0
+    assert v.count() == ov.get["rows"] > 0
+    ends = (e.select(F.col("subj_id").alias("id"))
+            .union(e.select(F.col("obj_id").alias("id"))))
+    assert ends.join(v.select(F.col("vertex_id").alias("id")), "id",
+                     "left_anti").count() == 0
+    cap = int(spark.conf.get("spark.sql.maxPlanStringLength"))
+    for df in (vertices, edges):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "extended")
+        assert len(plan) < cap
+
+
+def test_resumable_run_releases_its_caches(spark, tmp_path):
+    """resumable_run leaves no SQL cache entry and no persistent RDD
+    behind: its barriers and edge cache are freed on return."""
+    docs = synth_documents(spark, 24)
+    spark.catalog.clearCache()
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = {int(r) for r in jrdds().keySet().toArray()}
+    resumable_run(docs, str(tmp_path / "run"), n_buckets=2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {int(r) for r in jrdds().keySet().toArray()} <= before
 
 
 def test_resumable_run_is_incremental(spark, tmp_path):
