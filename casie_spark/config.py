@@ -26,14 +26,6 @@ EVENT_SUBTYPES = [
     "Ransom",
 ]
 
-EVENT_SUPERTYPE = {
-    "Phishing": "Attack",
-    "Databreach": "Attack",
-    "Ransom": "Attack",
-    "DiscoverVulnerability": "Vulnerability-related",
-    "PatchVulnerability": "Vulnerability-related",
-}
-
 ARGUMENT_TYPES = [
     "Patch", "Data", "Money", "Time", "Organization", "GPE", "File",
     "Version", "Person", "Vulnerability", "PaymentMethod", "CVE",
@@ -199,8 +191,6 @@ ROLE_PAIR = {
     },
 }
 
-REALIS_VALUES = ["Actual", "Generic", "Other"]
-
 # RolePair surface vocabulary -> the gold-corpus role vocabulary.  The
 # reference's RolePair constants (link_coref.py:59-81) and its own
 # annotated corpus disagree on these strings: the corpus (and the
@@ -341,14 +331,3 @@ AMBIGUOUS_LIST = {
 COREF_WEIGHTS = [0.141, 0.177, 0.14, 0.148, 0.112, 0.141, 0.141]
 COREF_THRESHOLD = 0.75
 
-# Similarity threshold for verb->trigger-type inference (link_coref.py:997).
-TRIGGER_SIM_THRESHOLD = 0.68
-
-# Must-have-argument -> forced trigger rules (recheck, link_coref.py:1027-1126).
-FORCED_TRIGGER = {
-    "PaymentMethod": "Ransom",
-    "Patch": "PatchVulnerability",
-    "Vulnerability": "DiscoverVulnerability",
-    "PII": "Databreach",
-    "Data": "Databreach",
-}

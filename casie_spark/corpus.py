@@ -498,38 +498,26 @@ def leakage_safe_split(docs: DataFrame, n: int = 3, n_hashes: int = 4,
 
     Candidate pairs are the LSH buckets themselves (unverified — for
     split assignment over-merging is the conservative direction: more
-    docs travel together, never fewer), closed into components with
-    min-label propagation; singleton docs form their own component.
+    docs travel together, never fewer), closed into components by
+    ``dedup.neardup_components`` (the q36 closure, run to the
+    fixpoint); a doc with no candidate forms its own component.
     The split is hash16(component) % 100 against (train_pct,
     val_pct) cut points — fully deterministic, so shards and resumes
     regenerate the identical assignment, and the oracle (q57) replays
     the closure with a recursive CTE.
 
-    Scale shape: inherits the q36 candidate machinery (per-band
-    bucket self-join with the skew cap, CC iterations barriered with
+    Scale shape: inherits the q36 candidate machinery (one banded
+    bucket self-join with the skew cap, CC rounds barriered with
     truncate); the final assignment is one left join of the corpus ids
     against the (small) clustered-doc map plus pure column math —
     document text is read only by the shingle pass.
     """
     from .functions.textstats import hash16
-    from .operators.canonicalize import connected_components
-    from .operators.dedup import (minhash_candidate_pairs,
-                                  minhash_signature, word_shingles,
-                                  words_with_pos)
-    from .util import materialize
+    from .operators.dedup import neardup_components
 
-    sig = minhash_signature(
-        word_shingles(words_with_pos(docs, text_col, id_col), n, id_col),
-        n_hashes, id_col)
-    pairs = materialize(minhash_candidate_pairs(sig, n_hashes, id_col))
-    verts = (pairs.select(F.col("doc_a").alias("doc"))
-             .union(pairs.select("doc_b")).distinct())
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")),
-        verts, id_col="doc", max_iter=40)
+    comp = neardup_components(docs, n, n_hashes, text_col, id_col)
     out = (docs.select(id_col)
-           .join(comp.withColumnRenamed("doc", id_col), id_col, "left")
+           .join(comp, id_col, "left")
            .select(id_col,
                    F.coalesce("component", F.col(id_col))
                    .alias("component")))

@@ -1,31 +1,17 @@
-"""CVE / version / money / date regex columns.
+"""CVE / version token predicates.
 
 - CVE pattern ``CVE-\\d+-\\d+``: reference code/parseJsontoFeatures.py:223-228.
 - Version pattern ``(v)*\\d+\\.\\d+(\\.\\d+)*``: parseJsontoFeatures.py:185-222
   (context rules — previous token is software/system-ish — are applied at
   the tagging stage, functions stay context-free).
 
-Everything JVM-side (regexp_* builtins) so Catalyst keeps these in
-whole-stage codegen and DuckDB can mirror them for the oracle.
+Everything JVM-side (``rlike``) so Catalyst keeps these in whole-stage
+codegen and DuckDB can mirror them for the oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-CVE_PATTERN = r"CVE-\d+-\d+"
-VERSION_PATTERN = r"v?\d+\.\d+(\.\d+)*"
-MONEY_PATTERN = r"\$\s?\d[\d,]*(\.\d+)?( ?(million|billion|thousand))?"
-
-
-def extract_cves(text: Column) -> Column:
-    """All CVE ids in a text column -> array<string>."""
-    return F.regexp_extract_all(text, F.lit(CVE_PATTERN), 0)
-
-
-def extract_versions(text: Column) -> Column:
-    return F.regexp_extract_all(text, F.lit(VERSION_PATTERN), 0)
 
 
 def is_cve_token(tok: Column) -> Column:

@@ -19,9 +19,9 @@ Three layers:
    verification.  All JVM-side (transform/aggregate/xxhash64 on
    arrays).
 3. ``connected_components`` — iterative min-label propagation over the
-   candidate edges (no GraphFrames dependency); converges in
+   candidate edges (no GraphFrames dependency); runs to the fixpoint,
    O(component diameter) joins, each keyed on the label column with
-   AQE handling skew.  One truncate barrier per iteration, which also
+   AQE handling skew.  One truncate barrier per round, which also
    carries the convergence count.
 """
 
@@ -182,39 +182,43 @@ def minhash_edges(surfaces: DataFrame, id_col: str = "surface_id",
     )
 
 
-def connected_components(edges: DataFrame, vertices: DataFrame,
-                         id_col: str = "sid", max_iter: int = 15) -> DataFrame:
-    """Min-label propagation: (id, component) with component = min id
-    reachable.  Each iteration is two shuffles and one truncate
-    barrier; the number of changed labels is an ``Observation`` on the
-    truncated frame, so the convergence test runs no job of its own.
-    Stops when no label changes or after ``max_iter`` iterations.
-    Empty vertices give an empty result; a vertex with no edge is its
-    own component."""
-    labels = materialize(
-        vertices.select(F.col(id_col).alias("id")).withColumn("label", F.col("id"))
-    )
+def connected_components(edges: DataFrame, id_col: str = "sid") -> DataFrame:
+    """Min-label propagation over the (src, dst) edges: (id_col,
+    component) for every edge endpoint, component = the min id
+    reachable.  A vertex with no edge is absent; callers that need it
+    left-join their own ids and ``coalesce`` it to itself.
+
+    The labels are seeded by the first min-neighbour round
+    (``least(src, min(dst))`` over the materialized symmetric edges),
+    so no identity-label barrier runs.  Each further round is two
+    shuffles and one truncate barrier; the number of labels it lowered
+    is an ``Observation`` on the truncated frame, so the convergence
+    test runs no job of its own.  The loop runs to the fixpoint with no
+    round cap: every round before the last lowers at least one label,
+    and a label is always the id of a vertex in its component, so
+    labels cannot fall forever — the loop ends after about diameter + 1
+    rounds.  Empty edges give an empty result."""
     sym = materialize(
         edges.select("src", "dst").union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     )
-
-    for _ in range(max_iter):
+    labels = sym.groupBy("src").agg(
+        F.least(F.col("src"), F.min("dst")).alias("label")
+    )
+    while True:
         neighbor_min = (
-            sym.join(labels, sym.dst == labels.id, "inner")
+            sym.join(labels.withColumnRenamed("src", "dst"), "dst")
             .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
-                (F.col("nmin") < F.col("label")).alias("_chg"),
-            )
+        # every endpoint has a neighbour, so the inner join keeps all
+        new_labels = labels.join(neighbor_min, "src").select(
+            "src",
+            F.least("label", "nmin").alias("label"),
+            (F.col("nmin") < F.col("label")).alias("_chg"),
         )
-        # truncate, not materialize: each iteration's plan embeds the
+        # truncate, not materialize: each round's plan embeds the
         # previous one — persist alone lets the tree grow exponentially.
         # The changed-label count rides the truncate's own job
         obs = Observation()
@@ -222,8 +226,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
             new_labels.observe(obs, F.count_if("_chg").alias("changed"))
         ).drop("_chg")
         if obs.get["changed"] == 0:
-            break
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("component"))
+            return labels.select(F.col("src").alias(id_col),
+                                 F.col("label").alias("component"))
 
 
 def canonicalize_surfaces(entities: DataFrame, dictionary: DataFrame,
@@ -233,7 +237,6 @@ def canonicalize_surfaces(entities: DataFrame, dictionary: DataFrame,
 
     entities: any DataFrame with a surface column; returns + canonical_id.
     """
-    spark = entities.sparkSession
     withdict = apply_dictionary(entities, dictionary, surface_col)
 
     unresolved = (
@@ -244,12 +247,9 @@ def canonicalize_surfaces(entities: DataFrame, dictionary: DataFrame,
     )
     unresolved = materialize(unresolved)
 
-    edges = minhash_edges(unresolved)
-    comp = connected_components(
-        edges, unresolved.select(F.col("surface_id").alias("sid")), "sid"
-    )
+    comp = connected_components(minhash_edges(unresolved), "surface_id")
     rep = (
-        unresolved.join(comp, unresolved.surface_id == comp.sid, "left")
+        unresolved.join(comp, "surface_id", "left")
         .select(
             "surface",
             F.coalesce("component", F.col("surface_id")).alias("component"),

@@ -132,15 +132,6 @@ def _ref_minmax(m: np.ndarray) -> np.ndarray:
     return (m - 100.0) / (hi - 100.0)
 
 
-def _minmax(m: np.ndarray) -> np.ndarray:
-    """Clean min-max (kept for callers/tests that want the intended
-    reading; cluster_events itself uses _ref_minmax for parity)."""
-    lo, hi = m.min(), m.max()
-    if hi <= lo:
-        return np.zeros_like(m)
-    return (m - lo) / (hi - lo)
-
-
 def average_linkage_clusters(dist: np.ndarray, threshold: float) -> list[int]:
     """Deterministic average-linkage agglomerative clustering: merge the
     closest pair (ties -> smallest indices) while min distance <=

@@ -137,6 +137,30 @@ def minhash_candidate_pairs(sig: DataFrame, n_hashes: int = 4,
     )
 
 
+def neardup_components(docs: DataFrame, n: int = 3, n_hashes: int = 4,
+                       text_col: str = "text",
+                       id_col: str = "doc_id") -> DataFrame:
+    """The near-dup closure over UNVERIFIED LSH candidates: word
+    n-shingles -> ``n_hashes`` md5-min signatures -> candidate pairs
+    (one band per minhash) -> connected components.  Returns (id_col,
+    component) for every doc in some candidate pair, component = the
+    min doc id of its cluster; a doc with no candidate is absent.
+    q36 reports these clusters and ``corpus.leakage_safe_split``
+    splits on them."""
+    from ..util import materialize
+    from .canonicalize import connected_components
+
+    sig = minhash_signature(
+        word_shingles(words_with_pos(docs, text_col, id_col), n, id_col),
+        n_hashes, id_col)
+    # the symmetric edge union reads the pairs twice; materialize them
+    # or the shingle->signature->self-join subtree runs per reference
+    pairs = materialize(minhash_candidate_pairs(sig, n_hashes, id_col))
+    return connected_components(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        id_col)
+
+
 def ngram_jaccard(docs: DataFrame, n: int = 3, n_hashes: int = 4,
                   text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact n-gram Jaccard similarity for MinHash candidate pairs:
@@ -229,11 +253,8 @@ def drop_neardup_duplicates(docs: DataFrame, jaccard_threshold: float = 0.8,
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    verts = (edges.select(F.col("src").alias("doc"))
-             .union(edges.select("dst")).distinct())
-    comp = connected_components(edges, verts, id_col="doc", max_iter=40)
-    drop = (comp.filter(F.col("doc") != F.col("component"))
-            .select(F.col("doc").alias(id_col)))
+    comp = connected_components(edges, id_col)
+    drop = comp.filter(F.col(id_col) != F.col("component")).select(id_col)
     return docs.join(drop, id_col, "left_anti")
 
 
@@ -604,10 +625,11 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
         .filter(F.col("_sim") >= float(threshold))
         .select("src", "dst")
     )
-    comp = connected_components(
-        edges, assigned.select(F.col(id_col).alias("sid")), id_col="sid")
+    # a vector with no duplicate is no edge endpoint: its own component
+    comp = connected_components(edges, id_col)
     return (
-        assigned.join(comp, assigned[id_col] == comp.sid)
+        assigned.join(comp, id_col, "left")
+        .withColumn("component", F.coalesce("component", F.col(id_col)))
         .select(id_col, "cell", "component",
                 (F.col(id_col) == F.col("component")).alias("keep"))
     )

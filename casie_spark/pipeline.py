@@ -50,6 +50,21 @@ def doc_key(col):
     return F.xxhash64(col.cast("string"))
 
 
+def restore_urls(df: DataFrame, documents: DataFrame,
+                 id_col: str = "url") -> DataFrame:
+    """Replace ``df``'s internal :func:`doc_key` ``doc_id`` with the
+    document's own id string.  Run it where rows are few (triples,
+    events), not on the token stream."""
+    id_map = documents.select(
+        doc_key(F.col(id_col)).alias("doc_id"),
+        F.col(id_col).cast("string").alias("_url"),
+    ).distinct()
+    return (
+        df.join(id_map, "doc_id").drop("doc_id")
+        .withColumnRenamed("_url", "doc_id")
+    )
+
+
 def doc_key128(col):
     """16-byte document key for true web scale: two distinct xxhash64
     digests packed into a struct (the second hashes the input with an
@@ -274,13 +289,4 @@ def run_pipeline(documents: DataFrame, id_col: str = "url",
                                   role_route=role_route,
                                   role_canon=role_canon,
                                   begin_weights=begin_weights)
-    id_map = documents.select(
-        doc_key(F.col(id_col)).alias("doc_id"),
-        F.col(id_col).cast("string").alias("_url"),
-    ).distinct()
-    return (
-        triples.join(id_map, "doc_id")
-        .drop("doc_id")
-        .withColumnRenamed("_url", "doc_id")
-        .select(*TRIPLE_COLUMNS)
-    )
+    return restore_urls(triples, documents, id_col).select(*TRIPLE_COLUMNS)

@@ -297,30 +297,10 @@ def q13_minhash_bands(spark, sf_dir):
     4 md5-min signatures -> bucket collisions (training-data op;
     corpus-scale analog of SURVEY 2.9 canonicalization).  md5 is the
     hash on both engines so signatures agree exactly."""
+    from .operators.dedup import minhash_signature, word_shingles, words_with_pos
+
     d = _load(spark, sf_dir, "documents")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    words = d.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "w")
-    )
-    sh = (
-        words.withColumn("w1", F.lead("w", 1).over(w))
-        .withColumn("w2", F.lead("w", 2).over(w))
-        .filter(F.col("w2").isNotNull())
-        .select(
-            "doc_id",
-            F.concat_ws(" ", "w", "w1", "w2").alias("shingle"),
-        )
-    )
-    bands = sh.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.lit(str(b)), F.lit("|"), F.col("shingle"))).alias(f"h{b}")
-            for b in range(4)
-        ],
-    )
-    sig = bands.groupBy("doc_id").agg(
-        *[F.min(f"h{b}").alias(f"minh{b}") for b in range(4)]
-    )
+    sig = minhash_signature(word_shingles(words_with_pos(d), 3), 4)
     # unpivot the bands into rows so the shingle->signature subtree is
     # planned ONCE (the per-band loop referenced `sig` four times and
     # Spark has no common-subplan reuse outside exchanges — the whole
@@ -564,44 +544,27 @@ def q35_unigram_logprob(spark, sf_dir):
 
 def q36_neardup_clusters(spark, sf_dir):
     """Near-dup cluster assembly: the q13 MinHash-LSH candidate-pair
-    graph closed into connected components via iterative min-label
-    propagation (canonicalize.connected_components — previously
-    exercised only rows-only through q26's canonical graph), one row
-    per clustered doc with its component id and cluster size.  The
-    DuckDB oracle rebuilds the identical pair graph and closes it with
-    a recursive CTE, so the ITERATIVE operator is hash-checked
-    end-to-end: component = min reachable doc id on both engines.
-    This is the survivorship step every doc-level dedup needs at crawl
-    scale — LSH emits pairs, but "keep one per near-dup CLUSTER"
-    requires the transitive closure (keeper = the doc whose id equals
-    its component).
+    graph closed into connected components by
+    ``dedup.neardup_components`` (iterative min-label propagation,
+    run to the fixpoint), one row per clustered doc with its component
+    id and cluster size.  The DuckDB oracle rebuilds the identical pair
+    graph and closes it with a recursive CTE, so the ITERATIVE
+    operator is hash-checked end-to-end: component = min reachable doc
+    id on both engines.  This is the survivorship step every doc-level
+    dedup needs at crawl scale — LSH emits pairs, but "keep one per
+    near-dup CLUSTER" requires the transitive closure (keeper = the
+    doc whose id equals its component).
 
     Scale shape: candidate generation is the capped per-bucket
-    self-join (never all-pairs); each CC iteration is two shuffles
-    keyed on doc/label with localCheckpoint barriers (util.truncate)
-    so the plan tree stays flat; LSH components are unions of bucket
-    cliques, so the propagation converges in a handful of iterations
-    (the loop exits on a zero changed-count) independent of corpus
-    size."""
-    from .operators.canonicalize import connected_components
-    from .operators.dedup import (minhash_candidate_pairs, minhash_signature,
-                                  word_shingles, words_with_pos)
-    from .util import materialize
+    self-join (never all-pairs); each CC round is two shuffles keyed
+    on doc/label with localCheckpoint barriers (util.truncate) so the
+    plan tree stays flat; the loop exits on a zero changed-count, so
+    a chain of any length closes fully."""
+    from .operators.dedup import neardup_components
 
-    d = _load(spark, sf_dir, "documents")
-    sig = minhash_signature(word_shingles(words_with_pos(d), 3), 4)
-    # materialize the pair frame: vertices (a union reading it twice),
-    # the symmetrized edge frame, and the initial labels would
-    # otherwise each replay the shingle->signature->self-join subtree
-    pairs = materialize(minhash_candidate_pairs(sig, 4))
-    verts = (pairs.select(F.col("doc_a").alias("doc"))
-             .union(pairs.select("doc_b")).distinct())
-    comp = connected_components(
-        pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")),
-        verts, id_col="doc", max_iter=40)
+    comp = neardup_components(_load(spark, sf_dir, "documents"))
     return comp.select(
-        F.col("doc").alias("doc_id"), "component",
+        "doc_id", "component",
         F.count("*").over(Window.partitionBy("component"))
         .cast("long").alias("cluster_size"),
     )
@@ -928,17 +891,22 @@ def q25_event_coref(spark, sf_dir):
 def q26_canonical_graph(spark, sf_dir):
     """Full graph materialization: canonicalized edges per event
     subtype + vertex kinds (broadcast dictionary + MinHash-LSH +
-    connected components; operators.canonicalize, sources.sinks)."""
+    connected components; operators.canonicalize, sources.sinks).
+    The summary (one row per subtype) is collected inside
+    ``track_persists`` and returned as a local frame, so the graph
+    build's checkpoints and edge cache are freed on return."""
     from .sources.documents import synth_documents
     from .sources.sinks import build_graph
+    from .util import track_persists
 
-    docs = synth_documents(spark, 200)
-    vertices, edges = build_graph(docs, mode="rules")
-    by_sub = edges.groupBy("event_subtype").agg(
-        F.count("*").alias("n_edges"),
-        F.countDistinct("obj_id").alias("n_entities"),
-    )
-    return by_sub.orderBy("event_subtype")
+    with track_persists():
+        _, edges = build_graph(synth_documents(spark, 200), mode="rules")
+        by_sub = edges.groupBy("event_subtype").agg(
+            F.count("*").alias("n_edges"),
+            F.countDistinct("obj_id").alias("n_entities"),
+        ).orderBy("event_subtype")
+        rows = by_sub.collect()
+    return spark.createDataFrame(rows, by_sub.schema)
 
 
 def q27_model_inference(spark, sf_dir):

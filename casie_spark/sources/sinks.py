@@ -29,7 +29,7 @@ from .. import manifests
 from ..util import cache_lazy, track_persists, truncate
 from ..operators.canonicalize import canonicalize_surfaces, default_dictionary
 from ..operators.coref import cluster_events
-from ..pipeline import tagged_tokens
+from ..pipeline import restore_urls, tagged_tokens
 from ..operators.linking import extract_arguments, extract_events, link
 from ..operators.roles import assign_roles
 
@@ -51,25 +51,10 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
     args = extract_arguments(tagged, carry=["role"])
     linked = assign_roles(link(events, args, tagged))
 
-    # the token stream ran on 8-byte hashed keys (pipeline.doc_key);
-    # restore url provenance at the event level, where rows are ~100x
-    # fewer — graph edges must carry the real document id
-    from ..pipeline import doc_key
-
-    id_map = documents.select(
-        doc_key(F.col(id_col)).alias("doc_id"),
-        F.col(id_col).cast("string").alias("_url"),
-    ).distinct()
-
-    def _restore(df: DataFrame) -> DataFrame:
-        return (
-            df.join(id_map, "doc_id").drop("doc_id")
-            .withColumnRenamed("_url", "doc_id")
-        )
-
-    # events has one consumer left (cluster_events), so no barrier
-    events = _restore(events)
-    linked = truncate(_restore(linked))
+    # graph edges carry the real document id, restored at the event
+    # level; events has one consumer left (cluster_events), so no barrier
+    events = restore_urls(events, documents, id_col)
+    linked = truncate(restore_urls(linked, documents, id_col))
 
     # timedist needs each document's <date> header; EVENT-scale join
     pubdates = None

@@ -130,27 +130,26 @@ def test_minhash_edges_match_per_band_reference(spark):
 
 def test_connected_components_chain(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
-    verts = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 99]], "sid long")
     comp = {r["sid"]: r["component"]
-            for r in connected_components(edges, verts).collect()}
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[10] == comp[11] == 10
-    assert comp[99] == 99
+            for r in connected_components(edges).collect()}
+    assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_connected_components_random_differential(spark):
-    """Seeded random graphs vs a pure-Python union-find: every vertex
-    must land in component = min reachable id (the q36 oracle's
-    recursive-CTE contract).  Three regimes: sparse (many singleton
-    components), dense (one giant component), and a 12-node path
-    (worst-case diameter for min-label propagation — exercises the
-    iteration loop, not just the clique-ish LSH shape)."""
+    """Seeded random graphs vs a pure-Python union-find: every edge
+    endpoint must land in component = min reachable id (the q36
+    oracle's recursive-CTE contract).  Four regimes: sparse (many
+    small components), dense (one giant component), and a 12- and a
+    20-node path (worst-case diameter for min-label propagation — the
+    20-node path needs more rounds than the old 15-round cap allowed,
+    so a capped loop splits it)."""
     import random
 
-    def unionfind(n, edges):
-        parent = list(range(n))
+    def unionfind(edges):
+        parent = {}
 
         def find(x):
+            parent.setdefault(x, x)
             while parent[x] != x:
                 parent[x] = parent[parent[x]]
                 x = parent[x]
@@ -160,45 +159,39 @@ def test_connected_components_random_differential(spark):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        # min id per root
-        comp = {}
-        for v in range(n):
-            comp.setdefault(find(v), []).append(v)
-        return {v: min(vs) for r, vs in comp.items() for v in vs}
+        # the root is the min id of its component
+        return {v: find(v) for v in list(parent)}
 
     cases = []
     rng = random.Random(36)
     for n, m in ((30, 12), (25, 60)):
-        cases.append((n, [(rng.randrange(n), rng.randrange(n))
-                          for _ in range(m)]))
-    cases.append((12, [(i, i + 1) for i in range(11)]))  # path graph
+        cases.append([(rng.randrange(n), rng.randrange(n)) for _ in range(m)])
+    cases.append([(i, i + 1) for i in range(11)])  # 12-node path
+    cases.append([(i + 1, i) for i in range(19)])  # 20-node path
 
-    for n, raw in cases:
+    for raw in cases:
         edges_py = [(a, b) for a, b in raw if a != b]
-        want = unionfind(n, edges_py)
-        edges = spark.createDataFrame(edges_py or [(0, 0)], "src long, dst long")
-        verts = spark.createDataFrame([(i,) for i in range(n)], "sid long")
+        want = unionfind(edges_py)
+        edges = spark.createDataFrame(edges_py, "src long, dst long")
         got = {r["sid"]: r["component"]
-               for r in connected_components(edges, verts, max_iter=40).collect()}
+               for r in connected_components(edges).collect()}
         assert got == want
 
 
-
 def test_connected_components_degenerate_inputs(spark):
-    """Empty vertex sets and edge-free graphs return (the convergence
-    count still arrives) with identity labels."""
+    """Empty and filter-emptied edge frames return (the convergence
+    count still arrives) with no rows; self-loops and edges given in
+    both directions close like any other edge."""
     no_edges = spark.createDataFrame([], "src long, dst long")
-    no_verts = spark.createDataFrame([], "sid long")
-    verts = spark.createDataFrame([(5,), (3,), (9,)], "sid long")
     edges = spark.createDataFrame([(1, 2)], "src long, dst long")
 
-    assert connected_components(no_edges, no_verts).collect() == []
-    assert connected_components(edges, no_verts).collect() == []
-    assert connected_components(edges.filter("src > 9"),
-                                verts.filter("sid > 9")).collect() == []
+    assert connected_components(no_edges).collect() == []
+    assert connected_components(edges.filter("src > 9")).collect() == []
+    loops = spark.createDataFrame([(5, 5), (2, 1), (1, 2), (3, 3), (3, 2)],
+                                  "src long, dst long")
     got = {r["sid"]: r["component"]
-           for r in connected_components(no_edges, verts).collect()}
-    assert got == {3: 3, 5: 5, 9: 9}
+           for r in connected_components(loops).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5}
 
 
 def test_canonicalize_end_to_end(spark):

@@ -8,7 +8,8 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from casie_spark.manifests import pending_buckets, read_manifest
-from casie_spark.operators.canonicalize import build_dictionary
+from casie_spark.operators.canonicalize import (build_dictionary,
+                                                connected_components)
 from casie_spark.sources.documents import synth_documents
 from casie_spark.sources.sinks import build_graph, resumable_run, write_graph
 from casie_spark.util import track_persists
@@ -74,6 +75,27 @@ def test_graph_path_job_budget(spark, tmp_path):
         assert len(plan) < cap
 
 
+def test_connected_components_job_budget(spark):
+    """One connected_components call on a path of diameter 3 plus a
+    pair runs the symmetric-edge materialize and three label rounds
+    (the seed round rides the first truncate) and nothing else: an
+    identity-label barrier or a second count job per round breaks the
+    budget."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (10, 11)],
+                                  "src long, dst long")
+    sc = spark.sparkContext
+    group = "cc_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        comp = connected_components(edges)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs <= 17, jobs
+    assert sorted(tuple(r) for r in comp.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
+
+
 def test_resumable_run_releases_its_caches(spark, tmp_path):
     """resumable_run leaves no SQL cache entry and no persistent RDD
     behind: its barriers and edge cache are freed on return."""
@@ -84,6 +106,25 @@ def test_resumable_run_releases_its_caches(spark, tmp_path):
     resumable_run(docs, str(tmp_path / "run"), n_buckets=2)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert {int(r) for r in jrdds().keySet().toArray()} <= before
+
+
+def test_q26_releases_its_caches(spark, sf_dir):
+    """q26 builds its graph inside a persist scope and returns a local
+    summary frame: no SQL cache entry and no persistent RDD outlive the
+    call, and the summary still reads back after the release."""
+    from casie_spark.queries import q26_canonical_graph
+
+    spark.catalog.clearCache()
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = {int(r) for r in jrdds().keySet().toArray()}
+    out = q26_canonical_graph(spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {int(r) for r in jrdds().keySet().toArray()} <= before
+    rows = out.collect()
+    assert 0 < len(rows) <= 5
+    assert [r["event_subtype"] for r in rows] == sorted(
+        r["event_subtype"] for r in rows)
+    assert all(r["n_edges"] >= r["n_entities"] > 0 for r in rows)
 
 
 def test_resumable_run_is_incremental(spark, tmp_path):
