@@ -10,32 +10,31 @@ link_coref.py:2017-2026) — and the predictions are joined back onto
 events by their character offset (realisassign link_coref.py:1459-1483,
 J6 in SURVEY §2.3).
 
-Here:
+Here the label is scored in place, on the row that carries the event,
+so there is no J6 join-back:
 
-- ``realis_context`` materializes the W2 window as an ordered token
-  array per event (a range join events×tokens on the doc-partitioned
-  stream + one groupBy — events are ~100x smaller than tokens);
-- ``classify_realis_rules`` is the model-free provider: deterministic
+- ``realis_context`` adds the W2 window to the events frame as an
+  ordered token array (one left range join events×tokens on the
+  doc-partitioned stream + one groupBy over the event columns — events
+  are ~100x smaller than tokens);
+- a provider maps the (trigger text, ctx) columns to one label Column.
+  ``classify_realis_rules`` is the model-free provider: deterministic
   lexical cues for the two passes (modal/conditional cues -> Other,
   habitual/generic cues or plural trigger without specifics ->
   Generic, else Actual).  The reference's dense-softmax weights are
-  absent upstream (.MISSING_LARGE_BLOBS); a trained model slots in
-  behind the same (doc_id, event_id -> realis) contract exactly like
-  operators.model_tagger does for tagging;
-- ``with_realis`` composes both and joins the prediction back (J6).
-
-The cue-rule provider is all JVM column expressions — no UDF; the
-trained provider (``trained_realis_provider``, weights from
-operators/train_realis.py) is one broadcast-weight pandas_udf over the
-already-aggregated per-event context rows (event-scale, not
-token-scale).
+  absent upstream (.MISSING_LARGE_BLOBS); the trained provider
+  (``trained_realis_provider``, weights from operators/train_realis.py)
+  slots in behind the same column contract as one broadcast-weight
+  pandas_udf over the per-event context rows (event-scale, not
+  token-scale);
+- ``with_realis`` is ``realis_context`` plus one ``withColumn``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -52,65 +51,49 @@ OTHER_CUES = ["could", "would", "may", "might", "can", "should", "will",
 
 def realis_context(events: DataFrame, tagged: DataFrame,
                    width: int = CONTEXT_WIDTH) -> DataFrame:
-    """events + tokens -> (doc_id, event_id, ctx) with ctx = the
-    lowercased tokens within ±width of the nugget's first token, in
-    sentence order (the W2 window)."""
-    ev = events.select(
-        F.col("doc_id").alias("_e_doc"), "event_id",
-        F.col("sent_id").alias("_e_sent"),
-        F.col("first_token_id").alias("_e_tid"),
-    )
+    """events + tokens -> events + ``ctx``, the lowercased tokens within
+    ±width of the nugget's first token, in sentence order (the W2
+    window).  One left range join to the tokens, one groupBy over the
+    event columns: every event keeps its row, and an event whose window
+    matches no token gets an empty ``ctx``."""
     toks = tagged.select(
-        "doc_id", "sent_id", "token_id", F.lower("token").alias("_w")
+        F.col("doc_id").alias("_t_doc"), F.col("sent_id").alias("_t_sent"),
+        F.col("token_id").alias("_t_id"), F.lower("token").alias("_w"),
     )
-    j = toks.join(
-        ev,
-        (F.col("doc_id") == F.col("_e_doc"))
-        & (F.col("sent_id") == F.col("_e_sent"))
-        & (F.col("token_id") >= F.col("_e_tid") - width)
-        & (F.col("token_id") <= F.col("_e_tid") + width),
-        "inner",
+    j = events.join(
+        toks,
+        (F.col("doc_id") == F.col("_t_doc"))
+        & (F.col("sent_id") == F.col("_t_sent"))
+        & (F.col("_t_id") >= F.col("first_token_id") - width)
+        & (F.col("_t_id") <= F.col("first_token_id") + width),
+        "left",
     )
-    return (
-        j.groupBy("doc_id", "event_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("token_id", "_w"))
-            ).alias("_ord"),
-        )
-        .select(
-            "doc_id", "event_id",
-            F.transform("_ord", lambda s: s["_w"]).alias("ctx"),
-        )
-    )
+    # a struct of nulls is not null: unmatched rows must yield NO entry
+    hit = F.when(F.col("_t_id").isNotNull(), F.struct("_t_id", "_w"))
+    return j.groupBy(*events.columns).agg(
+        F.transform(F.array_sort(F.collect_list(hit)),
+                    lambda s: s["_w"]).alias("ctx"))
 
 
 def _has_any(ctx, words):
     return F.size(F.array_intersect(ctx, F.array(*[F.lit(w) for w in words]))) > 0
 
 
-def classify_realis_rules(ctx_df: DataFrame, events: DataFrame) -> DataFrame:
-    """(doc_id, event_id, realis) via the two-pass cue rules.
+def classify_realis_rules(text: Column, ctx: Column) -> Column:
+    """The realis label of a trigger ``text`` and its W2 window ``ctx``,
+    by the two-pass cue rules.
 
     Pass 1 Generic-vs-NotGeneric: habitual cues, or a plural trigger
     with no number/date anywhere in the window (a generic plural claim
     has no specifics).  Pass 2 Actual-vs-Other on the remainder:
     modal/conditional cues -> Other, else Actual."""
-    ev = events.select(
-        "doc_id", "event_id", F.lower(F.col("text")).alias("_trig"),
-    )
-    df = ctx_df.join(ev, ["doc_id", "event_id"], "inner")
-    has_digit = F.exists("ctx", lambda w: w.rlike(r"\d"))
-    plural_trig = F.col("_trig").rlike(r"[^s]s$")
-    generic = _has_any(F.col("ctx"), GENERIC_CUES) | (plural_trig & ~has_digit)
-    other = _has_any(F.col("ctx"), OTHER_CUES)
-    return df.select(
-        "doc_id", "event_id",
-        F.when(generic, "Generic")
-        .when(other, "Other")
-        .otherwise("Actual")
-        .alias("realis"),
-    )
+    has_digit = F.exists(ctx, lambda w: w.rlike(r"\d"))
+    plural_trig = F.lower(text).rlike(r"[^s]s$")
+    generic = _has_any(ctx, GENERIC_CUES) | (plural_trig & ~has_digit)
+    other = _has_any(ctx, OTHER_CUES)
+    return (F.when(generic, "Generic")
+            .when(other, "Other")
+            .otherwise("Actual"))
 
 
 def parse_realis_weights(arrays):
@@ -135,15 +118,12 @@ def trained_realis_provider(weights=None):
     """Trained M4 provider (same signature as classify_realis_rules):
     bag-of-context + trigger-head linear head recovered from the gold
     corpus (train_realis.py) — corpus accuracy 0.922 vs 0.628 for the
-    cue rules / 0.619 majority."""
-    def provider(ctx_df: DataFrame, events: DataFrame) -> DataFrame:
+    cue rules / 0.619 majority.  One broadcast-weight pandas_udf."""
+    def provider(text: Column, ctx: Column) -> Column:
         w = weights if weights is not None else load_realis_weights()
         if w is None:  # pragma: no cover - artifact is committed
-            return classify_realis_rules(ctx_df, events)
-        bc = ctx_df.sparkSession.sparkContext.broadcast(w)
-        ev = events.select("doc_id", "event_id",
-                           F.col("text").alias("_trig_text"))
-        df = ctx_df.join(ev, ["doc_id", "event_id"], "inner")
+            return classify_realis_rules(text, ctx)
+        bc = SparkSession.active().sparkContext.broadcast(w)
 
         @pandas_udf("string")
         def predict(txt: pd.Series, ctx: pd.Series) -> pd.Series:
@@ -155,18 +135,18 @@ def trained_realis_provider(weights=None):
                 _logits(tables, trig, widx, wsamp, len(txt)).argmax(axis=1)]
             return pd.Series(out)
 
-        return df.select(
-            "doc_id", "event_id",
-            predict("_trig_text", "ctx").alias("realis"))
+        return predict(text, ctx)
 
     return provider
 
 
 def with_realis(events: DataFrame, tagged: DataFrame,
                 provider=classify_realis_rules) -> DataFrame:
-    """events -> + realis (J6 assignment join).  ``provider`` is the
-    classification stage; swap in a broadcast-weight model provider
-    with the same signature for trained inference."""
-    preds = provider(realis_context(events, tagged), events)
-    out = events.join(preds, ["doc_id", "event_id"], "left")
-    return out.withColumn("realis", F.coalesce("realis", F.lit("Actual")))
+    """events -> + realis, scored in place on the context frame (no
+    J6 join-back).  ``provider`` maps (text, ctx) columns to the label
+    column; an event with an empty window, or a null label, is
+    ``Actual``."""
+    df = realis_context(events, tagged)
+    label = F.when(F.size("ctx") > 0, provider(F.col("text"), F.col("ctx")))
+    return df.withColumn(
+        "realis", F.coalesce(label, F.lit("Actual"))).drop("ctx")

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -71,13 +71,12 @@ def trained_role_provider(weights=None):
     head over (subtype, arg_type) pair + hashed head/first words of the
     argument surface; corpus accuracy 0.972 overall / 0.940 on the
     AmbiguousList subset vs 0.327 for the deterministic fallback."""
-    def provider(cand: DataFrame) -> DataFrame:
+    def provider(subtype: Column, arg_type: Column,
+                 arg_text: Column) -> Column:
         w = weights if weights is not None else load_role_weights()
         if w is None:  # pragma: no cover - artifact is committed
-            return cand.select(
-                "doc_id", "event_id", "arg_id",
-                F.lit(None).cast("string").alias("role"))
-        bc = cand.sparkSession.sparkContext.broadcast(w)
+            return F.lit(None).cast("string")
+        bc = SparkSession.active().sparkContext.broadcast(w)
 
         @pandas_udf("string")
         def predict(sub: pd.Series, at: pd.Series,
@@ -91,9 +90,7 @@ def trained_role_provider(weights=None):
                 gather_logits(tables, f, ROLE_KEYS).argmax(1)]
             return pd.Series(out)
 
-        return cand.select(
-            "doc_id", "event_id", "arg_id",
-            predict("subtype", "arg_type", "arg_text").alias("role"))
+        return predict(subtype, arg_type, arg_text)
 
     return provider
 
@@ -102,30 +99,28 @@ def is_ambiguous_role(subtype, arg_type):
     """P4 candidate predicate (AmbiguousList, prepare.py:177-179):
     True when the (event subtype, argument entity type) pair has more
     than one plausible role and the reference routes it to the
-    role-phrase model instead of the deterministic RolePair table."""
+    role-phrase model instead of the deterministic RolePair table
+    (role_phrase.py:35 ArgumentList3 narrows the label files the same
+    way)."""
     c = F.lit(False)
     for sub, types in config.AMBIGUOUS_LIST.items():
         c = c | ((subtype == sub) & arg_type.isin(types))
     return c
 
 
-def ambiguous_role_candidates(linked: DataFrame) -> DataFrame:
-    """The role-model candidate set: linked pairs passing the P4
-    filter.  This is the exact input selection of the reference's
-    role-phrase stage (role_phrase.py:35 ArgumentList3 narrows the
-    label files the same way)."""
-    return linked.filter(
-        is_ambiguous_role(F.col("subtype"), F.col("arg_type")))
-
-
 def assign_roles(linked: DataFrame, provider=None,
                  route: str = "ambiguous", canon: bool = False) -> DataFrame:
     """linked (from operators.linking.link) -> + final ``role``.
 
-    ``provider``: optional role-phrase model hook — a callable taking
-    a candidate subset and returning (doc_id, event_id, arg_id, role)
-    predictions.  With ``route="ambiguous"`` (the reference semantics)
-    only the P4 AmbiguousList pairs reach the provider and resolve as
+    ``provider``: optional role-phrase model hook — a callable mapping
+    the (subtype, arg_type, arg_text) columns to one role Column.  It
+    is scored in place on ``linked``: no candidate subset, no join-back
+    and no barrier.  That is the same as joining predictions back by
+    (doc_id, event_id, arg_id), because that key is unique in
+    ``linked``: both ``linking.link`` and ``linker.link_trained`` keep
+    one event per (doc_id, arg_id) (``_rk = 1``).  With
+    ``route="ambiguous"`` (the reference semantics) only the P4
+    AmbiguousList pairs take the provider's role and resolve as
     upstream > provider > deterministic.  With ``route="all"`` (the
     mode=model quality path) EVERY linked pair is scored by the
     provider — the trained head is more accurate than the
@@ -140,36 +135,18 @@ def assign_roles(linked: DataFrame, provider=None,
     'Patch-Releaser' / ... strings do not occur in the corpus — see
     the config docstring).  Rules-mode callers leave both options at
     their reference-faithful defaults."""
-    spark = linked.sparkSession
-    has_role = "role" in linked.columns
-    upstream = F.col("role") if has_role else F.lit(None).cast("string")
-
-    if provider is not None:
-        # linked is referenced twice below (main join + the provider
-        # candidate subset); EVENT/ARG-scale multi-reference frames get
-        # a truncate barrier so link()'s tie-break join and windows do
-        # not re-execute per reference (ADVICE r2; CLAUDE.md barrier
-        # policy)
-        from ..util import truncate
-
-        linked = truncate(linked)
-    lookup = role_lookup_df(spark)
+    upstream = (F.col("role") if "role" in linked.columns
+                else F.lit(None).cast("string"))
+    lookup = role_lookup_df(linked.sparkSession)
     df = linked.join(F.broadcast(lookup), ["subtype", "arg_type"], "left")
     provided = F.lit(None).cast("string")
     if provider is not None:
-        cand = linked if route == "all" else ambiguous_role_candidates(linked)
-        preds = provider(cand).select(
-            "doc_id", "event_id", "arg_id",
-            F.col("role").alias("_provider_role"),
-        )
-        df = df.join(preds, ["doc_id", "event_id", "arg_id"], "left")
-        if route == "all":
-            provided = F.col("_provider_role")
-        else:
+        provided = provider(F.col("subtype"), F.col("arg_type"),
+                            F.col("arg_text"))
+        if route != "all":
             provided = F.when(
                 is_ambiguous_role(F.col("subtype"), F.col("arg_type")),
-                F.col("_provider_role"),
-            )
+                provided)
     fallback = [F.col("single_role"), F.col("first_role")]
     if canon:
         canon_map = F.create_map(
@@ -178,8 +155,6 @@ def assign_roles(linked: DataFrame, provider=None,
     df = df.withColumn(
         "role", F.coalesce(upstream, provided, *fallback),
     ).drop("single_role", "first_role")
-    if provider is not None:
-        df = df.drop("_provider_role")
 
     # Databreach Number -> look at the next attached argument's role
     # (canon: the corpus calls the data-count role Number-of-Data)

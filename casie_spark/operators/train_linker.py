@@ -84,18 +84,14 @@ def build_training_pools(spark, doc_ids=None, tagger_weights=None,
         from .begin_repair import (
             arguments_with_context,
             events_with_context,
-            repair_begins,
-            repair_ends,
+            repair_edges,
         )
 
-        events = truncate(repair_ends(
-            repair_begins(
-                events_with_context(tagged), begin_weights.get("trig"),
-                label_col="subtype"),
+        events = truncate(repair_edges(
+            events_with_context(tagged), begin_weights.get("trig"),
             begin_weights.get("trig_end"), label_col="subtype"))
-        args = truncate(repair_ends(
-            repair_begins(
-                arguments_with_context(tagged), begin_weights.get("arg")),
+        args = truncate(repair_edges(
+            arguments_with_context(tagged), begin_weights.get("arg"),
             begin_weights.get("arg_end")))
     else:
         events = truncate(extract_events(tagged))

@@ -116,7 +116,7 @@ def build_training_frame(spark, doc_ids=None):
         gold_events,
         load_annotations,
     )
-    from ..util import materialize, truncate
+    from ..util import materialize
 
     ann = load_annotations(spark)
     if doc_ids is not None:
@@ -125,11 +125,10 @@ def build_training_frame(spark, doc_ids=None):
     toks = tokenize(docs, id_col="doc_id").repartition(F.col("doc_id"))
     tagged = materialize(
         tag_gold_replay(toks, gold_events(ann), gold_arguments(ann)))
-    events = truncate(extract_events(tagged, carry=["realis"]))
-    ctx = realis_context(events, tagged)
+    events = extract_events(tagged, carry=["realis"])
     out = (
-        events.select("doc_id", "event_id", "text", "realis")
-        .join(ctx, ["doc_id", "event_id"], "left")
+        realis_context(events, tagged)
+        .select("doc_id", "event_id", "text", "realis", "ctx")
         .filter(F.col("realis").isNotNull())
         .orderBy("doc_id", "event_id")
         .toPandas()

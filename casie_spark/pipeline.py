@@ -162,35 +162,41 @@ def triples_from_tagged(tagged: DataFrame, role_provider=None,
     tables}, operators.begin_repair) — mode=model snaps argument AND
     trigger begins onto the gold left-edge convention before
     linking."""
-    # events is referenced 3-5x downstream (realis windows, sentence
-    # lookup, candidate join).  It is EVENT-scale (~100x smaller than
-    # the token stream), so the barrier is `truncate` rather than
-    # `materialize`: localCheckpoint replaces the logical subtree with
-    # a leaf, so the linking DAG's plan tree stays O(stage) instead of
-    # O(references x subtree) — the repeated 10+ MB plan renders the
-    # driver otherwise pays per AQE job were the serial bottleneck.
-    # The token-scale `tagged` frame keeps the cheaper columnar
-    # materialize (its subtree renders once per reference, bounded).
+    # events gets ONE barrier, after realis (gold replay carries
+    # realis, so there it follows extract_events): realis_context reads
+    # the frame once and the realis head scores in place, so only the
+    # linker reads it more than once (rules-mode `link`: sentence
+    # lookup and candidate join).  It is EVENT-scale (~100x
+    # smaller than the token stream), so the barrier is `truncate`
+    # rather than `materialize`: localCheckpoint replaces the logical
+    # subtree with a leaf, so the linking DAG's plan tree stays O(stage)
+    # instead of O(references x subtree) — the repeated 10+ MB plan
+    # renders the driver otherwise pays per AQE job were the serial
+    # bottleneck.  The token-scale `tagged` frame keeps the cheaper
+    # columnar materialize (its subtree renders once per reference,
+    # bounded).  A frame referenced once (toks, args, linked) gets no
+    # barrier.
     if begin_weights and begin_weights.get("trig"):
         from .operators.begin_repair import events_with_context, repair_edges
 
         # fused: ONE pandas_udf scores both edge heads per span kind
         # (r4 VERDICT next #3 — halves the Python-worker round-trips)
-        events = truncate(repair_edges(
+        events = repair_edges(
             events_with_context(tagged, carry=["realis"]),
             begin_weights["trig"], begin_weights.get("trig_end"),
-            label_col="subtype"))
+            label_col="subtype")
     else:
-        events = truncate(extract_events(tagged, carry=["realis"]))
+        events = extract_events(tagged, carry=["realis"])
     if "realis" not in events.columns:
         # rules/model tagging carries no realis — run the M4 stage
         # (two-pass cue classifier over the ±7-token W2 window); gold
         # replay keeps the annotated labels instead
         from .operators.realis import classify_realis_rules, with_realis
 
-        events = truncate(with_realis(
+        events = with_realis(
             events, tagged,
-            provider=realis_provider or classify_realis_rules))
+            provider=realis_provider or classify_realis_rules)
+    events = truncate(events)
     if begin_weights and begin_weights.get("arg"):
         from .operators.begin_repair import (
             arguments_with_context,

@@ -329,3 +329,70 @@ def test_jvm_hash_and_shape_twins(spark):
         assert r["hid"] == _h("a", r["tok"]), r["tok"]
         assert r["hid3"] == _h("D", r["tok"], r["tok"], r["tok"]), r["tok"]
         assert r["sh"] == shape_id(r["tok"]), r["tok"]
+
+
+def _random_tagged(spark, seed: int, docs: int = 4):
+    """A seeded token stream with random argument AND trigger BIO
+    spans of 1-3 tokens, placed anywhere in 5-9-token sentences, so
+    every edge guard (sentence start/end, single-token span) fires."""
+    rng = np.random.default_rng(seed)
+    words = ["hackers", "stole", "the", "critical", "flaw", "data",
+             "Adobe", "$4", "million", "CVE-2021-1234", "on", "."]
+
+    def bio(n):
+        tags, i = ["O"] * n, 0
+        while i < n:
+            if rng.random() < 0.35:
+                lab = str(rng.choice(["Databreach", "Vulnerability"]))
+                k = int(rng.integers(1, 4))
+                for j in range(i, min(n, i + k)):
+                    tags[j] = ("B-" if j == i else "I-") + lab
+                i += k + 1
+            else:
+                i += 1
+        return tags
+
+    rows = []
+    for d in range(docs):
+        begin = 0
+        for s in range(3):
+            n = int(rng.integers(5, 10))
+            toks = [str(w) for w in rng.choice(words, n)]
+            for t, (tok, at, tt) in enumerate(zip(toks, bio(n), bio(n))):
+                rows.append((d, s, t, tok, begin, at, tt))
+                begin += len(tok) + int(rng.integers(1, 3))
+    return spark.createDataFrame(
+        rows, "doc_id long, sent_id int, token_id int, token string, "
+              "begin long, arg_tag string, trigger_tag string")
+
+
+def test_repair_edges_equals_sequential_composition(spark):
+    """repair_edges (both heads scored on one frame, guards applied in
+    order) == repair_ends(repair_begins(...)) on argument and trigger
+    spans, for seeded random weight tables."""
+    from casie_spark.operators.begin_repair import (
+        events_with_context,
+        repair_edges,
+        repair_ends,
+    )
+
+    tagged = _random_tagged(spark, 7).cache()
+
+    def rows(df):
+        return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+    for seed in (1, 2):
+        rng = np.random.default_rng(seed)
+        bw, ew = ({k: rng.standard_normal(v.shape).astype(np.float32)
+                   for k, v in forced_weights(0).items()} for _ in range(2))
+        for spans, lab in ((arguments_with_context(tagged), "arg_type"),
+                           (events_with_context(tagged), "subtype")):
+            fused = repair_edges(spans, bw, ew, label_col=lab)
+            seq = repair_ends(repair_begins(spans, bw, lab), ew, lab)
+            assert sorted(fused.columns) == sorted(seq.columns)
+            got, want = rows(fused), rows(seq.select(*fused.columns))
+            assert got == want
+            # the random heads really move edges (not an identity check)
+            assert got != rows(repair_edges(spans, None, None, lab)
+                               .select(*fused.columns))
+    tagged.unpersist()

@@ -1,4 +1,5 @@
-"""Graph materialization + manifest-based checkpoint resume."""
+"""Graph materialization + manifest-based checkpoint resume, and the
+Spark job budgets of the graph path and of run_pipeline."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 from casie_spark.manifests import pending_buckets, read_manifest
 from casie_spark.operators.canonicalize import (build_dictionary,
                                                 connected_components)
+from casie_spark.pipeline import TRIPLE_COLUMNS, run_pipeline
 from casie_spark.sources.documents import synth_documents
 from casie_spark.sources.sinks import build_graph, resumable_run, write_graph
 from casie_spark.util import track_persists
@@ -73,6 +75,66 @@ def test_graph_path_job_budget(spark, tmp_path):
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "extended")
         assert len(plan) < cap
+
+
+# (mode, job budget, triple count, fingerprint) of run_pipeline on
+# synth_documents(spark, 60).  Rules mode pays the events truncate,
+# the two linking truncates and the tagged materialize; model mode the
+# tagged materialize and the events truncate (realis and roles score
+# in place, with no join-back and no barrier of their own).
+PIPELINE_BUDGET = [
+    ("rules", 37, 1041, 31849073561061079936),
+    ("model", 21, 800, 89110571212820113369),
+]
+
+
+def test_pipeline_job_budget(spark):
+    """run_pipeline on 60 pages, plus one aggregate over its triples,
+    stays inside a Spark job budget per mode, returns the recorded
+    triples (count and sum(xxhash64(TRIPLE_COLUMNS))), and renders its
+    output plan below maxPlanStringLength."""
+    docs = synth_documents(spark, 60).persist()
+    docs.count()
+    sc = spark.sparkContext
+    cap = int(spark.conf.get("spark.sql.maxPlanStringLength"))
+    try:
+        for mode, budget, rows, fp in PIPELINE_BUDGET:
+            group = f"pipeline_job_budget_{mode}"
+            sc.setJobGroup(group, group)
+            with track_persists():
+                triples = run_pipeline(docs, mode=mode)
+                got = triples.agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum(F.xxhash64(*TRIPLE_COLUMNS).cast("decimal(38,0)"))
+                    .alias("fp")).collect()[0]
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert jobs <= budget, (mode, jobs)
+            assert (got["rows"], int(got["fp"])) == (rows, fp), mode
+            plan = triples._sc._jvm.PythonSQLUtils.explainString(
+                triples._jdf.queryExecution(), "extended")
+            assert len(plan) < cap, (mode, len(plan))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        docs.unpersist()
+
+
+def test_pipeline_degenerate_inputs(spark):
+    """An empty frame, a null text, an empty text and a page with no
+    event each give 0 triples, in rules and in model mode."""
+    schema = "url string, text string"
+    cases = {
+        "empty frame": [],
+        "null text": [("u1", None)],
+        "empty text": [("u2", "")],
+        "no events": [("u3", "The park was quiet and the weather mild.")],
+    }
+    for mode in ("rules", "model"):
+        for name, rows in cases.items():
+            docs = spark.createDataFrame(rows, schema)
+            with track_persists():
+                n = run_pipeline(docs, mode=mode).count()
+            assert n == 0, (mode, name, n)
 
 
 def test_connected_components_job_budget(spark):

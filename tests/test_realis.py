@@ -34,8 +34,10 @@ def _events(spark):
 def test_realis_context_window(spark):
     events, tagged = _events(spark)
     ctx = realis_context(events, tagged)
+    assert ctx.columns == events.columns + ["ctx"]
     rows = ctx.collect()
     assert rows, "no events extracted"
+    assert len(rows) == events.count()  # one row per event
     for r in rows:
         assert 1 <= len(r["ctx"]) <= 15  # ±7 tokens + the nugget
         assert all(w == w.lower() for w in r["ctx"])
@@ -43,11 +45,11 @@ def test_realis_context_window(spark):
 
 def test_two_pass_classification(spark):
     events, tagged = _events(spark)
-    preds = classify_realis_rules(realis_context(events, tagged), events)
+    preds = realis_context(events, tagged).select(
+        "doc_id", classify_realis_rules(F.col("text"), F.col("ctx"))
+        .alias("realis"))
     by_doc = {}
-    for r in preds.join(
-        events.select("doc_id", "event_id", "text"), ["doc_id", "event_id"]
-    ).collect():
+    for r in preds.collect():
         by_doc.setdefault(r["doc_id"], set()).add(r["realis"])
     assert "Actual" in by_doc["u1"]
     assert "Other" in by_doc["u2"]
@@ -104,3 +106,24 @@ def test_trained_realis_provider(spark):
     again = with_realis(events, tagged,
                         provider=trained_realis_provider()).collect()
     assert rows[0]["realis"] == again[0]["realis"]
+
+
+def test_event_without_context_is_actual(spark):
+    """An event whose first_token_id matches no token has an empty W2
+    window; with either provider it is labelled Actual (a plural
+    trigger would otherwise read as Generic under the cue rules)."""
+    from casie_spark.operators.realis import trained_realis_provider
+
+    tagged = spark.createDataFrame(
+        [(1, 0, i, t, i * 10) for i, t in enumerate(
+            "hackers breached the company".split())],
+        "doc_id long, sent_id int, token_id int, token string, begin long")
+    events = spark.createDataFrame(
+        [(1, 0, 0, "breaches", 40), (1, 1, 0, "breached", 1)],
+        "doc_id long, event_id int, sent_id int, text string, "
+        "first_token_id int")
+    for provider in (classify_realis_rules, trained_realis_provider()):
+        out = with_realis(events, tagged, provider=provider)
+        assert out.columns == events.columns + ["realis"]
+        assert {r["event_id"]: r["realis"] for r in out.collect()} == {
+            0: "Actual", 1: "Actual"}

@@ -6,10 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from casie_spark.operators.roles import (
-    ambiguous_role_candidates,
-    assign_roles,
-)
+from casie_spark.operators.roles import assign_roles, is_ambiguous_role
 
 LINKED_ROWS = [
     # (doc, event, arg, subtype, arg_type)
@@ -24,18 +21,17 @@ SCHEMA = "doc_id string, event_id int, arg_id int, subtype string, arg_type stri
 
 def test_ambiguous_candidates_match_reference_list(spark):
     linked = spark.createDataFrame(LINKED_ROWS, SCHEMA)
+    amb = is_ambiguous_role(F.col("subtype"), F.col("arg_type"))
     cand = {(r["event_id"], r["arg_id"])
-            for r in ambiguous_role_candidates(linked).collect()}
+            for r in linked.filter(amb).collect()}
     assert cand == {(0, 0), (1, 2)}
 
 
 def test_provider_resolves_only_ambiguous_pairs(spark):
     linked = spark.createDataFrame(LINKED_ROWS, SCHEMA)
 
-    def provider(cand):
-        return cand.select(
-            "doc_id", "event_id", "arg_id",
-            F.lit("ProviderRole").alias("role"))
+    def provider(subtype, arg_type, arg_text):
+        return F.lit("ProviderRole")
 
     out = {(r["event_id"], r["arg_id"]): r["role"]
            for r in assign_roles(linked, provider=provider).collect()}
@@ -69,8 +65,10 @@ def test_trained_role_provider_resolves_ambiguity(spark):
          ("d", 2, 3, "Phishing", "Organization", "Apple")],
         "doc_id string, event_id int, arg_id int, subtype string, "
         "arg_type string, arg_text string")
+    role = trained_role_provider()(
+        F.col("subtype"), F.col("arg_type"), F.col("arg_text"))
     out = {r["arg_id"]: r["role"]
-           for r in trained_role_provider()(cand).collect()}
+           for r in cand.select("arg_id", role.alias("role")).collect()}
     assert out[0] == "Attacker"
     assert out[1] == "Victim"
     assert out[2] == "Price"
