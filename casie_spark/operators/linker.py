@@ -18,11 +18,14 @@ artifact is present (mirroring the tagger/role/realis pattern —
 reference weights for richer models are absent upstream, the gold
 corpus is not):
 
-- candidate pool: Pair-compatible events in sentences arg_sent-2 ..
-  arg_sent+1 (r4 — widened from the same-or-previous union; the
-  either/or select_sent rule costs a measured 291 right events, and
-  the widened window lifts gold-link pool coverage 98.98% → 99.95%,
-  the next-sentence bucket alone holding 196 of 22,481 gold links);
+- candidate pool: the Pair-compatible rows of
+  ``linking.candidate_pool``, the pool the rule cascade also orders —
+  events in sentences arg_sent-2 .. arg_sent+1 (r4 — widened from the
+  same-or-previous union; the either/or select_sent rule costs a
+  measured 291 right events, and the widened window lifts gold-link
+  pool coverage 98.98% → 99.95%, the next-sentence bucket alone
+  holding 196 of 22,481 gold links).  The two linkers differ only in
+  the picker: the cascade's lexicographic order or the ranker's argmax;
 - per-candidate features, all computed JVM-side in ONE pass over the
   candidate frame (argument-pair scale, ~2 rows per argument): sentence
   gap, signed/absolute character distance, nearest-by-distance and
@@ -63,6 +66,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
+from .linking import _compat, candidate_pool
 
 LEXDIM = 1 << 12
 N_BASE = 13
@@ -183,39 +187,13 @@ def score_rows(pdf, w_base: np.ndarray, w_pair: np.ndarray,
 
 def candidate_frame(events: DataFrame, args: DataFrame,
                     tagged: DataFrame) -> DataFrame:
-    """Union-pool candidates with every JVM-side feature column.
+    """Pair-compatible rows of :func:`linking.candidate_pool` (the pool
+    the rule cascade also orders) with every JVM-side feature column.
 
-    One inner theta-join (events per doc-sentence are tiny, AQE covers
-    skew), one sentence-array join for the boundary counts (rides the
-    doc_id clustering), two windows over the (doc, arg) pools."""
-    ev = events.select(
-        F.col("doc_id").alias("_e_doc"), "event_id",
-        F.col("sent_id").alias("ev_sent"), "subtype",
-        F.col("text").alias("event_text"),
-        F.col("begin").alias("event_begin"),
-        *(["realis"] if "realis" in events.columns else []),
-    )
-    ar = args.select(
-        "doc_id", "arg_id", F.col("sent_id").alias("arg_sent"),
-        "arg_type", F.col("text").alias("arg_text"),
-        F.col("begin").alias("arg_begin"), F.col("end").alias("arg_end"),
-        *(["role"] if "role" in args.columns else []),
-    )
-    # widened pool (r3 VERDICT next #6): sentences arg_sent-2..+1 —
-    # measured on the gold links, same/prev covers 98.98% of right
-    # events while -2..+1 covers 99.95% (the biggest missing bucket is
-    # the NEXT sentence: 196 of 22,481 gold links); the ranker's
-    # sentgap features absorb the added distractors
-    gap = F.col("ev_sent") - F.col("arg_sent")
-    cand = ar.join(
-        ev,
-        (F.col("doc_id") == F.col("_e_doc"))
-        & (gap >= -2) & (gap <= 1),
-        "inner",
-    ).drop("_e_doc")
-    from .linking import _compat
-
-    cand = cand.filter(_compat(F.col("subtype"), F.col("arg_type")))
+    One sentence-array join for the boundary counts (rides the doc_id
+    clustering), two windows over the (doc, arg) pools."""
+    cand = candidate_pool(events, args).filter(
+        _compat(F.col("subtype"), F.col("arg_type")))
 
     # clause-boundary arrays per sentence: comma-class begins and
     # predicted-trigger begins (sorted) — SENTENCE scale, doc-clustered
@@ -359,7 +337,9 @@ def link_trained(events: DataFrame, arguments: DataFrame,
     argmax of the ranking score over the union candidate pool.
     ``weights``: "auto" loads the committed artifact; an explicit
     None (or a missing artifact) falls back to the reference rule
-    cascade."""
+    cascade.  The cascade's nearest-trigger tie-break reads the
+    events' own tokens, so on begin-repaired spans it ties on the
+    repaired event tokens, not on ``tagged``'s trigger tags."""
     if weights == "auto":
         weights = load_linker_weights()
     if weights is None:

@@ -163,19 +163,18 @@ def triples_from_tagged(tagged: DataFrame, role_provider=None,
     trigger begins onto the gold left-edge convention before
     linking."""
     # events gets ONE barrier, after realis (gold replay carries
-    # realis, so there it follows extract_events): realis_context reads
-    # the frame once and the realis head scores in place, so only the
-    # linker reads it more than once (rules-mode `link`: sentence
-    # lookup and candidate join).  It is EVENT-scale (~100x
-    # smaller than the token stream), so the barrier is `truncate`
-    # rather than `materialize`: localCheckpoint replaces the logical
-    # subtree with a leaf, so the linking DAG's plan tree stays O(stage)
-    # instead of O(references x subtree) — the repeated 10+ MB plan
-    # renders the driver otherwise pays per AQE job were the serial
-    # bottleneck.  The token-scale `tagged` frame keeps the cheaper
-    # columnar materialize (its subtree renders once per reference,
-    # bounded).  A frame referenced once (toks, args, linked) gets no
-    # barrier.
+    # realis, so there it follows extract_events).  No consumer reads
+    # the frame twice (realis_context reads it once, the
+    # realis head scores in place and both linkers read one candidate
+    # pool), so the barrier exists only to keep the plan small:
+    # localCheckpoint replaces the span-assembly subtree with a leaf.
+    # Without it the 60-page extended explain of the triples grew from
+    # 375 KB to 928 KB in rules mode and from 517 KB to 880 KB in model
+    # mode, close to the 1 MB maxPlanStringLength cap whose
+    # "Truncated the string representation" warnings are a regression
+    # gate (test_pipeline_job_budget asserts the cap).  It is
+    # EVENT-scale, so `truncate` rather than the token-scale columnar
+    # `materialize` of `tagged`.  args and `linked` get no barrier.
     if begin_weights and begin_weights.get("trig"):
         from .operators.begin_repair import events_with_context, repair_edges
 
