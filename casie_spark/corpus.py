@@ -177,7 +177,9 @@ def pack_token_shards(docs: DataFrame, budget_tokens: int = 100_000,
     from .functions.textstats import hash16
 
     ids = F.col(id_col).cast("string")
-    n_tok = F.size(F.filter(F.split(F.col(text_col), r"\s+"),
+    # a null text holds no tokens, like an empty one
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    n_tok = F.size(F.filter(F.split(text, r"\s+"),
                             lambda x: x != F.lit(""))).cast("long")
     base = docs.select(
         id_col,
@@ -355,7 +357,10 @@ def dsir_logratio(docs: DataFrame, target, text_col: str = "text",
     out = (bucketed.join(F.broadcast(scores), "b")
            .groupBy("_did")
            .agg(F.count("*").alias("n_grams"),
-                F.round(F.sum("lr") / F.count("*"), 4).alias("logratio")))
+                # + 0.0 turns a mean that rounds to -0.0 into 0.0; the
+                # q42 oracle does the same, so the engines agree on sign
+                (F.round(F.sum("lr") / F.count("*"), 4) + 0.0)
+                .alias("logratio")))
     return out.select(
         F.col("_did").alias(id_col),
         "n_grams", "logratio",

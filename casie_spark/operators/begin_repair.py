@@ -11,8 +11,8 @@ shift head over surface context on the EVENT/ARG-scale args frame:
 feature ids are JVM crc32/shape expressions (no strings reach Python,
 no Python hashing), one slim pandas_udf per span frame turns the int
 ids into shifts, and all edits are JVM expressions.  No token-stream
-work beyond two lag/lead windows that ride the existing doc_id
-exchange.
+work: the neighbor context rides the one span pass
+(``linking.extract_spans``) on the existing doc_id exchange.
 
 Only mode=model pipelines run it; rules/gold modes keep byte parity
 with the model-free reference semantics.
@@ -24,8 +24,11 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
+
+from .linking import extract_spans, spans_of
 
 # token shifts applied to a span's begin, in model class order
 SHIFTS = (-2, -1, 0, 1)
@@ -40,18 +43,17 @@ BEGIN_ARTIFACT = os.path.join(
     "artifacts", "begin_weights.npz",
 )
 
-# context columns arguments_with_context() adds (consumed and dropped
-# by repair_begins)
-_CTX_COLS = ("_tok", "_p1", "_p1b", "_p2", "_p2b", "_nx", "_nxb")
-# last-token context columns (consumed and dropped by repair_ends):
-# the span's last token, the two following tokens (text + begin) and
-# the token before the last one (inside the span when n_tokens > 1)
-_END_CTX_COLS = ("_ltok", "_ln1", "_ln1b", "_ln2", "_ln2b",
-                 "_lp1", "_lp1b")
-# assemble_spans carry_last mapping that produces them
+# span-pass context read at a span's FIRST token, {column: token-level
+# column} (consumed and dropped by repair_begins) ...
+_START_CARRY = {"_tok": "token", "_p1": "_p1", "_p1b": "_p1b",
+                "_p2": "_p2", "_p2b": "_p2b", "_nx": "_nx", "_nxb": "_nxb"}
+_CTX_COLS = tuple(_START_CARRY)
+# ... and at its LAST token (consumed and dropped by repair_ends): the
+# last token, the two following ones and the one before it
 _END_CARRY = {"_ltok": "token", "_ln1": "_nx", "_ln1b": "_nxb",
               "_ln2": "_n2", "_ln2b": "_n2b",
               "_lp1": "_p1", "_lp1b": "_p1b"}
+_END_CTX_COLS = tuple(_END_CARRY)
 
 
 # artifact key prefix -> weights-dict key; "aend"/"tend" are the
@@ -207,61 +209,36 @@ def load_begin_weights(path: str | None = None):
     return load_artifact(path or BEGIN_ARTIFACT, parse_begin_weights)
 
 
-def with_begin_context(tagged: DataFrame) -> DataFrame:
-    """Add sentence-scoped neighbor-token context columns to the token
-    stream: previous/previous-2 token text + begin, next token text +
-    begin.  The windows partition by doc_id and order by
-    (sent_id, token_id) — the SAME partitioning every other tagging
-    window uses, so no new Exchange enters the plan (the one-exchange
-    gate in tests/test_plans.py covers the mode=model pipeline with
-    this stage active).  Cross-sentence neighbors are nulled."""
-    w = Window.partitionBy("doc_id").orderBy("sent_id", "token_id")
-    same1 = F.lag("sent_id", 1).over(w) == F.col("sent_id")
-    same2 = F.lag("sent_id", 2).over(w) == F.col("sent_id")
-    samen = F.lead("sent_id", 1).over(w) == F.col("sent_id")
-    samen2 = F.lead("sent_id", 2).over(w) == F.col("sent_id")
-    return (
-        tagged
-        .withColumn("_p1", F.when(same1, F.lag("token", 1).over(w)))
-        .withColumn("_p1b", F.when(same1, F.lag("begin", 1).over(w)))
-        .withColumn("_p2", F.when(same2, F.lag("token", 2).over(w)))
-        .withColumn("_p2b", F.when(same2, F.lag("begin", 2).over(w)))
-        .withColumn("_nx", F.when(samen, F.lead("token", 1).over(w)))
-        .withColumn("_nxb", F.when(samen, F.lead("begin", 1).over(w)))
-        .withColumn("_n2", F.when(samen2, F.lead("token", 2).over(w)))
-        .withColumn("_n2b", F.when(samen2, F.lead("begin", 2).over(w)))
-    )
+def edge_context(w: WindowSpec) -> tuple[dict, list]:
+    """The edge heads' context in the span pass (``extract_spans(...,
+    context=True)``): each token's sentence neighbors over ``w`` —
+    previous/previous-2 and next/next-2 token text + begin, nulled
+    across a sentence edge — and the span aggregates reading them at
+    the first token (``_CTX_COLS``) and last token
+    (``_END_CTX_COLS``).  _nx is the token AFTER the first one, the
+    span's own second token when n_tokens > 1 (the +1-shift target);
+    _lp1 mirrors it at the end (the end head's -1 target)."""
+    cols = {}
+    for name, near, k in (("_p1", F.lag, 1), ("_p2", F.lag, 2),
+                          ("_nx", F.lead, 1), ("_n2", F.lead, 2)):
+        same = near("sent_id", k).over(w) == F.col("sent_id")
+        cols[name] = F.when(same, near("token", k).over(w))
+        cols[name + "b"] = F.when(same, near("begin", k).over(w))
+    aggs = ([F.min_by(src, "token_id").alias(out)
+             for out, src in _START_CARRY.items()]
+            + [F.max_by(src, "token_id").alias(out)
+               for out, src in _END_CARRY.items()])
+    return cols, aggs
 
 
-def arguments_with_context(tagged: DataFrame,
-                           carry: list[str] | None = None) -> DataFrame:
-    """extract_arguments over a context-augmented token stream; the
-    span rows carry the first token's text (_tok) and its sentence
-    neighbors (_p1/_p1b/_p2/_p2b/_nx/_nxb), plus the last token's
-    context (_ltok/_ln1/_ln2/_lp1 + begins) for the end head.  Note
-    _nx is the token AFTER the span's first token — i.e. the span's
-    own second token when n_tokens > 1, which is exactly the +1-shift
-    target; symmetrically _lp1 is the second-to-last token when
-    n_tokens > 1, the end head's -1 target."""
-    from .linking import extract_arguments
-
-    ctx = with_begin_context(tagged).withColumn("_tok", F.col("token"))
-    return extract_arguments(
-        ctx, carry=list(carry or []) + list(_CTX_COLS),
-        carry_last=_END_CARRY)
+def arguments_with_context(tagged: DataFrame) -> DataFrame:
+    """extract_arguments plus the edge context (:func:`edge_context`)."""
+    return spans_of(extract_spans(tagged, context=True), "argument")
 
 
-def events_with_context(tagged: DataFrame,
-                        carry: list[str] | None = None) -> DataFrame:
-    """extract_events variant of arguments_with_context — trigger
-    spans carry the same neighbor-context columns for the trigger
-    shift heads."""
-    from .linking import extract_events
-
-    ctx = with_begin_context(tagged).withColumn("_tok", F.col("token"))
-    return extract_events(
-        ctx, carry=list(carry or []) + list(_CTX_COLS),
-        carry_last=_END_CARRY)
+def events_with_context(tagged: DataFrame) -> DataFrame:
+    """extract_events plus the edge context (:func:`edge_context`)."""
+    return spans_of(extract_spans(tagged, context=True), "event")
 
 
 def repair_begins(args: DataFrame, weights,

@@ -48,12 +48,13 @@ found arguments 0.770 (cascade) → 0.835 (r3 same/prev pool) → 0.908
 (r4: widened pool + sentgap features + the sev/end-repair upstream
 finding more exact-begin args).
 
-Scale: the candidate frame is argument-pair scale (tokens ≫ args);
-the only Python is one scalar pandas_udf over that frame (the hashed
-lexicon gathers; everything pool-structural is window/column work),
-and the per-sentence boundary arrays ride the existing doc_id
-partitioning.  No extra token-stream exchange — asserted in
-tests/test_plans.py.
+Scale: the candidate frame is argument-pair scale (tokens ≫ args)
+and is built from the event and argument frames alone: the
+per-sentence boundary arrays come with each argument from the one
+span pass (``linking.extract_spans``), so the linker neither reads
+the token stream nor adds an exchange to it (asserted in
+tests/test_plans.py).  Scoring is JVM column math plus broadcast
+weight joins (``with_score_jvm``); no Python runs here.
 """
 
 from __future__ import annotations
@@ -79,9 +80,6 @@ N_PAIR = len(PAIR_INDEX)
 LINKER_ARTIFACT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "artifacts", "linker_weights.npz")
-
-_BOUNDARY_TOKENS = (",", ";", ":", "—", "-")
-
 
 def _stem(w: str) -> str:
     w = w.lower()
@@ -185,34 +183,16 @@ def score_rows(pdf, w_base: np.ndarray, w_pair: np.ndarray,
     return X @ w_base + w_pair[pair] + lex_trig[l1] + lex_arg[l2]
 
 
-def candidate_frame(events: DataFrame, args: DataFrame,
-                    tagged: DataFrame) -> DataFrame:
+def candidate_frame(events: DataFrame, args: DataFrame) -> DataFrame:
     """Pair-compatible rows of :func:`linking.candidate_pool` (the pool
     the rule cascade also orders) with every JVM-side feature column.
 
-    One sentence-array join for the boundary counts (rides the doc_id
-    clustering), two windows over the (doc, arg) pools."""
+    The clause-boundary counts read the argument sentence's comma and
+    trigger begins the span pass carries on each argument
+    (``sent_commas`` / ``sent_trigs``); two windows over the (doc, arg)
+    pools do the rest."""
     cand = candidate_pool(events, args).filter(
         _compat(F.col("subtype"), F.col("arg_type")))
-
-    # clause-boundary arrays per sentence: comma-class begins and
-    # predicted-trigger begins (sorted) — SENTENCE scale, doc-clustered
-    sent_arrays = tagged.groupBy("doc_id", "sent_id").agg(
-        F.array_sort(F.collect_list(
-            F.when(F.col("token").isin(*_BOUNDARY_TOKENS), F.col("begin"))
-        )).alias("_commas"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("trigger_tag") != "O", F.col("begin"))
-        )).alias("_trigs"),
-    )
-    cand = cand.join(
-        sent_arrays.select(
-            F.col("doc_id").alias("_s_doc"),
-            F.col("sent_id").alias("_s_sent"), "_commas", "_trigs"),
-        (F.col("doc_id") == F.col("_s_doc"))
-        & (F.col("arg_sent") == F.col("_s_sent")),
-        "left",
-    ).drop("_s_doc", "_s_sent")
 
     lo = F.least("event_begin", "arg_begin")
     hi = F.greatest("event_begin", "arg_begin")
@@ -234,12 +214,12 @@ def candidate_frame(events: DataFrame, args: DataFrame,
         .withColumn("sentgap",
                     (F.col("ev_sent") - F.col("arg_sent")).cast("double"))
         .withColumn("commas",
-                    F.when(same, _between(F.col("_commas")))
+                    F.when(same, _between(F.col("sent_commas")))
                     .otherwise(0).cast("double"))
         .withColumn("trigs",
-                    F.when(same, _between(F.col("_trigs")))
+                    F.when(same, _between(F.col("sent_trigs")))
                     .otherwise(0).cast("double"))
-        .drop("_commas", "_trigs")
+        .drop("sent_commas", "sent_trigs")
         .withColumn("n_cand", F.count("*").over(warg).cast("double"))
         .withColumn("nearest",
                     (F.row_number().over(wnear) == 1).cast("double"))
@@ -331,23 +311,22 @@ def with_score_jvm(cand: DataFrame, weights) -> DataFrame:
 
 
 def link_trained(events: DataFrame, arguments: DataFrame,
-                 tagged: DataFrame, weights="auto") -> DataFrame:
+                 weights="auto") -> DataFrame:
     """Trained replacement for ``linking.link`` with the same output
     column contract: one row per attached (argument, event) pair —
     argmax of the ranking score over the union candidate pool.
     ``weights``: "auto" loads the committed artifact; an explicit
     None (or a missing artifact) falls back to the reference rule
-    cascade.  The cascade's nearest-trigger tie-break reads the
-    events' own tokens, so on begin-repaired spans it ties on the
-    repaired event tokens, not on ``tagged``'s trigger tags."""
+    cascade, whose nearest-trigger tie-break reads the events' own
+    tokens (on begin-repaired spans, the repaired event tokens)."""
     if weights == "auto":
         weights = load_linker_weights()
     if weights is None:
         from .linking import link
 
-        return link(events, arguments, tagged)
+        return link(events, arguments)
 
-    cand = candidate_frame(events, arguments, tagged)
+    cand = candidate_frame(events, arguments)
     scored = with_score_jvm(cand, weights)
     wpick = Window.partitionBy("doc_id", "arg_id").orderBy(
         F.desc("link_score"), "event_id")

@@ -3,10 +3,11 @@
 Reimplements the semantics of ``link`` (reference
 code/link_coref.py:1228-1406) declaratively:
 
-1.  Nugget spans -> events, argument spans -> arguments, ids assigned
-    in reading order (row_number over (sent_id, first_token_id) per
-    doc — matching the reference's sequential eventid/argumentid
-    counters at :1230, :1296).
+1.  Nugget spans -> events, argument spans -> arguments, both from one
+    span pass over the token stream (``extract_spans``), ids assigned
+    in reading order (the running span count per doc — matching the
+    reference's sequential eventid/argumentid counters at :1230,
+    :1296).
 2.  select_sent per argument sentence (:1299-1309): the argument looks
     at its own sentence first — if ANY event exists there it is the
     only pool considered (even if none is compatible) — else at the
@@ -19,8 +20,8 @@ code/link_coref.py:1228-1406) declaratively:
     position matches a candidate (nugget token-list containment +
     offset direction) decides, candidates probed in event-id order.
 
-Physical plan: two span assemblies (window ops), then the one
-candidate pool the trained ranker also uses (``candidate_pool``: an
+Physical plan: one span pass (window ops + one aggregate), then the
+one candidate pool the trained ranker also uses (``candidate_pool``: an
 inner theta-join on the sentence gap; events per doc-sentence are
 tiny, skew is AQE's).  The cascade is a lexicographic order over the
 pool rows: one window over the (doc, arg) pool collects the
@@ -39,7 +40,10 @@ from pyspark.sql import functions as F
 
 from .. import config
 from ..util import truncate
-from .spans import assemble_spans
+from .spans import span_aggregates, span_start
+
+# comma-class tokens: the clause-boundary proxies of the trained linker
+BOUNDARY_TOKENS = (",", ";", ":", "—", "-")
 
 
 def _compat(ev_label, arg_label):
@@ -50,32 +54,99 @@ def _compat(ev_label, arg_label):
     return c
 
 
-def extract_events(tagged: DataFrame, carry: list[str] | None = None,
-                   carry_last: dict[str, str] | None = None) -> DataFrame:
-    """Trigger spans -> events(doc_id, event_id, sent_id, subtype, text,
-    begin, end, first_token_id [, carried cols])."""
-    carry = [c for c in (carry or []) if c in tagged.columns]
-    spans = assemble_spans(tagged, "trigger_tag", carry_first=carry,
-                           carry_last=carry_last)
-    w = Window.partitionBy("doc_id").orderBy("sent_id", "first_token_id")
+def extract_spans(tagged: DataFrame, context: bool = False) -> DataFrame:
+    """The one span pass: nugget (kind "event", trigger_tag) and
+    argument (kind "argument", arg_tag) spans together, from one window
+    pass over the doc_id-partitioned tokens and one aggregate keyed by
+    (doc_id, kind, span).  One row per span:
+
+    (doc_id, kind, id, sent_id, begin, end, first_token_id, n_tokens,
+     label, text, realis?, role?, ctx_window, sent_commas, sent_trigs
+     [, the edge context of begin_repair.edge_context when ``context``])
+
+    ``id`` is the running span count, so a document's spans of a kind
+    are numbered in reading order from 0 (the reference's sequential
+    eventid/argumentid counters, link_coref.py:1230, :1296).
+    ``realis``/``role`` come off the first token when ``tagged`` carries
+    them (gold replay, link_coref.py:1241-1244).  An event's
+    ``ctx_window`` holds (token_id, lowercased token) of its sentence
+    from CONTEXT_WIDTH - min(SHIFTS) before to CONTEXT_WIDTH +
+    max(SHIFTS) after its first token, so ``realis.realis_context`` can
+    cut the W2 window around any edge-repaired first token.  An
+    argument's ``sent_commas``/``sent_trigs`` are the sorted begins of
+    its sentence's comma-class and trigger tokens (the trained linker's
+    clause-boundary counts).  Every window rides the one (doc_id,
+    sent_id, token_id) sort on the one doc_id exchange; nothing joins
+    back to the tokens."""
+    from .begin_repair import SHIFTS, edge_context
+    from .realis import CONTEXT_WIDTH
+
+    w = Window.partitionBy("doc_id").orderBy("sent_id", "token_id")
+    sent = Window.partitionBy("doc_id", "sent_id")
+    near = sent.orderBy("token_id").rangeBetween(
+        -(CONTEXT_WIDTH - min(SHIFTS)), CONTEXT_WIDTH + max(SHIFTS))
+    tags = {"event": F.col("trigger_tag"), "argument": F.col("arg_tag")}
+    ctx_cols, ctx_aggs = edge_context(w) if context else ({}, [])
+    toks = tagged.withColumns({
+        **{f"_start_{k}": span_start(tag, w) for k, tag in tags.items()},
+        "ctx_window": F.collect_list(F.struct(
+            "token_id", F.lower("token").alias("w"))).over(near),
+        "sent_commas": F.collect_list(F.when(
+            F.col("token").isin(*BOUNDARY_TOKENS), F.col("begin"))).over(sent),
+        "sent_trigs": F.collect_list(
+            F.when(tags["event"] != "O", F.col("begin"))).over(sent),
+        **ctx_cols,
+    })
+    run = w.rowsBetween(Window.unboundedPreceding, 0)
+    toks = toks.withColumns(
+        {f"_id_{k}": F.sum(f"_start_{k}").over(run) for k in tags})
+    # one row per (token, kind) whose tag is not O
+    kinds = F.filter(F.array(*[
+        F.struct(F.lit(k).alias("kind"), tag.alias("_tag"),
+                 F.col(f"_id_{k}").alias("id"))
+        for k, tag in tags.items()]), lambda r: r["_tag"] != "O")
+    is_event = F.col("kind") == "event"
     return (
-        spans.withColumn("event_id", F.row_number().over(w) - 1)
-        .withColumnRenamed("label", "subtype")
-        .drop("span_id")
+        toks.select("*", F.inline(kinds))
+        .groupBy("doc_id", "kind", "id")
+        .agg(
+            *span_aggregates(F.col("_tag"), "end" in tagged.columns),
+            *[F.min_by(c, "token_id").alias(c)
+              for c in ("realis", "role") if c in tagged.columns],
+            F.min_by(F.when(is_event, F.col("ctx_window")),
+                     "token_id").alias("ctx_window"),
+            *[F.min_by(F.when(~is_event, F.array_sort(c)),
+                       "token_id").alias(c)
+              for c in ("sent_commas", "sent_trigs")],
+            *ctx_aggs,
+        )
+        .withColumn("id", (F.col("id") - 1).cast("int"))
     )
 
 
-def extract_arguments(tagged: DataFrame, carry: list[str] | None = None,
-                      carry_last: dict[str, str] | None = None) -> DataFrame:
-    carry = [c for c in (carry or []) if c in tagged.columns]
-    spans = assemble_spans(tagged, "arg_tag", carry_first=carry,
-                           carry_last=carry_last)
-    w = Window.partitionBy("doc_id").orderBy("sent_id", "first_token_id")
+def spans_of(spans: DataFrame, kind: str) -> DataFrame:
+    """One kind's rows of an :func:`extract_spans` frame, under that
+    kind's names: events (event_id, subtype, realis?, ctx_window) or
+    arguments (arg_id, arg_type, role?, sent_commas, sent_trigs)."""
+    event = kind == "event"
     return (
-        spans.withColumn("arg_id", F.row_number().over(w) - 1)
-        .withColumnRenamed("label", "arg_type")
-        .drop("span_id")
+        spans.filter(F.col("kind") == kind)
+        .withColumnsRenamed({"id": "event_id" if event else "arg_id",
+                             "label": "subtype" if event else "arg_type"})
+        .drop("kind", *(("role", "sent_commas", "sent_trigs") if event
+                        else ("realis", "ctx_window")))
     )
+
+
+def extract_events(tagged: DataFrame) -> DataFrame:
+    """Trigger spans -> events: the event rows of :func:`extract_spans`."""
+    return spans_of(extract_spans(tagged), "event")
+
+
+def extract_arguments(tagged: DataFrame) -> DataFrame:
+    """Argument spans -> arguments: the argument rows of
+    :func:`extract_spans`."""
+    return spans_of(extract_spans(tagged), "argument")
 
 
 def candidate_pool(events: DataFrame, arguments: DataFrame) -> DataFrame:
@@ -84,8 +155,9 @@ def candidate_pool(events: DataFrame, arguments: DataFrame) -> DataFrame:
     document, with no Pair filter.  One row per pair:
 
     (doc_id, arg_id, arg_sent, arg_type, arg_text, arg_begin, arg_end,
-     arg_first_tid, arg_n_tokens, role?, event_id, ev_sent, subtype,
-     event_text, event_begin, ev_first_tid, realis?)
+     arg_first_tid, arg_n_tokens, sent_commas, sent_trigs, role?,
+     event_id, ev_sent, subtype, event_text, event_begin, ev_first_tid,
+     realis?)
 
     The rule cascade reads its same-or-previous sentences out of the
     window; the trained ranker scores all four, since on the gold links
@@ -106,6 +178,7 @@ def candidate_pool(events: DataFrame, arguments: DataFrame) -> DataFrame:
         F.col("begin").alias("arg_begin"), F.col("end").alias("arg_end"),
         F.col("first_token_id").alias("arg_first_tid"),
         F.col("n_tokens").alias("arg_n_tokens"),
+        "sent_commas", "sent_trigs",
         *(["role"] if "role" in arguments.columns else []),
     )
     gap = F.col("ev_sent") - F.col("arg_sent")
@@ -115,7 +188,7 @@ def candidate_pool(events: DataFrame, arguments: DataFrame) -> DataFrame:
     ).drop("_e_doc")
 
 
-def link(events: DataFrame, arguments: DataFrame, tagged: DataFrame) -> DataFrame:
+def link(events: DataFrame, arguments: DataFrame) -> DataFrame:
     """Attach arguments to events by the reference rule cascade; returns
     one row per attached pair:
 
@@ -125,8 +198,7 @@ def link(events: DataFrame, arguments: DataFrame, tagged: DataFrame) -> DataFram
     A lexicographic order over :func:`candidate_pool`, computed from
     the candidate rows alone: the trigger tokens the tie-break looks
     for are the events' own tokens (``event_text`` split on spaces,
-    numbered from ``ev_first_tid``).  ``tagged`` is not read; it stays
-    in the signature shared with the other link providers."""
+    numbered from ``ev_first_tid``), so the token stream is not read."""
     warg = Window.partitionBy("doc_id", "arg_id")
     same = F.col("ev_sent") == F.col("arg_sent")
     ev_toks = F.split(F.col("event_text"), " ")

@@ -14,9 +14,9 @@ Here the label is scored in place, on the row that carries the event,
 so there is no J6 join-back:
 
 - ``realis_context`` adds the W2 window to the events frame as an
-  ordered token array (one left range join events×tokens on the
-  doc-partitioned stream + one groupBy over the event columns — events
-  are ~100x smaller than tokens);
+  ordered token array, cut from the ``ctx_window`` the span pass
+  (``linking.extract_spans``) collects over a range window on each
+  event's first token — no join back to the token stream;
 - a provider maps the (trigger text, ctx) columns to one label Column.
   ``classify_realis_rules`` is the model-free provider: deterministic
   lexical cues for the two passes (modal/conditional cues -> Other,
@@ -49,30 +49,18 @@ OTHER_CUES = ["could", "would", "may", "might", "can", "should", "will",
               "planned", "risk", "wants", "trying", "attempt"]
 
 
-def realis_context(events: DataFrame, tagged: DataFrame,
+def realis_context(events: DataFrame,
                    width: int = CONTEXT_WIDTH) -> DataFrame:
-    """events + tokens -> events + ``ctx``, the lowercased tokens within
-    ±width of the nugget's first token, in sentence order (the W2
-    window).  One left range join to the tokens, one groupBy over the
-    event columns: every event keeps its row, and an event whose window
-    matches no token gets an empty ``ctx``."""
-    toks = tagged.select(
-        F.col("doc_id").alias("_t_doc"), F.col("sent_id").alias("_t_sent"),
-        F.col("token_id").alias("_t_id"), F.lower("token").alias("_w"),
-    )
-    j = events.join(
-        toks,
-        (F.col("doc_id") == F.col("_t_doc"))
-        & (F.col("sent_id") == F.col("_t_sent"))
-        & (F.col("_t_id") >= F.col("first_token_id") - width)
-        & (F.col("_t_id") <= F.col("first_token_id") + width),
-        "left",
-    )
-    # a struct of nulls is not null: unmatched rows must yield NO entry
-    hit = F.when(F.col("_t_id").isNotNull(), F.struct("_t_id", "_w"))
-    return j.groupBy(*events.columns).agg(
-        F.transform(F.array_sort(F.collect_list(hit)),
-                    lambda s: s["_w"]).alias("ctx"))
+    """events -> events + ``ctx``, the lowercased tokens within ±width
+    of the nugget's first token, in sentence order (the W2 window).
+    Cut from the ``ctx_window`` the span pass carries on each event
+    (``linking.extract_spans``), which is wide enough for every edge
+    repair shift, so ``first_token_id`` may already be repaired; the
+    window column is dropped."""
+    near = F.filter("ctx_window", lambda t: F.abs(
+        t["token_id"] - F.col("first_token_id")) <= width)
+    return events.withColumn(
+        "ctx", F.transform(near, lambda t: t["w"])).drop("ctx_window")
 
 
 def _has_any(ctx, words):
@@ -140,13 +128,13 @@ def trained_realis_provider(weights=None):
     return provider
 
 
-def with_realis(events: DataFrame, tagged: DataFrame,
+def with_realis(events: DataFrame,
                 provider=classify_realis_rules) -> DataFrame:
     """events -> + realis, scored in place on the context frame (no
     J6 join-back).  ``provider`` maps (text, ctx) columns to the label
     column; an event with an empty window, or a null label, is
     ``Actual``."""
-    df = realis_context(events, tagged)
+    df = realis_context(events)
     label = F.when(F.size("ctx") > 0, provider(F.col("text"), F.col("ctx")))
     return df.withColumn(
         "realis", F.coalesce(label, F.lit("Actual"))).drop("ctx")

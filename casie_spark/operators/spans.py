@@ -4,8 +4,9 @@ The reference re-implements tag-run -> span grouping at least six times
 (processLabel parseJsontoFeatures.py:296-309, trggrtophrase :987-1017,
 process_input_phrase realis_identify.py:36-114 and role_phrase.py:37-96,
 link link_coref.py:1228-1359, score.collect score.py:442-558).  Here it
-is one declarative operator used by nugget assembly, argument assembly,
-gold parsing and the scorer.
+is one set of span rules (``span_start`` + ``span_aggregates``) used by
+the pipeline's one span pass (``linking.extract_spans``: nuggets and
+arguments together), gold parsing and the scorer.
 
 Span-start semantics (matching link_coref.py:1236-1277 exactly):
 - tag == 'O'                      -> not in any span
@@ -23,92 +24,79 @@ grows beyond the doc-hash repartition already applied upstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
-def assemble_spans(
-    tokens: DataFrame,
-    tag_col: str,
-    doc_col: str = "doc_id",
-    sent_scope: bool = True,
-    carry_first: list[str] | None = None,
-    carry_last: dict[str, str] | None = None,
-) -> DataFrame:
+def span_label(tag: Column) -> Column:
+    """The label of a BIO tag: '' for O, else the text after 'B-'/'I-'."""
+    return F.when(tag == "O", F.lit("")).otherwise(F.substring(tag, 3, 1000000))
+
+
+def span_start(tag: Column, w: WindowSpec) -> Column:
+    """1 where ``tag`` opens a span, else 0, in the (sent_id, token_id)
+    order of ``w`` (the span-start rules of the module docstring).  A
+    running sum of it over ``w`` numbers the spans 1, 2, ... in reading
+    order, constant across each span's tokens."""
+    label = span_label(tag)
+    new_sent = F.lag("sent_id", 1, -1).over(w) != F.col("sent_id")
+    prev_label = F.lag(label, 1, "").over(w)
+    return (
+        F.when(tag == "O", F.lit(0))
+        .when(tag.startswith("B-"), F.lit(1))
+        .when(tag.startswith("I-") & (new_sent | (prev_label != label)),
+              F.lit(1))
+        .otherwise(F.lit(0))
+    )
+
+
+def span_aggregates(tag: Column, has_end: bool) -> list[Column]:
+    """The per-span aggregates over the tokens of one span:
+    (sent_id, begin, end, first_token_id, n_tokens, label, text)."""
+    return [
+        # constant within a span (spans never cross sentences and
+        # never mix labels by construction), so first() is safe
+        F.first("sent_id").alias("sent_id"),
+        F.min("begin").alias("begin"),
+        # `end` is begin + len(token) by tokenizer construction, so the
+        # pipeline keeps it out of the window-heavy tagging stages
+        F.max(F.col("end") if has_end
+              else F.col("begin") + F.length("token")).alias("end"),
+        F.min("token_id").alias("first_token_id"),
+        F.count("*").alias("n_tokens"),
+        F.first(span_label(tag)).alias("label"),
+        F.concat_ws(" ", F.array_sort(
+            F.collect_list(F.struct("token_id", "token"))
+        ).getField("token")).alias("text"),
+    ]
+
+
+def assemble_spans(tokens: DataFrame, tag_col: str,
+                   doc_col: str = "doc_id") -> DataFrame:
     """tokens(+tag_col BIO column) -> spans.
 
     Returns one row per span:
-      (doc_id, sent_id, span_id, label, text, begin, end,
-       first_token_id, n_tokens)
+      (doc_id, span_id, sent_id, begin, end, first_token_id, n_tokens,
+       label, text)
 
-    ``sent_scope``: reference span loops run per sentence
-    (link_coref.py:1234 iterates words of one sentence), so a span
-    never crosses a sentence boundary; the window orders by
-    (sent_id, token_id) and a sentence change breaks the run because
-    the reference resets its accumulator per sentence.
-
-    ``carry_first``: extra token columns whose value at the span's
-    first token rides along (the reference reads realis/role off the
-    nugget_pos token, link_coref.py:1241-1244) — emitted under the
-    same name via ``min_by(col, token_id)``.
-
-    ``carry_last``: {output_name: source_column} carried from the
-    span's LAST token via ``max_by(col, token_id)`` (the right-edge
-    repair head reads its context off that token).
+    Reference span loops run per sentence (link_coref.py:1234 iterates
+    words of one sentence), so a span never crosses a sentence
+    boundary: the window orders by (sent_id, token_id) and a sentence
+    change breaks the run because the reference resets its
+    accumulator per sentence.  Events and arguments of the pipeline
+    come from ``linking.extract_spans``, which assembles both tag
+    columns in one pass with the same rules.
     """
     tag = F.col(tag_col)
-    label = F.when(tag == "O", F.lit("")).otherwise(F.substring(tag, 3, 1000000))
-
     w = Window.partitionBy(doc_col).orderBy("sent_id", "token_id")
-
-    df = tokens.withColumn("_label", label)
-    prev_label = F.lag("_label", 1, "").over(w)
-    prev_sent = F.lag("sent_id", 1, -1).over(w)
-
-    is_b = tag.startswith("B-")
-    is_i = tag.startswith("I-")
-    new_sent = prev_sent != F.col("sent_id")
-    span_start = (
-        F.when(tag == "O", F.lit(0))
-        .when(is_b, F.lit(1))
-        .when(is_i & (new_sent | (prev_label != F.col("_label"))), F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    # A span also breaks when an O (or sentence change) interrupts an
-    # I-run of the same label: I after O restarts because prev label ''.
-    df = df.withColumn("_start", span_start)
+    df = tokens.withColumn("_start", span_start(tag, w))
     df = df.withColumn(
-        "_span_id",
+        "span_id",
         F.sum("_start").over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-
-    spans = (
+    return (
         df.filter(tag != "O")
-        .groupBy(doc_col, "_span_id")
-        .agg(
-            # constant within a span (spans never cross sentences and
-            # never mix labels by construction), so first() is safe
-            F.first("sent_id").alias("sent_id"),
-            F.min("begin").alias("begin"),
-            # `end` is recomputable as begin + len(token) (the
-            # tokenizer guarantees end - begin == length, no
-            # normalization), so the pipeline drops the column from
-            # the window-heavy tagging stages — 8 fewer bytes per
-            # token through every sort/window buffer
-            F.max(F.col("end") if "end" in tokens.columns
-                  else F.col("begin") + F.length("token")).alias("end"),
-            F.min("token_id").alias("first_token_id"),
-            F.count("*").alias("n_tokens"),
-            F.first("_label").alias("label"),
-            F.array_sort(
-                F.collect_list(F.struct("token_id", "token"))
-            ).alias("_toks"),
-            *[F.min_by(c, "token_id").alias(c) for c in (carry_first or [])],
-            *[F.max_by(src, "token_id").alias(out)
-              for out, src in (carry_last or {}).items()],
-        )
-        .withColumn("text", F.concat_ws(" ", F.col("_toks.token")))
-        .withColumnRenamed("_span_id", "span_id")
-        .drop("_toks")
+        .groupBy(doc_col, "span_id")
+        .agg(*span_aggregates(tag, "end" in tokens.columns))
     )
-    return spans

@@ -74,9 +74,8 @@ def build_inputs(spark) -> pd.DataFrame:
     toks = tokenize(docs, id_col="doc_id").repartition(F.col("doc_id"))
     tagged = materialize(
         tag_gold_replay(toks, gold_events(ann), gold_arguments(ann)))
-    events = truncate(extract_events(tagged, carry=["realis"]))
-    linked = truncate(link(events, extract_arguments(tagged, carry=["role"]),
-                           tagged))
+    events = truncate(extract_events(tagged))
+    linked = truncate(link(events, extract_arguments(tagged)))
     pubdates = ann.select("doc_id", F.col("info.date").alias("pubdate"))
     base = coref_inputs(events, linked, pubdates)
     gev = gold_events(ann).select(

@@ -96,7 +96,7 @@ def build_training_pools(spark, doc_ids=None, tagger_weights=None,
     else:
         events = truncate(extract_events(tagged))
         args = truncate(extract_arguments(tagged))
-    cand = candidate_frame(events, args, tagged)
+    cand = candidate_frame(events, args)
 
     ga = gold_arguments(ann).select(
         "doc_id", F.col("begin").alias("g_begin"),

@@ -116,25 +116,21 @@ def build_training_frame(spark, doc_ids=None):
         gold_events,
         load_annotations,
     )
-    from ..util import materialize
 
     ann = load_annotations(spark)
     if doc_ids is not None:
         ann = ann.filter(F.col("doc_id").isin(list(doc_ids)))
     docs = ann.select("doc_id", F.col("content").alias("text"))
     toks = tokenize(docs, id_col="doc_id").repartition(F.col("doc_id"))
-    tagged = materialize(
-        tag_gold_replay(toks, gold_events(ann), gold_arguments(ann)))
-    events = extract_events(tagged, carry=["realis"])
-    out = (
-        realis_context(events, tagged)
+    # the span pass is the tagged stream's one reader: no barrier
+    tagged = tag_gold_replay(toks, gold_events(ann), gold_arguments(ann))
+    return (
+        realis_context(extract_events(tagged))
         .select("doc_id", "event_id", "text", "realis", "ctx")
         .filter(F.col("realis").isNotNull())
         .orderBy("doc_id", "event_id")
         .toPandas()
     )
-    tagged.unpersist()
-    return out
 
 
 def train(pdf) -> dict[str, np.ndarray]:

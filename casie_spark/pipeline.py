@@ -8,7 +8,11 @@ salt-repartitioned by url hash before the tokenizer (the only Arrow
 stage) so Zipf-skewed domains cannot produce straggler partitions at
 web scale (BASELINE.json north_rule "salted-key repartitioned").
 Everything after tokenization partitions naturally by doc_id through
-the window/join operators.
+the window/join operators.  The token stream has one reader, the span
+pass (``linking.extract_spans``: events, arguments, their realis
+windows, sentence arrays and edge context at once), and its truncate
+is the pipeline's one barrier; edge repair, realis, linking and roles
+run above that event-scale leaf.
 """
 
 from __future__ import annotations
@@ -16,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import materialize, truncate
-from .operators.linking import extract_arguments, extract_events, link
+from .util import truncate
+from .operators.linking import extract_spans, link, spans_of
 from .operators.roles import assign_roles
 from .operators.rules import apply_rules
 from .operators.tagging import tag_gold_replay, tag_rules
@@ -85,7 +89,9 @@ def doc_key128(col):
 def tagged_tokens(documents: DataFrame, id_col: str = "url",
                   mode: str = "rules", gold=None,
                   hash_ids: bool = True, tagger_weights=None) -> DataFrame:
-    """documents -> tagged token table (the model-stage column contract).
+    """documents -> tagged token table (the model-stage column contract),
+    lazy: no barrier, since the span pass is its one reader (callers
+    that read it more than once, like the trainers, `materialize` it).
     ``tagger_weights``: optional TaggerWeights override for mode="model"
     (default: the trained artifact, falling back to distilled).
 
@@ -113,19 +119,20 @@ def tagged_tokens(documents: DataFrame, id_col: str = "url",
         toks = tokenize(docs, id_col=id_col, context=ctx)
     # `end` is begin + len(token) by tokenizer construction; span
     # assembly recomputes it, so it need not ride the ~15 window/sort
-    # buffer passes of the tagging DAG (see assemble_spans)
+    # buffer passes of the tagging DAG (see spans.span_aggregates)
     toks = toks.drop("end")
     if mode != "model":
         toks = toks.repartition(F.col("doc_id"))
     # toks has a SINGLE consumer (the tagging stage — histogram and
     # rule sweeps are window ops now, not join-backs), so it needs no
     # materialization barrier: the tokenizer fuses into the tagging
-    # stage.  Only multi-referenced frames get persisted (tagged,
-    # events, link candidates) — Spark does not dedupe common
-    # subplans, so each persisted frame is one that would otherwise
-    # re-execute its subtree per reference; every removed barrier is
-    # one fewer job for the driver to plan (the serial component that
-    # caps N->4N scaling).
+    # stage.  The same holds for `tagged` itself: its one consumer is
+    # the span pass (linking.extract_spans), whose truncate is the
+    # pipeline's one barrier.  Only multi-referenced frames get a
+    # barrier — Spark does not dedupe common subplans, so each one is
+    # a frame that would otherwise re-execute its subtree per
+    # reference; every removed barrier is one fewer job for the driver
+    # to plan (the serial component that caps N->4N scaling).
     if mode == "rules":
         tagged = apply_rules(tag_rules(toks))
     elif mode == "model":
@@ -140,7 +147,7 @@ def tagged_tokens(documents: DataFrame, id_col: str = "url",
         tagged = tag_gold_replay(toks, ev, ar)
     else:
         raise ValueError(f"unknown tagging mode: {mode}")
-    return materialize(tagged)
+    return tagged
 
 
 def triples_from_tagged(tagged: DataFrame, role_provider=None,
@@ -152,40 +159,35 @@ def triples_from_tagged(tagged: DataFrame, role_provider=None,
     """tagged tokens -> (subj, pred, obj) triples.  ``role_provider``:
     optional role-phrase model hook (see operators.roles.assign_roles);
     ``realis_provider``: optional M4 classifier override (default: the
-    cue rules); ``link_provider``: optional (events, args, tagged) ->
-    linked callable replacing the reference rule cascade
+    cue rules); ``link_provider``: optional (events, args) -> linked
+    callable replacing the reference rule cascade
     (operators.linker.link_trained — the trained union-pool ranker
     mode=model pipelines use); ``role_route``/``role_canon``: provider
     routing and gold-vocabulary canonicalization, forwarded to
     assign_roles (mode=model passes "all"/True); ``begin_weights``:
     optional trained begin-repair weights ({"arg": tables, "trig":
     tables}, operators.begin_repair) — mode=model snaps argument AND
-    trigger begins onto the gold left-edge convention before
-    linking."""
-    # events gets ONE barrier, after realis (gold replay carries
-    # realis, so there it follows extract_events).  No consumer reads
-    # the frame twice (realis_context reads it once, the
-    # realis head scores in place and both linkers read one candidate
-    # pool), so the barrier exists only to keep the plan small:
-    # localCheckpoint replaces the span-assembly subtree with a leaf.
-    # Without it the 60-page extended explain of the triples grew from
-    # 375 KB to 928 KB in rules mode and from 517 KB to 880 KB in model
-    # mode, close to the 1 MB maxPlanStringLength cap whose
-    # "Truncated the string representation" warnings are a regression
-    # gate (test_pipeline_job_budget asserts the cap).  It is
-    # EVENT-scale, so `truncate` rather than the token-scale columnar
-    # `materialize` of `tagged`.  args and `linked` get no barrier.
-    if begin_weights and begin_weights.get("trig"):
-        from .operators.begin_repair import events_with_context, repair_edges
+    trigger edges onto the gold convention before linking; each head
+    applies when its tables are present."""
+    # the span pass is the pipeline's ONE barrier.  It is the token
+    # stream's only reader, and the events and arguments frames both
+    # project it, so `truncate` runs the tagging DAG and the pass once
+    # and leaves an EVENT/ARG-scale leaf under everything above (edge
+    # repair, realis, linking, roles), which keeps the rendered plan
+    # far below the 1 MB maxPlanStringLength cap (test_pipeline_job_
+    # budget pins the plan size).  Nothing above it is read twice.
+    spans = truncate(extract_spans(tagged, context=bool(begin_weights)))
+    events, args = spans_of(spans, "event"), spans_of(spans, "argument")
+    if begin_weights:
+        from .operators.begin_repair import repair_edges
 
         # fused: ONE pandas_udf scores both edge heads per span kind
         # (r4 VERDICT next #3 — halves the Python-worker round-trips)
-        events = repair_edges(
-            events_with_context(tagged, carry=["realis"]),
-            begin_weights["trig"], begin_weights.get("trig_end"),
-            label_col="subtype")
-    else:
-        events = extract_events(tagged, carry=["realis"])
+        events = repair_edges(events, begin_weights.get("trig"),
+                              begin_weights.get("trig_end"),
+                              label_col="subtype")
+        args = repair_edges(args, begin_weights.get("arg"),
+                            begin_weights.get("arg_end"))
     if "realis" not in events.columns:
         # rules/model tagging carries no realis — run the M4 stage
         # (two-pass cue classifier over the ±7-token W2 window); gold
@@ -193,21 +195,8 @@ def triples_from_tagged(tagged: DataFrame, role_provider=None,
         from .operators.realis import classify_realis_rules, with_realis
 
         events = with_realis(
-            events, tagged,
-            provider=realis_provider or classify_realis_rules)
-    events = truncate(events)
-    if begin_weights and begin_weights.get("arg"):
-        from .operators.begin_repair import (
-            arguments_with_context,
-            repair_edges,
-        )
-
-        args = repair_edges(
-            arguments_with_context(tagged, carry=["role"]),
-            begin_weights["arg"], begin_weights.get("arg_end"))
-    else:
-        args = extract_arguments(tagged, carry=["role"])
-    linked = (link_provider or link)(events, args, tagged)
+            events, provider=realis_provider or classify_realis_rules)
+    linked = (link_provider or link)(events, args)
     rolled = assign_roles(linked, provider=role_provider,
                           route=role_route, canon=role_canon)
 

@@ -869,16 +869,17 @@ def q25_event_coref(spark, sf_dir):
     SQL-expressible (iterative average-linkage clustering)."""
     from .functions.text import extract_pubdate_raw
     from .operators.coref import cluster_events
-    from .operators.linking import extract_arguments, extract_events, link
+    from .operators.linking import extract_spans, link, spans_of
     from .operators.roles import assign_roles
     from .pipeline import doc_key, tagged_tokens
     from .sources.documents import synth_documents
-    from .util import materialize
+    from .util import truncate
 
     docs = synth_documents(spark, 200)
-    tagged = tagged_tokens(docs, id_col="url", mode="rules")
-    events = materialize(extract_events(tagged, carry=["realis"]))
-    linked = assign_roles(link(events, extract_arguments(tagged, carry=["role"]), tagged))
+    spans = truncate(extract_spans(tagged_tokens(docs, id_col="url",
+                                                 mode="rules")))
+    events = spans_of(spans, "event")
+    linked = assign_roles(link(events, spans_of(spans, "argument")))
     pubdates = docs.select(
         doc_key(F.col("url")).alias("doc_id"),
         extract_pubdate_raw(F.col("html").cast("string")).alias("pubdate"),
@@ -2054,7 +2055,7 @@ def _token_shards_oracle() -> str:
         WITH base AS (
             SELECT doc_id,
                    CAST(len(list_filter(
-                       regexp_split_to_array(text, '\\s+'),
+                       regexp_split_to_array(coalesce(text, ''), '\\s+'),
                        x -> x <> '')) AS BIGINT) AS n_tokens,
                    {h16} % 8 AS shard,
                    md5(CAST(doc_id AS VARCHAR)) AS h
@@ -2253,10 +2254,11 @@ def _pack_sequences_oracle(seq_len: int = 256, n_shards: int = 8) -> str:
             FROM pos
         )
         SELECT shard, seq, doc_id,
-               greatest(p0, seq * {L}) - p0 AS doc_offset,
-               least(p0 + nt, (seq + 1) * {L})
-                 - greatest(p0, seq * {L}) AS seg_len,
-               greatest(p0, seq * {L}) - seq * {L} AS seq_offset
+               CAST(greatest(p0, seq * {L}) - p0 AS BIGINT) AS doc_offset,
+               CAST(least(p0 + nt, (seq + 1) * {L})
+                    - greatest(p0, seq * {L}) AS BIGINT) AS seg_len,
+               CAST(greatest(p0, seq * {L}) - seq * {L} AS BIGINT)
+                 AS seq_offset
         FROM spanned
     """
 
@@ -2296,7 +2298,7 @@ def _dsir_oracle() -> str:
             FROM stats, tot
         )
         SELECT bk.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-               round(sum(lr)/count(*), 4) AS logratio,
+               round(sum(lr)/count(*), 4) + 0.0 AS logratio,
                round(sum(lr)/count(*), 4) >= 0.0 AS keep
         FROM bk JOIN scores USING (b)
         GROUP BY bk.doc_id
@@ -3333,9 +3335,9 @@ def oracle_sql(sf_dir: str = "") -> dict[str, str]:
             SELECT (('0x' || substring(md5(doc_id::varchar), 1, 4))::int
                     % 8) AS shard,
                    count(*) AS n_docs,
-                   sum(('0x' || substring(
+                   CAST(sum(('0x' || substring(
                         md5(doc_id::varchar || '|' || md5(text)),
-                        1, 8))::bigint) AS content_checksum
+                        1, 8))::bigint) AS BIGINT) AS content_checksum
             FROM documents GROUP BY 1
         """,
         "q64_weighted_sample": """

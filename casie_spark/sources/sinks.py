@@ -30,7 +30,7 @@ from ..util import cache_lazy, track_persists, truncate
 from ..operators.canonicalize import canonicalize_surfaces, default_dictionary
 from ..operators.coref import cluster_events
 from ..pipeline import restore_urls, tagged_tokens
-from ..operators.linking import extract_arguments, extract_events, link
+from ..operators.linking import extract_spans, link, spans_of
 from ..operators.roles import assign_roles
 
 
@@ -46,13 +46,14 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
     # truncate (not persist) at the graph path's barriers: the coref +
     # canonicalization layers below reference these repeatedly and the
     # combined lineage otherwise grows beyond what the driver can even
-    # render (see util.truncate)
-    events = truncate(extract_events(tagged, carry=["realis"]))
-    args = extract_arguments(tagged, carry=["role"])
-    linked = assign_roles(link(events, args, tagged))
+    # render (see util.truncate).  The span pass is the token stream's
+    # one reader; events and args are projections of its leaf.
+    spans = truncate(extract_spans(tagged))
+    events = spans_of(spans, "event")
+    linked = assign_roles(link(events, spans_of(spans, "argument")))
 
     # graph edges carry the real document id, restored at the event
-    # level; events has one consumer left (cluster_events), so no barrier
+    # level; events re-reads the spans leaf, so it takes no barrier
     events = restore_urls(events, documents, id_col)
     linked = truncate(restore_urls(linked, documents, id_col))
 

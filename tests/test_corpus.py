@@ -126,6 +126,22 @@ def test_pack_token_shards_invariants(spark):
     assert again == {(r["doc_id"], r["shard"], r["bin"]) for r in got}
 
 
+def test_pack_token_shards_null_text_counts_zero(spark):
+    """A null text holds 0 tokens and gets a bin, exactly like an
+    empty text (a null count would leave the document unbinned)."""
+    from casie_spark.corpus import pack_token_shards
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "a b c"), (4, "d e")],
+        "doc_id long, text string")
+    got = {r["doc_id"]: (r["n_tokens"], r["bin"])
+           for r in pack_token_shards(docs, budget_tokens=2,
+                                      n_shards=1).collect()}
+    assert got[1][0] == 0 and got[2][0] == 0, got
+    assert all(b is not None for _, b in got.values()), got
+    assert sorted(n for n, _ in got.values()) == [0, 0, 2, 3]
+
+
 def test_prepare_training_corpus_line_dedup_stage(spark):
     """The optional 3b stage: a boilerplate line repeated across docs
     survives once (smallest doc), runs after exact dedup and BEFORE the

@@ -40,10 +40,10 @@ def test_build_and_write_graph(spark, tmp_path):
 
 def test_graph_path_job_budget(spark, tmp_path):
     """build_graph + write_graph on 40 pages stays inside a Spark job
-    budget (one banded LSH self-join, the convergence count riding the
-    components barrier, edges cached for both writes, no linking
-    barrier), writes what it built, and renders every output plan
-    below maxPlanStringLength."""
+    budget (one span-pass barrier under linking, one banded LSH
+    self-join, the convergence count riding the components barrier,
+    edges cached for both writes), writes what it built, and renders
+    every output plan below maxPlanStringLength."""
     docs = synth_documents(spark, 40).persist()
     docs.count()
     out = str(tmp_path / "graph")
@@ -61,7 +61,7 @@ def test_graph_path_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         docs.unpersist()
-    assert jobs <= 75, jobs
+    assert jobs <= 67, jobs
 
     e = spark.read.parquet(out + "/edges")
     v = spark.read.parquet(out + "/vertices")
@@ -78,30 +78,55 @@ def test_graph_path_job_budget(spark, tmp_path):
         assert len(plan) < cap
 
 
-# (mode, job budget, triple count, fingerprint) of run_pipeline on
-# synth_documents(spark, 60).  Both modes pay the tagged materialize
-# and the events truncate and nothing else: realis and roles score in
-# place, and both linkers pick from one candidate pool with no barrier
-# and no join back to the token stream.
+# (mode, job budget, explain budget in KB, triple count, fingerprint)
+# of run_pipeline on synth_documents(spark, 60).  Both modes pay one
+# barrier, the span pass's truncate, and nothing else: the token stream
+# has no other reader, realis and roles score in place, and both
+# linkers pick from one candidate pool with no join back to the tokens.
 PIPELINE_BUDGET = [
-    ("rules", 21, 1041, 31849073561061079936),
-    ("model", 21, 800, 89110571212820113369),
+    ("rules", 15, 150, 1041, 31849073561061079936),
+    ("model", 14, 300, 800, 89110571212820113369),
 ]
 
 
-def test_pipeline_job_budget(spark):
+def _count_barriers(monkeypatch) -> list[str]:
+    """Record every util.materialize / util.truncate call, wherever a
+    casie_spark module bound the name."""
+    import sys
+
+    from casie_spark import util
+
+    calls: list[str] = []
+    for name in ("materialize", "truncate"):
+        fn = getattr(util, name)
+
+        def counted(df, _fn=fn, _name=name):
+            calls.append(_name)
+            return _fn(df)
+
+        for mod_name, mod in list(sys.modules.items()):
+            if mod_name.startswith("casie_spark") and \
+                    getattr(mod, name, None) is fn:
+                monkeypatch.setattr(mod, name, counted)
+    return calls
+
+
+def test_pipeline_job_budget(spark, monkeypatch):
     """run_pipeline on 60 pages, plus one aggregate over its triples,
-    stays inside a Spark job budget per mode, returns the recorded
-    triples (count and sum(xxhash64(TRIPLE_COLUMNS))), and renders its
-    output plan below maxPlanStringLength."""
+    runs one barrier and stays inside a Spark job budget per mode,
+    returns the recorded triples (count and
+    sum(xxhash64(TRIPLE_COLUMNS))), and renders its output plan inside
+    an explain budget (far below maxPlanStringLength)."""
     docs = synth_documents(spark, 60).persist()
     docs.count()
     sc = spark.sparkContext
     cap = int(spark.conf.get("spark.sql.maxPlanStringLength"))
+    barriers = _count_barriers(monkeypatch)
     try:
-        for mode, budget, rows, fp in PIPELINE_BUDGET:
+        for mode, budget, plan_kb, rows, fp in PIPELINE_BUDGET:
             group = f"pipeline_job_budget_{mode}"
             sc.setJobGroup(group, group)
+            barriers.clear()
             with track_persists():
                 triples = run_pipeline(docs, mode=mode)
                 got = triples.agg(
@@ -110,11 +135,12 @@ def test_pipeline_job_budget(spark):
                     .alias("fp")).collect()[0]
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             sc.setLocalProperty("spark.jobGroup.id", None)
+            assert barriers == ["truncate"], (mode, barriers)
             assert jobs <= budget, (mode, jobs)
             assert (got["rows"], int(got["fp"])) == (rows, fp), mode
             plan = triples._sc._jvm.PythonSQLUtils.explainString(
                 triples._jdf.queryExecution(), "extended")
-            assert len(plan) < cap, (mode, len(plan))
+            assert len(plan) < min(plan_kb * 1024, cap), (mode, len(plan))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         docs.unpersist()

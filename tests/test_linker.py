@@ -117,12 +117,12 @@ def toy(spark):
 
     ev = extract_events(tagged)
     ar = extract_arguments(tagged)
-    return tagged, ev, ar
+    return ev, ar
 
 
 def test_candidate_frame_features(toy):
-    tagged, ev, ar = toy
-    cand = candidate_frame(ev, ar, tagged)
+    ev, ar = toy
+    cand = candidate_frame(ev, ar)
     rows = {(r["arg_text"], r["event_text"]): r for r in cand.collect()}
     # "data" (begin 14) vs "stole" (8) and "leaked" (26): both same-sent
     r1 = rows[("data", "stole")]
@@ -140,14 +140,14 @@ def test_candidate_frame_features(toy):
 
 
 def test_link_trained_deterministic_and_contract(toy):
-    tagged, ev, ar = toy
-    a = link_trained(ev, ar, tagged)
+    ev, ar = toy
+    a = link_trained(ev, ar)
     cols = set(a.columns)
     assert {"doc_id", "event_id", "subtype", "event_text", "event_begin",
             "arg_id", "arg_type", "arg_text", "arg_begin",
             "arg_sent"} <= cols
     rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, link_trained(ev, ar, tagged).collect()))
+    rows_b = sorted(map(tuple, link_trained(ev, ar).collect()))
     assert rows_a == rows_b
     # every argument attaches exactly once
     n_args = ar.count()
@@ -157,14 +157,14 @@ def test_link_trained_deterministic_and_contract(toy):
 def test_link_trained_falls_back_without_artifact(toy, tmp_path):
     """weights=None + missing artifact path -> reference rule cascade
     (linking.link) — same rows."""
-    tagged, ev, ar = toy
+    ev, ar = toy
     from casie_spark.operators import linker
     from casie_spark.operators.linking import link
 
     missing = str(tmp_path / "nope.npz")
     assert linker.load_linker_weights(missing) is None
-    got = link_trained(ev, ar, tagged, weights=None)
-    want = link(ev, ar, tagged)
+    got = link_trained(ev, ar, weights=None)
+    want = link(ev, ar)
     assert sorted(map(tuple, got.select(*want.columns).collect())) == \
         sorted(map(tuple, want.collect()))
 
@@ -182,10 +182,10 @@ def test_jvm_scorer_parity(toy):
         with_score_jvm,
     )
 
-    tagged, ev, ar = toy
+    ev, ar = toy
     w = load_linker_weights()
     assert w is not None
-    cand = candidate_frame(ev, ar, tagged)
+    cand = candidate_frame(ev, ar)
     got = with_score_jvm(cand, w).select(
         "arg_id", "event_id", "link_score", "pair_idx", "l1", "l2",
         "d", "absd", "same_sent", "nearest", "first_ev", "n_cand",

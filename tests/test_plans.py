@@ -42,10 +42,17 @@ def test_window_reuses_partitioning(spark, sf_dir):
     assert plan.count("Exchange") == 1
 
 
+def _doc_exchanges(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines()
+            if "Exchange hashpartitioning(doc_id" in ln]
+
+
 def test_pipeline_single_token_shuffle(spark):
     """The tagging DAG after the doc_id repartition must not re-shuffle
     the token stream: windows in tag_rules/apply_rules all cluster by
-    doc_id (subset rule)."""
+    doc_id (subset rule) — and neither does the span pass on top of
+    it."""
+    from casie_spark.operators.linking import extract_spans
     from casie_spark.operators.tagging import tag_rules
     from casie_spark.operators.rules import apply_rules
     from casie_spark.operators.tokenizer import tokenize
@@ -56,26 +63,25 @@ def test_pipeline_single_token_shuffle(spark):
         "url string, text string")
     toks = tokenize(docs, id_col="url").repartition(F.col("doc_id"))
     tagged = apply_rules(tag_rules(toks))
-    plan = _plan(tagged)
     # exactly ONE token-stream exchange (the explicit doc_id
     # repartition); further hash exchanges in the plan belong to the
     # ~1800-row lexicon build, and broadcasts don't repartition the
     # stream.  Every window (doc_id), (doc_id,sent_id), (doc_id,_trig)
-    # rides the same partitioning via the clustering subset rule.
-    doc_exchanges = [
-        ln for ln in plan.splitlines()
-        if "Exchange hashpartitioning(doc_id" in ln
-    ]
-    assert len(doc_exchanges) == 1, doc_exchanges
+    # rides the same partitioning via the clustering subset rule, and
+    # so do the span pass's windows and its (doc_id, kind, span)
+    # aggregate.
+    for df in (tagged, extract_spans(tagged)):
+        assert len(_doc_exchanges(_plan(df))) == 1, _plan(df)
 
 
 def test_model_pipeline_single_token_shuffle(spark):
     """Same invariant for mode='model': the scalar-pandas_udf inference
     expression preserves attribute ids, so the context lag/lead, the
-    inference, the BIO assembly and the dominant-trigger window all
-    ride the one explicit doc_id exchange — in particular no
+    inference, the BIO assembly, the dominant-trigger window and the
+    span pass all ride the one explicit doc_id exchange — in particular no
     groupBy+join-back histogram (which would add an exchange AND
     broadcast a per-doc frame)."""
+    from casie_spark.operators.linking import extract_spans
     from casie_spark.operators.model_tagger import tag_model
     from casie_spark.operators.rules import apply_rules
     from casie_spark.operators.tokenizer import tokenize
@@ -88,14 +94,14 @@ def test_model_pipeline_single_token_shuffle(spark):
     # inference runs pre-exchange; tag_model owns the one repartition
     toks = tokenize(docs, id_col="url", context=True)
     tagged = apply_rules(tag_model(toks))
-    plan = _plan(tagged)
-    doc_exchanges = [
-        ln for ln in plan.splitlines()
-        if "Exchange hashpartitioning(doc_id" in ln
-    ]
-    assert len(doc_exchanges) == 1, doc_exchanges
-    # no per-doc frame is broadcast anywhere in the tagging DAG
-    assert "BroadcastExchange" not in plan, "per-doc broadcast crept back in"
+    # the context span pass (edge-repair neighbors, realis window,
+    # sentence arrays) rides the same exchange
+    for df in (tagged, extract_spans(tagged, context=True)):
+        plan = _plan(df)
+        assert len(_doc_exchanges(plan)) == 1, plan
+        # no per-doc frame is broadcast anywhere in the tagging DAG
+        assert "BroadcastExchange" not in plan, \
+            "per-doc broadcast crept back in"
 
 
 def test_minhash_single_subtree(spark, sf_dir):
