@@ -1,18 +1,20 @@
-"""Argument begin-repair stage (mode=model): snap predicted argument
-span BEGINs onto the gold annotation convention.
+"""Edge-repair stage (mode=model): snap predicted argument and trigger
+span edges onto the gold annotation convention.
 
 The reference's BiLSTM-CRF span decoder learns the corpus' left-edge
 convention (include the determiner of the NP: nug_arg_detection.py
 trains on the gold BIO tags directly); the averaged-perceptron
 substitute under-includes it, costing ~9 points of exact-begin recall
 while the span itself is found (see train_begin.py for the measured
-decomposition).  This stage recovers the edge with a trained 4-class
-shift head over surface context on the EVENT/ARG-scale args frame:
-feature ids are JVM crc32/shape expressions (no strings reach Python,
-no Python hashing), one slim pandas_udf per span frame turns the int
-ids into shifts, and all edits are JVM expressions.  No token-stream
-work: the neighbor context rides the one span pass
-(``linking.extract_spans``) on the existing doc_id exchange.
+decomposition).  This stage recovers the edge with trained 4-class
+shift heads over surface context on the EVENT/ARG-scale span frames:
+a begin head and a mirrored end head per span kind.  Feature ids are
+JVM crc32/shape expressions (no strings reach Python, no Python
+hashing), one slim pandas_udf per span frame turns the int ids into
+shifts, and all edits are JVM expressions.  :func:`repair_edges` is
+the one entry point (``pipeline.span_frames`` calls it per span
+kind).  No token-stream work: the neighbor context rides the one span
+pass (``linking.extract_spans``) on the existing doc_id exchange.
 
 Only mode=model pipelines run it; rules/gold modes keep byte parity
 with the model-free reference semantics.
@@ -44,11 +46,11 @@ BEGIN_ARTIFACT = os.path.join(
 )
 
 # span-pass context read at a span's FIRST token, {column: token-level
-# column} (consumed and dropped by repair_begins) ...
+# column} (consumed and dropped by the begin head of repair_edges) ...
 _START_CARRY = {"_tok": "token", "_p1": "_p1", "_p1b": "_p1b",
                 "_p2": "_p2", "_p2b": "_p2b", "_nx": "_nx", "_nxb": "_nxb"}
 _CTX_COLS = tuple(_START_CARRY)
-# ... and at its LAST token (consumed and dropped by repair_ends): the
+# ... and at its LAST token (consumed and dropped by the end head): the
 # last token, the two following ones and the one before it
 _END_CARRY = {"_ltok": "token", "_ln1": "_nx", "_ln1b": "_nxb",
               "_ln2": "_n2", "_ln2b": "_n2b",
@@ -131,60 +133,50 @@ def _edge_id_cols(label_col: str, t0: str, p1: str, p2: str, nx: str
     }
 
 
-def _with_shifts_jvm(df: DataFrame, begin_t: dict, end_t: dict | None,
-                     label_col: str, begin_cols: tuple, end_cols: tuple,
-                     b_shifts, e_shifts) -> DataFrame:
-    """Append _shb (and _she when ``end_t``) = predicted edge shifts.
+def _with_shifts_jvm(df: DataFrame, heads: list, label_col: str
+                     ) -> DataFrame:
+    """Append one predicted edge-shift column per head in ``heads``, a
+    list of (tables, context columns (t0, p1, p2, nx), shift classes,
+    output column).
 
-    Hybrid design, each alternative measured (r5): the 10 (or 20)
-    hashed feature ids are JVM crc32/shape expressions — no strings
+    Hybrid design, each alternative measured (r5): the 10 hashed
+    feature ids per head are JVM crc32/shape expressions — no strings
     ever reach Python and no Python hashing runs — and ONE slim
-    pandas_udf per span frame turns the int ids into shifts (numpy
-    table gathers + argmax over the broadcast weights, float64 in
-    _KEYS order — bit-identical to the trainer's scorer).  The two
-    pure-JVM alternatives lose: one broadcast join per table costs
-    ~20 AQE broadcast stages of scheduling latency (5.0 s vs this
-    design's ~1 s standalone), and stack+single-join+sum-agg pays a
-    span-scale join-back plus a 20x explode (5.2 s).  The id columns
-    are int64 — the Arrow round-trip ships 20 ints per span instead
-    of 9 strings, and the UDF body is pure gathers."""
+    pandas_udf per span frame turns the int ids of every head into
+    shifts (numpy table gathers + argmax over the broadcast weights,
+    float64 in _KEYS order — bit-identical to the trainer's scorer).
+    The two pure-JVM alternatives lose: one broadcast join per table
+    costs ~20 AQE broadcast stages of scheduling latency (5.0 s vs
+    this design's ~1 s standalone), and stack+single-join+sum-agg pays
+    a span-scale join-back plus a 20x explode (5.2 s).  The id columns
+    are int64 — the Arrow round-trip ships 20 ints per span instead of
+    9 strings, and the UDF body is pure gathers."""
     from pyspark.sql.functions import pandas_udf
 
     from .perceptron import gather_logits
     from .train_begin import _KEYS
 
-    ids_b = _edge_id_cols(label_col, *begin_cols)
-    id_exprs = [ids_b[k] for k in _KEYS]
-    if end_t is not None:
-        ids_e = _edge_id_cols(label_col, *end_cols)
-        id_exprs += [ids_e[k] for k in _KEYS]
+    id_exprs = []
+    for _, cols, _, _ in heads:
+        ids = _edge_id_cols(label_col, *cols)
+        id_exprs += [ids[k] for k in _KEYS]
+    bc = df.sparkSession.sparkContext.broadcast(
+        [(tables, shifts) for tables, _, shifts, _ in heads])
+    names = [name for *_, name in heads]
+    n = len(_KEYS)
 
-    bc = df.sparkSession.sparkContext.broadcast((begin_t, end_t))
-    fused = end_t is not None
-
-    @pandas_udf("int")
-    def _shift_ids(*id_cols: pd.Series) -> pd.Series:
-        bw, ew = bc.value
+    @pandas_udf(", ".join(f"{name} int" for name in names))
+    def _shift_ids(*id_cols: pd.Series) -> pd.DataFrame:
         ids = [c.to_numpy() for c in id_cols]
-        lb = gather_logits(bw, dict(zip(_KEYS, ids)), _KEYS, np.float64)
-        b_sh = np.asarray(b_shifts, np.int32)[lb.argmax(axis=1)]
-        if not fused:
-            return pd.Series(b_sh)
-        le = gather_logits(ew, dict(zip(_KEYS, ids[len(_KEYS):])), _KEYS,
-                           np.float64)
-        e_sh = np.asarray(e_shifts, np.int32)[le.argmax(axis=1)]
-        # pack: (begin_shift + 2) * 8 + (end_shift + 1), both in-range
-        return pd.Series((b_sh + 2) * 8 + (e_sh + 1))
+        out = {}
+        for h, (name, (tables, shifts)) in enumerate(zip(names, bc.value)):
+            logits = gather_logits(tables, dict(zip(_KEYS, ids[h * n:])),
+                                   _KEYS, np.float64)
+            out[name] = np.asarray(shifts, np.int32)[logits.argmax(axis=1)]
+        return pd.DataFrame(out)
 
-    out = _shift_ids(*id_exprs)
-    if not fused:
-        return df.withColumn("_shb", out)
-    return (
-        df.withColumn("_pk", out)
-        .withColumn("_shb", F.expr("_pk div 8") - 2)
-        .withColumn("_she", F.expr("pmod(_pk, 8)") - 1)
-        .drop("_pk")
-    )
+    return (df.withColumn("_shifts", _shift_ids(*id_exprs))
+            .select("*", "_shifts.*").drop("_shifts"))
 
 
 def parse_begin_weights(arrays):
@@ -241,44 +233,15 @@ def events_with_context(tagged: DataFrame) -> DataFrame:
     return spans_of(extract_spans(tagged, context=True), "event")
 
 
-def repair_begins(args: DataFrame, weights,
-                  label_col: str = "arg_type") -> DataFrame:
-    """Apply a trained shift head to a span frame produced by
-    arguments_with_context() / events_with_context() (``label_col``:
-    "arg_type" for argument spans, "subtype" for trigger spans).
-    Adjusts begin / text / first_token_id / n_tokens; end is untouched
-    (begin-only repair).  Predicted shifts whose target is unavailable
-    (sentence edge, single-token span for +1) fall back to keep-as-is.
-    Rebuilt text pads inter-token gaps with spaces — begins/ends stay
-    exact (they come from the token stream), only non-space whitespace
-    inside the gap is approximated.  Drops the context columns.
-
-    Overlap behavior (r4 ADVICE, MEASURED r5): a left shift may absorb
-    the I- tail of the PRECEDING predicted span, so two repaired spans
-    can overlap.  A guard that suppressed those shifts was built and
-    measured head-on: it was slightly WORSE everywhere — exact-(begin,
-    end) F1 nugget 0.789 -> 0.783, argument 0.796 -> 0.785 — because
-    the blocked shifts were mostly CORRECT repairs whose neighbor tag
-    was itself a tagging error (receipts in BASELINE.md)."""
-    if weights is None:
-        return args.drop(*_CTX_COLS)
-    df = _with_shifts_jvm(args, weights, None, label_col,
-                          ("_tok", "_p1", "_p2", "_nx"), (),
-                          SHIFTS, None)
-    df = df.withColumnRenamed("_shb", "_sh")
-    return _apply_begin(df).drop(*_CTX_COLS)
-
-
-def _apply_begin(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
-    """JVM-side begin edits for a predicted shift column: guard
-    unavailable targets to keep-as-is, then rewrite text / begin /
-    first_token_id / n_tokens.  Shared by repair_begins and the fused
-    repair_edges."""
-    sh = F.col(shift_col)
+def _apply_begin(df: DataFrame) -> DataFrame:
+    """JVM-side begin edits for the predicted begin shift ``_shb``:
+    guard unavailable targets to keep-as-is, then rewrite text / begin
+    / first_token_id / n_tokens."""
+    sh = F.col("_shb")
 
     # guard: fall back to 0 when the shift target does not exist
     df = df.withColumn(
-        shift_col,
+        "_shb",
         F.when((sh == -1) & F.col("_p1b").isNotNull(), -1)
         .when((sh == -2) & F.col("_p2b").isNotNull()
               & F.col("_p1b").isNotNull(), -2)
@@ -305,42 +268,20 @@ def _apply_begin(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
         .withColumn("begin", new_begin)
         .withColumn("first_token_id", F.col("first_token_id") + sh)
         .withColumn("n_tokens", F.col("n_tokens") - sh)
-        .drop(shift_col)
+        .drop("_shb")
     )
 
 
-def repair_ends(args: DataFrame, weights,
-                label_col: str = "arg_type") -> DataFrame:
-    """Right-edge twin of :func:`repair_begins` (r3 VERDICT next #5):
-    a trained 4-class END_SHIFTS head snaps span ENDs onto the gold
-    right-edge convention.  Consumes the last-token context columns
-    (_ltok/_ln1/_ln2/_lp1 + begins) and adjusts end / text / n_tokens;
-    begin and first_token_id are untouched.  Runs AFTER repair_begins
-    (n_tokens guards see the begin-adjusted count).  The feature
-    contract is the mirrored begin featurizer: t0=last token,
-    p1=adjacent-outside (_ln1), p2=outside-2 (_ln2),
-    nx=adjacent-inside (_lp1) — so train_begin's trainer fits both
-    edges unchanged."""
-    if weights is None:
-        return args.drop(*_END_CTX_COLS)
-    df = _with_shifts_jvm(args, weights, None, label_col,
-                          ("_ltok", "_ln1", "_ln2", "_lp1"), (),
-                          END_SHIFTS, None)
-    df = df.withColumnRenamed("_shb", "_sh")
-    return _apply_end(df).drop(*_END_CTX_COLS)
-
-
-def _apply_end(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
-    """JVM-side end edits for a predicted end-shift column (guard +
-    rewrite text / end / n_tokens).  Reads `begin` and `n_tokens`
-    from the frame, so when composed after :func:`_apply_begin` the
-    guards and substring arithmetic see the begin-adjusted values —
-    exactly the sequential repair_begins |> repair_ends semantics."""
-    sh = F.col(shift_col)
+def _apply_end(df: DataFrame) -> DataFrame:
+    """JVM-side end edits for the predicted end shift ``_she`` (guard +
+    rewrite text / end / n_tokens).  Reads ``begin`` and ``n_tokens``
+    from the frame, so after :func:`_apply_begin` the guards and the
+    substring arithmetic see the begin-adjusted values."""
+    sh = F.col("_she")
 
     # guard: keep-as-is when the shift target does not exist
     df = df.withColumn(
-        shift_col,
+        "_she",
         F.when((sh == 1) & F.col("_ln1b").isNotNull(), 1)
         .when((sh == 2) & F.col("_ln1b").isNotNull()
               & F.col("_ln2b").isNotNull(), 2)
@@ -369,35 +310,54 @@ def _apply_end(df: DataFrame, shift_col: str = "_sh") -> DataFrame:
         df.withColumn("text", new_text)
         .withColumn("end", new_end)
         .withColumn("n_tokens", F.col("n_tokens") + sh)
-        .drop(shift_col)
+        .drop("_she")
     )
 
 
-def repair_edges(args: DataFrame, begin_w, end_w,
+def repair_edges(spans: DataFrame, begin_w, end_w,
                  label_col: str = "arg_type") -> DataFrame:
-    """Fused begin+end repair: both edge heads are scored on one frame
-    — the end head's features (last-token context columns) are
-    untouched by the begin edit, so both shifts can be predicted
-    before either edit applies; only the *guards* are order-sensitive
-    and those are applied sequentially (_apply_begin then _apply_end),
-    reproducing repair_begins |> repair_ends bit-for-bit.
+    """Snap span edges onto the gold convention: the begin head
+    (``begin_w``, SHIFTS classes over the first-token context) and the
+    end head (``end_w``, END_SHIFTS classes over the mirrored
+    last-token context: t0 = last token, p1 = adjacent-outside _ln1,
+    p2 = outside-2 _ln2, nx = adjacent-inside _lp1, so train_begin
+    fits both edges with one trainer).  ``spans`` is a span frame with
+    the edge context (``extract_spans(..., context=True)``);
+    ``label_col`` is "arg_type" for argument spans and "subtype" for
+    trigger spans.  A head whose tables are None does not run.
 
-    r5: feature hashing is JVM-side (_with_shifts_jvm — crc32/shape
-    id expressions), and one slim int-only pandas_udf per span frame
-    does the table gathers + argmax: no strings cross the Arrow
-    boundary and no Python hashing runs.  Bit-identical to the Python
-    scorer (test_begin_repair differential gate; the full-corpus edge
-    audit regenerates artifacts/edge_audit.json byte-for-byte)."""
-    if begin_w is None and end_w is None:
-        return args.drop(*_CTX_COLS, *_END_CTX_COLS)
-    if end_w is None:
-        return repair_begins(args, begin_w, label_col) \
-            .drop(*_END_CTX_COLS)
-    if begin_w is None:
-        return repair_ends(args.drop(*_CTX_COLS), end_w, label_col)
-    df = _with_shifts_jvm(args, begin_w, end_w, label_col,
-                          ("_tok", "_p1", "_p2", "_nx"),
-                          ("_ltok", "_ln1", "_ln2", "_lp1"),
-                          SHIFTS, END_SHIFTS)
-    df = _apply_begin(df, "_shb").drop(*_CTX_COLS)
-    return _apply_end(df, "_she").drop(*_END_CTX_COLS)
+    One pandas_udf scores whichever heads are present
+    (:func:`_with_shifts_jvm`): the end head's features are untouched
+    by the begin edit, so both shifts are predicted before either edit
+    applies.  Only the guards are order-sensitive, and they apply
+    begin then end.  A predicted shift whose target is unavailable
+    (sentence edge; a single-token span for begin +1 / end -1) falls
+    back to keep-as-is.  Rebuilt text pads inter-token gaps with
+    spaces — begins/ends stay exact (they come from the token stream),
+    only non-space whitespace inside the gap is approximated.  Each
+    head drops its own context columns, so a begin-only repair keeps
+    the end context an end head trains on (train_begin).
+
+    Overlap behavior (r4 ADVICE, MEASURED r5): a left shift may absorb
+    the I- tail of the PRECEDING predicted span, so two repaired spans
+    can overlap.  A guard that suppressed those shifts was built and
+    measured head-on: it was slightly WORSE everywhere — exact-(begin,
+    end) F1 nugget 0.789 -> 0.783, argument 0.796 -> 0.785 — because
+    the blocked shifts were mostly CORRECT repairs whose neighbor tag
+    was itself a tagging error (receipts in BASELINE.md).
+
+    Bit-identical to the Python scorer (test_begin_repair differential
+    gate; the full-corpus edge audit regenerates
+    artifacts/edge_audit.json byte-for-byte)."""
+    heads = [head for head in (
+        (begin_w, ("_tok", "_p1", "_p2", "_nx"), SHIFTS, "_shb"),
+        (end_w, ("_ltok", "_ln1", "_ln2", "_lp1"), END_SHIFTS, "_she"),
+    ) if head[0] is not None]
+    if not heads:
+        return spans
+    df = _with_shifts_jvm(spans, heads, label_col)
+    if begin_w is not None:
+        df = _apply_begin(df).drop(*_CTX_COLS)
+    if end_w is not None:
+        df = _apply_end(df).drop(*_END_CTX_COLS)
+    return df

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import hash16
+from .similarity import cosine
 
 # ---------------------------------------------------------------------------
 # exact
@@ -529,21 +530,6 @@ def decontaminate(train: DataFrame, eval_set: DataFrame, k: int = 8,
 
 
 # ---------------------------------------------------------------------------
-# embedding cosine primitives
-# ---------------------------------------------------------------------------
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-# ---------------------------------------------------------------------------
 # embedding near-dup
 # ---------------------------------------------------------------------------
 
@@ -556,8 +542,7 @@ def embedding_neardup(emb: DataFrame, threshold: float = 0.4,
     a = emb.select(F.col(id_col).alias("doc_a"), F.col(vec_col).alias("va"))
     b = emb.select(F.col(id_col).alias("doc_b"), F.col(vec_col).alias("vb"))
     j = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
-    sim = F.round(_dot(F.col("va"), F.col("vb"))
-                  / (_norm(F.col("va")) * _norm(F.col("vb"))), 4)
+    sim = F.round(cosine(F.col("va"), F.col("vb")), 4)
     return (
         j.withColumn("sim", sim)
         .filter(F.col("sim") >= threshold)

@@ -504,10 +504,9 @@ def tag_model(tokens: DataFrame, weights: TaggerWeights | None = None,
     # trailing incomplete sentence into the next batch — predictions
     # are bit-for-bit independent of batching and partitioning.
     # Sentence context (prev/next token) is derived from the sentence
-    # rows themselves; tokenizer context columns are no longer needed.
-    src = tokens.drop("_ptok", "_ntok")
+    # rows themselves.
     out_schema = T.StructType(
-        list(src.schema.fields)
+        list(tokens.schema.fields)
         + [T.StructField("_m_trig", T.StringType()),
            T.StructField("_m_arg", T.StringType())]
     )
@@ -576,7 +575,7 @@ def tag_model(tokens: DataFrame, weights: TaggerWeights | None = None,
         if carry is not None and len(carry):
             yield _block(carry)
 
-    df = src.mapInPandas(decode_stream, schema=out_schema)
+    df = tokens.mapInPandas(decode_stream, schema=out_schema)
     df = df.repartition(F.col("doc_id"))
 
     # JVM-side shape/regex argument classes + BIO assembly (shared

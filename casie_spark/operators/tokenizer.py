@@ -68,26 +68,14 @@ def tokenize_text(text: str) -> list[tuple[int, int, str, int, int]]:
 
 
 def tokenize(documents: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text", id_type: str = "string",
-             context: bool = False) -> DataFrame:
-    """documents -> tokens(doc_id, sent_id, token_id, token, begin, end
-    [, _ptok, _ntok]).
+             text_col: str = "text", id_type: str = "string") -> DataFrame:
+    """documents -> tokens(doc_id, sent_id, token_id, token, begin, end).
 
     Column-pruned before the UDF so Arrow only ships (id, text).
     ``id_type='long'`` keeps a numeric key numeric — the pipeline hashes
     urls to 8-byte keys so every downstream sort/shuffle compares longs,
     not ~30-char url strings (a 2x memory-bandwidth saving on the token
     stream's window sorts at scale).
-
-    ``context=True`` additionally emits the sentence-scoped previous /
-    next token (null at sentence edges).  Computing them HERE is free —
-    the tokenizer already walks each sentence in order inside one
-    Python pass — whereas computing them downstream needs lag/lead
-    windows, i.e. a full token-stream exchange.  The model tagger's
-    inference expression consumes these so it can run entirely BEFORE
-    the pipeline's doc_id exchange (Python-eval plan nodes do not
-    propagate partitioning info, so anything a window needs must be on
-    the pre-exchange side of them).
     """
     pruned = documents.selectExpr(
         f"cast({id_col} as {id_type}) as doc_id", f"{text_col} as text"
@@ -101,9 +89,6 @@ def tokenize(documents: DataFrame, id_col: str = "doc_id",
         "begin": pd.Series(dtype="int64"),
         "end": pd.Series(dtype="int64"),
     }
-    if context:
-        empty_cols["_ptok"] = pd.Series(dtype="object")
-        empty_cols["_ntok"] = pd.Series(dtype="object")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -116,23 +101,9 @@ def tokenize(documents: DataFrame, id_col: str = "doc_id",
                 yield pd.DataFrame(empty_cols)
                 continue
             sent, tok, txt, b, e = zip(*rows)
-            out = {"doc_id": rows_id, "sent_id": sent, "token_id": tok,
-                   "token": txt, "begin": b, "end": e}
-            if context:
-                n = len(txt)
-                out["_ptok"] = [
-                    txt[i - 1] if i > 0 and rows_id[i - 1] == rows_id[i]
-                    and sent[i - 1] == sent[i] else None
-                    for i in range(n)
-                ]
-                out["_ntok"] = [
-                    txt[i + 1] if i + 1 < n and rows_id[i + 1] == rows_id[i]
-                    and sent[i + 1] == sent[i] else None
-                    for i in range(n)
-                ]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({"doc_id": rows_id, "sent_id": sent,
+                                "token_id": tok, "token": txt, "begin": b,
+                                "end": e})
 
-    schema = TOKENS_SCHEMA_TMPL.format(id_type=id_type)
-    if context:
-        schema += ", _ptok string, _ntok string"
-    return pruned.mapInPandas(run, schema=schema)
+    return pruned.mapInPandas(run,
+                              schema=TOKENS_SCHEMA_TMPL.format(id_type=id_type))

@@ -99,9 +99,9 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
     restricts to a document subset and ``tagger_weights`` overrides
     the committed tagger artifact — the held-out protocol passes
     both.  Output columns: label, _tok, _p1, _p2, _nx, cls — for
-    edge="end" the context mapping is mirrored exactly like
-    repair_ends (t0=last token, p1=outside+1, p2=outside+2,
-    nx=inside-1)."""
+    edge="end" the context mapping is mirrored exactly like the end
+    head of begin_repair.repair_edges (t0=last token, p1=outside+1,
+    p2=outside+2, nx=inside-1)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -111,13 +111,13 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
         gold_events,
         load_annotations,
     )
-    from ..util import materialize, truncate
+    from ..util import truncate
     from .begin_repair import (
         END_SHIFTS,
         SHIFTS,
         arguments_with_context,
         events_with_context,
-        repair_begins,
+        repair_edges,
     )
 
     ann = load_annotations(spark)
@@ -125,9 +125,8 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
         ann = ann.filter(F.col("doc_id").isin(list(doc_ids)))
     ann = ann.cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
-    tagged = materialize(
-        tagged_tokens(docs, id_col="doc_id", mode="model", hash_ids=False,
-                      tagger_weights=tagger_weights))
+    tagged = tagged_tokens(docs, id_col="doc_id", mode="model",
+                           hash_ids=False, tagger_weights=tagger_weights)
     if head == "arg":
         spans = arguments_with_context(tagged)
         label, sid = "arg_type", "arg_id"
@@ -145,9 +144,9 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
             F.col("subtype").alias("g_label")).distinct()
     if edge == "end" and begin_weights:
         # end training pairs come from begin-repaired spans (the
-        # inference-time input); keep the end-context columns intact
-        spans = repair_begins(spans, begin_weights.get(
-            "trig" if head == "trig" else "arg"), label_col=label)
+        # inference-time input); a begin-only repair keeps the
+        # end-context columns intact
+        spans = repair_edges(spans, begin_weights.get(head), None, label)
     spans = truncate(spans)
     j = spans.join(
         gold, (spans.doc_id == gold.g_doc) & (spans.begin < gold.g_end)
@@ -171,7 +170,7 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
                .when(F.col("g_end") == n2_end, END_SHIFTS.index(2))
                .when((F.col("g_end") == lp1_end) & (F.col("n_tokens") > 1),
                      END_SHIFTS.index(-1)))
-        # mirrored context mapping (see repair_ends)
+        # mirrored context mapping (see begin_repair.repair_edges)
         ctx = [F.col("_ltok").alias("_tok"), F.col("_ln1").alias("_p1"),
                F.col("_ln2").alias("_p2"), F.col("_lp1").alias("_nx")]
     pairs = (
@@ -182,9 +181,7 @@ def build_training_frame(spark, doc_ids=None, tagger_weights=None,
                 F.col(label).alias("label"), *ctx, "cls")
         .orderBy("doc_id", "span_id")
     )
-    pdf = pairs.toPandas()
-    tagged.unpersist()
-    return pdf
+    return pairs.toPandas()
 
 
 def train(pdf) -> dict[str, np.ndarray]:

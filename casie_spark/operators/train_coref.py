@@ -59,8 +59,8 @@ def build_inputs(spark) -> pd.DataFrame:
     exact frame the deployed clustering consumes (coref.coref_inputs)
     joined to gold_events by (doc_id, nugget begin) — the same match
     rule as tests/test_coref_parity.py."""
-    from ..util import materialize, truncate
-    from .linking import extract_arguments, extract_events, link
+    from ..pipeline import span_frames
+    from .linking import link
     from .tagging import tag_gold_replay
     from .tokenizer import tokenize
     from ..sources.annotations import (
@@ -72,12 +72,10 @@ def build_inputs(spark) -> pd.DataFrame:
     ann = load_annotations(spark).cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
     toks = tokenize(docs, id_col="doc_id").repartition(F.col("doc_id"))
-    tagged = materialize(
+    events, args = span_frames(
         tag_gold_replay(toks, gold_events(ann), gold_arguments(ann)))
-    events = truncate(extract_events(tagged))
-    linked = truncate(link(events, extract_arguments(tagged)))
     pubdates = ann.select("doc_id", F.col("info.date").alias("pubdate"))
-    base = coref_inputs(events, linked, pubdates)
+    base = coref_inputs(events, link(events, args), pubdates)
     gev = gold_events(ann).select(
         "doc_id", "hopper_id", F.col("nugget_begin").alias("begin"))
     pdf = (
@@ -88,7 +86,6 @@ def build_inputs(spark) -> pd.DataFrame:
         .sort_values(["doc_id", "subtype", "event_id"])
         .reset_index(drop=True)
     )
-    tagged.unpersist()
     ann.unpersist()
     return pdf
 

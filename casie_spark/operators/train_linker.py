@@ -59,43 +59,29 @@ def build_training_pools(spark, doc_ids=None, tagger_weights=None,
     inference, where repair runs before linking."""
     from pyspark.sql import functions as F
 
-    from ..pipeline import tagged_tokens
+    from ..pipeline import span_frames, tagged_tokens
     from ..sources.annotations import (
         gold_arguments,
         gold_triples,
         load_annotations,
     )
-    from ..util import materialize, truncate
-    from .linking import extract_arguments, extract_events
+    from ..util import truncate
 
     ann = load_annotations(spark)
     if doc_ids is not None:
         ann = ann.filter(F.col("doc_id").isin(list(doc_ids)))
     ann = ann.cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
-    tagged = materialize(
-        tagged_tokens(docs, id_col="doc_id", mode="model", hash_ids=False,
-                      tagger_weights=tagger_weights))
     if begin_weights == "auto":
         from .begin_repair import load_begin_weights
 
         begin_weights = load_begin_weights()
-    if begin_weights:
-        from .begin_repair import (
-            arguments_with_context,
-            events_with_context,
-            repair_edges,
-        )
-
-        events = truncate(repair_edges(
-            events_with_context(tagged), begin_weights.get("trig"),
-            begin_weights.get("trig_end"), label_col="subtype"))
-        args = truncate(repair_edges(
-            arguments_with_context(tagged), begin_weights.get("arg"),
-            begin_weights.get("arg_end")))
-    else:
-        events = truncate(extract_events(tagged))
-        args = truncate(extract_arguments(tagged))
+    events, args = span_frames(
+        tagged_tokens(docs, id_col="doc_id", mode="model", hash_ids=False,
+                      tagger_weights=tagger_weights), begin_weights)
+    # the candidate pool and the gold match both read the repaired
+    # args: one truncate scores the edge heads once
+    args = truncate(args)
     cand = candidate_frame(events, args)
 
     ga = gold_arguments(ann).select(

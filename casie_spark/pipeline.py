@@ -10,17 +10,25 @@ web scale (BASELINE.json north_rule "salted-key repartitioned").
 Everything after tokenization partitions naturally by doc_id through
 the window/join operators.  The token stream has one reader, the span
 pass (``linking.extract_spans``: events, arguments, their realis
-windows, sentence arrays and edge context at once), and its truncate
-is the pipeline's one barrier; edge repair, realis, linking and roles
-run above that event-scale leaf.
+windows, sentence arrays and edge context at once).  ``span_frames``
+is the one span stage every caller shares: it cuts the pass with the
+pipeline's one barrier, a truncate, and edge-repairs both kinds;
+realis, linking and roles run above that event-scale leaf.  The
+trained heads of mode=model travel as one ``Heads`` set
+(``model_heads``); no head set means the reference rules.
 """
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import truncate
+from .operators.begin_repair import repair_edges
 from .operators.linking import extract_spans, link, spans_of
 from .operators.roles import assign_roles
 from .operators.rules import apply_rules
@@ -90,8 +98,9 @@ def tagged_tokens(documents: DataFrame, id_col: str = "url",
                   mode: str = "rules", gold=None,
                   hash_ids: bool = True, tagger_weights=None) -> DataFrame:
     """documents -> tagged token table (the model-stage column contract),
-    lazy: no barrier, since the span pass is its one reader (callers
-    that read it more than once, like the trainers, `materialize` it).
+    lazy: no barrier, since the span stage (:func:`span_frames`) is its
+    one reader (a caller that reads it more than once, like
+    train_begin's edge audit, `materialize`s it).
     ``tagger_weights``: optional TaggerWeights override for mode="model"
     (default: the trained artifact, falling back to distilled).
 
@@ -104,19 +113,16 @@ def tagged_tokens(documents: DataFrame, id_col: str = "url",
     """
     docs = salt_repartition(documents, id_col)
     # mode="model" runs inference BEFORE the doc_id exchange (tag_model
-    # owns that exchange; see its partitioning note); its mapInPandas
-    # decoder derives sentence context from the token rows itself, so
-    # the tokenizer's context columns are not needed
-    ctx = False
+    # owns that exchange; see its partitioning note)
     if hash_ids:
         docs = docs.withColumn("_doc_key", doc_key(F.col(id_col)))
-        toks = tokenize(docs, id_col="_doc_key", id_type="long", context=ctx)
+        toks = tokenize(docs, id_col="_doc_key", id_type="long")
         if mode == "gold" and gold is not None:
             gold = tuple(
                 g.withColumn("doc_id", doc_key(F.col("doc_id"))) for g in gold
             )
     else:
-        toks = tokenize(docs, id_col=id_col, context=ctx)
+        toks = tokenize(docs, id_col=id_col)
     # `end` is begin + len(token) by tokenizer construction; span
     # assembly recomputes it, so it need not ride the ~15 window/sort
     # buffer passes of the tagging DAG (see spans.span_aggregates)
@@ -150,55 +156,84 @@ def tagged_tokens(documents: DataFrame, id_col: str = "url",
     return tagged
 
 
-def triples_from_tagged(tagged: DataFrame, role_provider=None,
-                        realis_provider=None,
-                        link_provider=None,
-                        role_route: str = "ambiguous",
-                        role_canon: bool = False,
-                        begin_weights=None) -> DataFrame:
-    """tagged tokens -> (subj, pred, obj) triples.  ``role_provider``:
-    optional role-phrase model hook (see operators.roles.assign_roles);
-    ``realis_provider``: optional M4 classifier override (default: the
-    cue rules); ``link_provider``: optional (events, args) -> linked
-    callable replacing the reference rule cascade
-    (operators.linker.link_trained — the trained union-pool ranker
-    mode=model pipelines use); ``role_route``/``role_canon``: provider
-    routing and gold-vocabulary canonicalization, forwarded to
-    assign_roles (mode=model passes "all"/True); ``begin_weights``:
-    optional trained begin-repair weights ({"arg": tables, "trig":
-    tables}, operators.begin_repair) — mode=model snaps argument AND
-    trigger edges onto the gold convention before linking; each head
-    applies when its tables are present."""
-    # the span pass is the pipeline's ONE barrier.  It is the token
-    # stream's only reader, and the events and arguments frames both
-    # project it, so `truncate` runs the tagging DAG and the pass once
-    # and leaves an EVENT/ARG-scale leaf under everything above (edge
-    # repair, realis, linking, roles), which keeps the rendered plan
-    # far below the 1 MB maxPlanStringLength cap (test_pipeline_job_
-    # budget pins the plan size).  Nothing above it is read twice.
-    spans = truncate(extract_spans(tagged, context=bool(begin_weights)))
-    events, args = spans_of(spans, "event"), spans_of(spans, "argument")
-    if begin_weights:
-        from .operators.begin_repair import repair_edges
+class Heads(NamedTuple):
+    """The trained heads mode=model runs in place of the reference
+    rules: ``begin`` the edge-repair tables ({"arg", "trig", "arg_end",
+    "trig_end"}, operators.begin_repair; None skips the repair),
+    ``realis`` a (text, ctx) -> Column realis provider, ``link`` an
+    (events, args) -> linked picker and ``role`` a (subtype, arg_type,
+    arg_text) -> Column role provider."""
+    begin: dict | None
+    realis: Callable
+    link: Callable
+    role: Callable
 
-        # fused: ONE pandas_udf scores both edge heads per span kind
-        # (r4 VERDICT next #3 — halves the Python-worker round-trips)
-        events = repair_edges(events, begin_weights.get("trig"),
-                              begin_weights.get("trig_end"),
-                              label_col="subtype")
-        args = repair_edges(args, begin_weights.get("arg"),
-                            begin_weights.get("arg_end"))
+
+def model_heads(model_weights: dict | None = None) -> Heads:
+    """The trained head set, resolved once: the committed artifacts,
+    each overridable by a ``model_weights`` key — "begin" (the
+    load_begin_weights tables), "realis" and "role" ((tables, labels)
+    tuples), "linker" (the load_linker_weights tuple).  The held-out
+    protocol (train_tagger --holdout) passes heads fit on the train
+    folds only."""
+    from .operators.begin_repair import load_begin_weights
+    from .operators.linker import link_trained
+    from .operators.realis import trained_realis_provider
+    from .operators.roles import trained_role_provider
+
+    mw = model_weights or {}
+    return Heads(
+        begin=mw["begin"] if "begin" in mw else load_begin_weights(),
+        realis=trained_realis_provider(mw.get("realis")),
+        link=functools.partial(link_trained,
+                               weights=mw.get("linker", "auto")),
+        role=trained_role_provider(mw.get("role")),
+    )
+
+
+def span_frames(tagged: DataFrame, begin: dict | None = None
+                ) -> tuple[DataFrame, DataFrame]:
+    """tagged tokens -> (events, args): the one span stage.  The span
+    pass (``linking.extract_spans``, with the edge context when
+    ``begin`` is given) is cut by one truncate, the pipeline's one
+    barrier: it is the token stream's only reader and both frames
+    project it, so the tagging DAG and the pass run once and
+    everything above reads an EVENT/ARG-scale leaf, which keeps the
+    rendered plan far below the 1 MB maxPlanStringLength cap
+    (test_pipeline_job_budget pins the plan size).  ``begin``: the
+    edge-repair tables (``Heads.begin``); each kind runs
+    ``begin_repair.repair_edges`` with its own begin and end heads."""
+    spans = truncate(extract_spans(tagged, context=begin is not None))
+    events, args = spans_of(spans, "event"), spans_of(spans, "argument")
+    if begin is not None:
+        events = repair_edges(events, begin.get("trig"),
+                              begin.get("trig_end"), label_col="subtype")
+        args = repair_edges(args, begin.get("arg"), begin.get("arg_end"))
+    return events, args
+
+
+def triples_from_tagged(tagged: DataFrame, heads: Heads | None = None
+                        ) -> DataFrame:
+    """tagged tokens -> (subj, pred, obj) triples.  ``heads``: the
+    trained head set (:func:`model_heads`), which repairs span edges,
+    labels realis, links with the trained ranker and scores the role
+    of every linked pair (route "all", gold-vocabulary canon); None
+    runs the reference rules (cue-rule realis, the rule cascade, the
+    RolePair table on the ambiguous pairs only)."""
+    from .operators.realis import classify_realis_rules, with_realis
+
+    events, args = span_frames(tagged, heads.begin if heads else None)
     if "realis" not in events.columns:
         # rules/model tagging carries no realis — run the M4 stage
         # (two-pass cue classifier over the ±7-token W2 window); gold
         # replay keeps the annotated labels instead
-        from .operators.realis import classify_realis_rules, with_realis
-
         events = with_realis(
-            events, provider=realis_provider or classify_realis_rules)
-    linked = (link_provider or link)(events, args)
-    rolled = assign_roles(linked, provider=role_provider,
-                          route=role_route, canon=role_canon)
+            events, provider=heads.realis if heads else classify_realis_rules)
+    if heads is None:
+        rolled = assign_roles(link(events, args))
+    else:
+        rolled = assign_roles(heads.link(events, args), provider=heads.role,
+                              route="all", canon=True)
 
     realis = (
         F.col("realis") if "realis" in rolled.columns else F.lit(None).cast("string")
@@ -218,69 +253,29 @@ def triples_from_tagged(tagged: DataFrame, role_provider=None,
 
 
 def run_pipeline(documents: DataFrame, id_col: str = "url",
-                 mode: str = "rules", gold=None,
-                 english_only: bool = True, tagger_weights=None,
-                 role_provider: object = "auto",
+                 mode: str = "rules", gold=None, tagger_weights=None,
                  model_weights: dict | None = None) -> DataFrame:
     """documents(url, warc_ts, html, text, lang) -> triples, doc_id =
     the original url/id (internal long keys are joined back here —
     triples are ~100x smaller than the token stream, so the mapping
-    join is cheap).
+    join is cheap).  Pages whose ``lang`` is not "en" are dropped.
 
-    ``role_provider``: "auto" (default) routes ALL linked pairs
-    through the TRAINED role-phrase model (route="all" — it beats the
-    deterministic table on every slice and emits the gold-corpus role
-    vocabulary, incl. the Software pairs RolePair lacks), realis
-    through the trained M4 classifier, AND argument→event attachment
-    through the trained union-pool link ranker (operators.linker) when
-    mode="model" — matching the reference architecture, where models
-    handle the ambiguous decisions — and uses the deterministic
-    RolePair + cue-rule + rule-cascade fallbacks otherwise (rules/gold
-    keep parity with the model-free reference semantics, verbatim
-    RolePair vocabulary included).
-    Pass an explicit provider callable or None to override.
-
-    ``model_weights``: optional overrides for the learned heads in
-    mode=model — a dict with any of the keys "role", "realis"
-    ((tables, labels) tuples), "linker" (the load_linker_weights
-    tuple) and "begin" (the load_begin_weights tables).  Used by the held-out protocol (train_tagger --holdout) to
-    run the full model pipeline with every learned component fit on
-    the train folds only; omitted keys fall back to the committed
-    full-corpus artifacts."""
-    if english_only and "lang" in documents.columns:
+    mode="model" runs the trained head set (:func:`model_heads`):
+    edge repair, the trained M4 realis classifier, the trained
+    union-pool link ranker (operators.linker) and the trained
+    role-phrase model on ALL linked pairs (it beats the deterministic
+    table on every slice and emits the gold-corpus role vocabulary,
+    incl. the Software pairs RolePair lacks) — matching the reference
+    architecture, where models handle the ambiguous decisions.
+    rules/gold keep parity with the model-free reference semantics
+    (RolePair + cue-rule + rule-cascade, verbatim RolePair vocabulary
+    included).  ``model_weights`` overrides single trained heads
+    (see :func:`model_heads`); omitted keys fall back to the
+    committed full-corpus artifacts."""
+    if "lang" in documents.columns:
         documents = documents.filter(F.col("lang") == "en")
-    realis_provider = None
-    link_provider = None
-    begin_weights = None
-    role_route, role_canon = "ambiguous", False
-    if role_provider == "auto":
-        if mode == "model":
-            from .operators.linker import link_trained
-            from .operators.realis import trained_realis_provider
-            from .operators.roles import trained_role_provider
-
-            from .operators.begin_repair import load_begin_weights
-
-            mw = model_weights or {}
-            role_provider = trained_role_provider(mw.get("role"))
-            realis_provider = trained_realis_provider(mw.get("realis"))
-            begin_weights = mw.get("begin", load_begin_weights())
-            if "linker" in mw:
-                import functools
-
-                link_provider = functools.partial(
-                    link_trained, weights=mw["linker"])
-            else:
-                link_provider = link_trained
-            role_route, role_canon = "all", True
-        else:
-            role_provider = None
+    heads = model_heads(model_weights) if mode == "model" else None
     tagged = tagged_tokens(documents, id_col=id_col, mode=mode, gold=gold,
                            tagger_weights=tagger_weights)
-    triples = triples_from_tagged(tagged, role_provider=role_provider,
-                                  realis_provider=realis_provider,
-                                  link_provider=link_provider,
-                                  role_route=role_route,
-                                  role_canon=role_canon,
-                                  begin_weights=begin_weights)
+    triples = triples_from_tagged(tagged, heads)
     return restore_urls(triples, documents, id_col).select(*TRIPLE_COLUMNS)

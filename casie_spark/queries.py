@@ -869,17 +869,15 @@ def q25_event_coref(spark, sf_dir):
     SQL-expressible (iterative average-linkage clustering)."""
     from .functions.text import extract_pubdate_raw
     from .operators.coref import cluster_events
-    from .operators.linking import extract_spans, link, spans_of
+    from .operators.linking import link
     from .operators.roles import assign_roles
-    from .pipeline import doc_key, tagged_tokens
+    from .pipeline import doc_key, span_frames, tagged_tokens
     from .sources.documents import synth_documents
-    from .util import truncate
 
     docs = synth_documents(spark, 200)
-    spans = truncate(extract_spans(tagged_tokens(docs, id_col="url",
-                                                 mode="rules")))
-    events = spans_of(spans, "event")
-    linked = assign_roles(link(events, spans_of(spans, "argument")))
+    events, args = span_frames(tagged_tokens(docs, id_col="url",
+                                             mode="rules"))
+    linked = assign_roles(link(events, args))
     pubdates = docs.select(
         doc_key(F.col("url")).alias("doc_id"),
         extract_pubdate_raw(F.col("html").cast("string")).alias("pubdate"),

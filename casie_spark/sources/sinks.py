@@ -22,15 +22,16 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import manifests
 from ..util import cache_lazy, track_persists, truncate
 from ..operators.canonicalize import canonicalize_surfaces, default_dictionary
 from ..operators.coref import cluster_events
-from ..pipeline import restore_urls, tagged_tokens
-from ..operators.linking import extract_spans, link, spans_of
+from ..pipeline import restore_urls, span_frames, tagged_tokens
+from ..operators.linking import link
 from ..operators.roles import assign_roles
 
 
@@ -46,11 +47,10 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
     # truncate (not persist) at the graph path's barriers: the coref +
     # canonicalization layers below reference these repeatedly and the
     # combined lineage otherwise grows beyond what the driver can even
-    # render (see util.truncate).  The span pass is the token stream's
+    # render (see util.truncate).  The span stage is the token stream's
     # one reader; events and args are projections of its leaf.
-    spans = truncate(extract_spans(tagged))
-    events = spans_of(spans, "event")
-    linked = assign_roles(link(events, spans_of(spans, "argument")))
+    events, args = span_frames(tagged)
+    linked = assign_roles(link(events, args))
 
     # graph edges carry the real document id, restored at the event
     # level; events re-reads the spans leaf, so it takes no barrier
@@ -121,12 +121,23 @@ def build_graph(documents: DataFrame, mode: str = "rules", gold=None,
 
 
 def write_graph(vertices: DataFrame, edges: DataFrame, out_dir: str) -> None:
-    edges.write.mode("overwrite").partitionBy("event_subtype").parquet(
-        os.path.join(out_dir, "edges")
-    )
-    vertices.write.mode("overwrite").partitionBy("kind").parquet(
-        os.path.join(out_dir, "vertices")
-    )
+    """Write ``edges`` partitioned by event_subtype and ``vertices`` by
+    kind under ``out_dir``.  A partitioned write of no rows leaves only
+    ``_SUCCESS``, from which no reader can infer a schema, so a table
+    whose write counted 0 rows (an Observation on the write, no extra
+    job) is rewritten as one empty file carrying the columns a
+    non-empty table reads back, partition column last."""
+    for df, name, pcol in ((edges, "edges", "event_subtype"),
+                           (vertices, "vertices", "kind")):
+        path = os.path.join(out_dir, name)
+        written = Observation()
+        (df.observe(written, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").partitionBy(pcol).parquet(path))
+        if written.get["rows"] == 0:
+            fields = [f for f in df.schema.fields if f.name != pcol]
+            schema = StructType(fields + [df.schema[pcol]])
+            df.sparkSession.createDataFrame([], schema) \
+                .write.mode("overwrite").parquet(path)
 
 
 def write_graph_table(vertices: DataFrame, edges: DataFrame,

@@ -16,9 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from casie_spark.operators.begin_repair import (
+    END_SHIFTS,
     SHIFTS,
     arguments_with_context,
-    repair_begins,
+    repair_edges,
 )
 from casie_spark.operators.model_tagger import N_SHAPES, VOCAB_SIZE
 from casie_spark.operators.train_begin import _KEYS, begin_features
@@ -64,28 +65,25 @@ def spans_by_begin(df):
 
 def test_keep_class_is_identity(spark, tagged):
     args0 = arguments_with_context(tagged)
-    out = repair_begins(args0, forced_weights(SHIFTS.index(0)))
+    out = repair_edges(args0, forced_weights(SHIFTS.index(0)), None)
     got = {r["begin"]: r for r in out.collect()}
     assert set(got) == {0, 34}
     assert got[34]["text"] == "critical flaw"
     assert got[34]["n_tokens"] == 2
-    # begin-context columns dropped; end-context columns survive for
-    # the subsequent repair_ends stage, which drops them (even when
-    # its weights are None).
-    from casie_spark.operators.begin_repair import (
-        _END_CTX_COLS,
-        repair_ends,
-    )
+    # each head drops only its own context: the begin head leaves the
+    # end-context columns for an end head, which drops them
+    from casie_spark.operators.begin_repair import _END_CTX_COLS
 
     leftover = [c for c in out.columns if c.startswith("_")]
     assert sorted(leftover) == sorted(_END_CTX_COLS)
-    done = repair_ends(out, None)
+    done = repair_edges(out, None, forced_weights(END_SHIFTS.index(0)))
     assert not [c for c in done.columns if c.startswith("_")]
+    assert spans_by_begin(done)[34]["text"] == "critical flaw"
 
 
 def test_shift_minus1_applies_and_guards(spark, tagged):
-    out = repair_begins(arguments_with_context(tagged),
-                        forced_weights(SHIFTS.index(-1)))
+    out = repair_edges(arguments_with_context(tagged),
+                       forced_weights(SHIFTS.index(-1)), None)
     got = spans_by_begin(out)
     # sent-1 span pulled onto "the"; pad preserves the 2-space gap so
     # the end-begin == len(text) invariant survives
@@ -99,8 +97,8 @@ def test_shift_minus1_applies_and_guards(spark, tagged):
 
 
 def test_shift_minus2_applies_and_guards(spark, tagged):
-    out = repair_begins(arguments_with_context(tagged),
-                        forced_weights(SHIFTS.index(-2)))
+    out = repair_edges(arguments_with_context(tagged),
+                       forced_weights(SHIFTS.index(-2)), None)
     got = spans_by_begin(out)
     assert 25 in got
     assert got[25]["text"] == "saw the  critical flaw"
@@ -109,8 +107,8 @@ def test_shift_minus2_applies_and_guards(spark, tagged):
 
 
 def test_shift_plus1_applies_and_guards(spark, tagged):
-    out = repair_begins(arguments_with_context(tagged),
-                        forced_weights(SHIFTS.index(1)))
+    out = repair_edges(arguments_with_context(tagged),
+                       forced_weights(SHIFTS.index(1)), None)
     got = spans_by_begin(out)
     # 2-token span shrinks onto its second token
     assert 43 in got
@@ -122,24 +120,13 @@ def test_shift_plus1_applies_and_guards(spark, tagged):
 
 
 def test_none_weights_passthrough(spark, tagged):
-    from casie_spark.operators.begin_repair import (
-        _END_CTX_COLS,
-        repair_ends,
-    )
-
+    """With no head present nothing is scored, edited or dropped."""
     args0 = arguments_with_context(tagged)
-    out = repair_begins(args0, None)
+    out = repair_edges(args0, None, None)
+    assert out.columns == args0.columns
     got = spans_by_begin(out)
+    assert got == spans_by_begin(args0)
     assert got[34]["text"] == "critical flaw"
-    # begin-context columns dropped; end-context columns remain for
-    # repair_ends, which drops them even with None weights
-    leftover = [c for c in out.columns if c.startswith("_")]
-    assert sorted(leftover) == sorted(
-        c for c in _END_CTX_COLS if not c.startswith("_lg"))
-    done = repair_ends(out, None)
-    assert not [c for c in done.columns if c.startswith("_")]
-    got2 = spans_by_begin(done)
-    assert got2[34]["text"] == "critical flaw"
 
 
 def test_trigger_head_path(spark, tagged):
@@ -152,8 +139,8 @@ def test_trigger_head_path(spark, tagged):
                           F.when(F.col("token") == "flaw", "B-Databreach")
                           .otherwise("O"))
         .withColumn("arg_tag", F.lit("O")))
-    out = repair_begins(ev, forced_weights(SHIFTS.index(-1)),
-                        label_col="subtype")
+    out = repair_edges(ev, forced_weights(SHIFTS.index(-1)), None,
+                       label_col="subtype")
     got = spans_by_begin(out)
     # "flaw" trigger pulled onto "critical"
     assert 34 in got and got[34]["text"] == "critical flaw"
@@ -163,12 +150,10 @@ def test_trigger_head_path(spark, tagged):
 def test_end_shift_plus1_applies_and_guards(spark, tagged):
     """END +1 absorbs the following token; a span whose next token is
     the sentence terminator still absorbs it (it exists); the sent-0
-    span's +1 target 'found' exists too — force +2 to hit the guard."""
-    from casie_spark.operators.begin_repair import END_SHIFTS, repair_ends
-
-    args0 = repair_begins(arguments_with_context(tagged),
-                          forced_weights(SHIFTS.index(0)))
-    out = repair_ends(args0, forced_weights(END_SHIFTS.index(1)))
+    span's +1 target 'found' exists too — force +2 to hit the guard.
+    The end head runs alone."""
+    out = repair_edges(arguments_with_context(tagged), None,
+                       forced_weights(END_SHIFTS.index(1)))
     got = spans_by_begin(out)
     # "critical flaw" absorbs the "." (begin 48)
     assert got[34]["text"] == "critical flaw ."
@@ -178,11 +163,9 @@ def test_end_shift_plus1_applies_and_guards(spark, tagged):
 
 
 def test_end_shift_minus1_applies_and_guards(spark, tagged):
-    from casie_spark.operators.begin_repair import END_SHIFTS, repair_ends
-
-    args0 = repair_begins(arguments_with_context(tagged),
-                          forced_weights(SHIFTS.index(0)))
-    out = repair_ends(args0, forced_weights(END_SHIFTS.index(-1)))
+    out = repair_edges(arguments_with_context(tagged),
+                       forced_weights(SHIFTS.index(0)),
+                       forced_weights(END_SHIFTS.index(-1)))
     got = spans_by_begin(out)
     # 2-token span drops its last token
     assert got[34]["text"] == "critical"
@@ -194,11 +177,9 @@ def test_end_shift_minus1_applies_and_guards(spark, tagged):
 
 def test_end_shift_plus2_and_chain_after_begin(spark, tagged):
     """begin -1 then end +2: both edges move, offsets stay exact."""
-    from casie_spark.operators.begin_repair import END_SHIFTS, repair_ends
-
-    args0 = repair_begins(arguments_with_context(tagged),
-                          forced_weights(SHIFTS.index(-1)))
-    out = repair_ends(args0, forced_weights(END_SHIFTS.index(2)))
+    out = repair_edges(arguments_with_context(tagged),
+                       forced_weights(SHIFTS.index(-1)),
+                       forced_weights(END_SHIFTS.index(2)))
     got = spans_by_begin(out)
     # sent-1: begin pulled onto "the" (29); end +2 would need two
     # tokens after "flaw" but only "." exists -> guard keeps end
@@ -253,7 +234,6 @@ def test_jvm_scorer_parity_with_python_logits(spark):
     import numpy as np
 
     from casie_spark.operators.begin_repair import (
-        END_SHIFTS,
         _with_shifts_jvm,
         load_begin_weights,
     )
@@ -284,10 +264,11 @@ def test_jvm_scorer_parity_with_python_logits(spark):
         rows, "doc_id long, first_token_id int, "
         + ", ".join(f"{c} string" for c in cols))
     got = (
-        _with_shifts_jvm(df, w["arg"], w["arg_end"], "arg_type",
-                         ("_tok", "_p1", "_p2", "_nx"),
-                         ("_ltok", "_ln1", "_ln2", "_lp1"),
-                         (-2, -1, 0, 1), END_SHIFTS)
+        _with_shifts_jvm(df, [
+            (w["arg"], ("_tok", "_p1", "_p2", "_nx"), (-2, -1, 0, 1),
+             "_shb"),
+            (w["arg_end"], ("_ltok", "_ln1", "_ln2", "_lp1"), END_SHIFTS,
+             "_she")], "arg_type")
         .select(*cols, "_shb", "_she").collect()
     )
     assert len(got) == len(rows)
@@ -367,14 +348,11 @@ def _random_tagged(spark, seed: int, docs: int = 4):
 
 
 def test_repair_edges_equals_sequential_composition(spark):
-    """repair_edges (both heads scored on one frame, guards applied in
-    order) == repair_ends(repair_begins(...)) on argument and trigger
-    spans, for seeded random weight tables."""
-    from casie_spark.operators.begin_repair import (
-        events_with_context,
-        repair_edges,
-        repair_ends,
-    )
+    """repair_edges with both heads (scored on one frame, guards
+    applied in order) == a begin-only repair followed by an end-only
+    one, on argument and trigger spans, for seeded random weight
+    tables."""
+    from casie_spark.operators.begin_repair import events_with_context
 
     tagged = _random_tagged(spark, 7).cache()
 
@@ -388,7 +366,8 @@ def test_repair_edges_equals_sequential_composition(spark):
         for spans, lab in ((arguments_with_context(tagged), "arg_type"),
                            (events_with_context(tagged), "subtype")):
             fused = repair_edges(spans, bw, ew, label_col=lab)
-            seq = repair_ends(repair_begins(spans, bw, lab), ew, lab)
+            seq = repair_edges(repair_edges(spans, bw, None, lab), None,
+                               ew, lab)
             assert sorted(fused.columns) == sorted(seq.columns)
             got, want = rows(fused), rows(seq.select(*fused.columns))
             assert got == want

@@ -32,19 +32,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from casie_spark.operators.coref import cluster_events
-from casie_spark.operators.linking import (
-    extract_arguments,
-    extract_events,
-    link,
-)
+from casie_spark.operators.linking import link
 from casie_spark.operators.tagging import tag_gold_replay
 from casie_spark.operators.tokenizer import tokenize
+from casie_spark.pipeline import span_frames
 from casie_spark.sources.annotations import (
     gold_arguments,
     gold_events,
     load_annotations,
 )
-from casie_spark.util import materialize, truncate
+from casie_spark.util import truncate
 
 
 def test_b_cubed_hand_computed(spark):
@@ -94,10 +91,10 @@ def coref_scores(spark):
     ann = load_annotations(spark).cache()
     docs = ann.select("doc_id", F.col("content").alias("text"))
     toks = tokenize(docs, id_col="doc_id").repartition(F.col("doc_id"))
-    tagged = materialize(
+    events, args = span_frames(
         tag_gold_replay(toks, gold_events(ann), gold_arguments(ann)))
-    events = truncate(extract_events(tagged))
-    linked = truncate(link(events, extract_arguments(tagged)))
+    # both cluster_events runs read the linked pairs
+    linked = truncate(link(events, args))
     pubdates = ann.select("doc_id", F.col("info.date").alias("pubdate"))
     gev = gold_events(ann).select(
         "doc_id", "hopper_id", F.col("nugget_begin").alias("begin"))
@@ -108,7 +105,6 @@ def coref_scores(spark):
                                   weights=wmode)
         scores[wmode] = _score_clusters(clusters, events, gev)
     ann.unpersist()
-    tagged.unpersist()
     return scores
 
 

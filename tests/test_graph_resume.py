@@ -78,6 +78,34 @@ def test_graph_path_job_budget(spark, tmp_path):
         assert len(plan) < cap
 
 
+def test_empty_graph_round_trip(spark, tmp_path):
+    """A graph with no edges writes tables that read back: 0 rows under
+    the columns a non-empty graph reads back (partition column last),
+    for an empty frame, a null text, an empty text and a page with no
+    event.  A partitioned write of no rows leaves only ``_SUCCESS``,
+    from which no reader can infer a schema."""
+    schema = "url string, text string"
+    cases = {
+        "empty frame": [],
+        "null text": [("u1", None)],
+        "empty text": [("u2", "")],
+        "no events": [("u3", "The park was quiet and the weather mild.")],
+    }
+    dictionary = build_dictionary(spark)
+    for name, rows in cases.items():
+        out = str(tmp_path / name.replace(" ", "_"))
+        with track_persists():
+            vertices, edges = build_graph(
+                spark.createDataFrame(rows, schema), dictionary=dictionary)
+            write_graph(vertices, edges, out)
+        for table, frame, pcol in (("edges", edges, "event_subtype"),
+                                   ("vertices", vertices, "kind")):
+            back = spark.read.parquet(f"{out}/{table}")
+            assert back.count() == 0, (name, table)
+            assert back.columns == [c for c in frame.columns if c != pcol] \
+                + [pcol], (name, table)
+
+
 # (mode, job budget, explain budget in KB, triple count, fingerprint)
 # of run_pipeline on synth_documents(spark, 60).  Both modes pay one
 # barrier, the span pass's truncate, and nothing else: the token stream

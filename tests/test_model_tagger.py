@@ -15,7 +15,12 @@ from casie_spark.operators.model_tagger import (
     token_id,
 )
 from casie_spark.operators.tokenizer import tokenize
-from casie_spark.pipeline import run_pipeline
+from casie_spark.pipeline import (
+    restore_urls,
+    run_pipeline,
+    tagged_tokens,
+    triples_from_tagged,
+)
 from casie_spark.sources.documents import synth_documents
 
 
@@ -62,9 +67,12 @@ def test_model_vs_rules_triple_parity(spark):
     docs = synth_documents(spark, 150, partitions=4)
     rules_t = {tuple(r) for r in run_pipeline(docs, mode="rules")
                .select("doc_id", "subj", "pred", "obj").distinct().collect()}
-    model_t = {tuple(r) for r in run_pipeline(
-        docs, mode="model", tagger_weights=distill_rule_weights(),
-        role_provider=None)
+    # the distilled tagger under the reference rules downstream (no
+    # trained head set), on the English pages run_pipeline keeps
+    en = docs.filter(F.col("lang") == "en")
+    model_t = {tuple(r) for r in restore_urls(triples_from_tagged(
+        tagged_tokens(en, mode="model", tagger_weights=distill_rule_weights())),
+        en)
         .select("doc_id", "subj", "pred", "obj").distinct().collect()}
     tp = len(rules_t & model_t)
     precision = tp / len(model_t)

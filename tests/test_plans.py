@@ -90,9 +90,9 @@ def test_model_pipeline_single_token_shuffle(spark):
         [(f"u{i}", f"Hackers stole data on CVE-2019-000{i} last week.")
          for i in range(10)],
         "url string, text string")
-    # the pipeline's model path: tokenizer emits sentence context so
-    # inference runs pre-exchange; tag_model owns the one repartition
-    toks = tokenize(docs, id_col="url", context=True)
+    # the pipeline's model path: inference runs pre-exchange;
+    # tag_model owns the one repartition
+    toks = tokenize(docs, id_col="url")
     tagged = apply_rules(tag_model(toks))
     # the context span pass (edge-repair neighbors, realis window,
     # sentence arrays) rides the same exchange

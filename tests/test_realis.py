@@ -107,7 +107,7 @@ def test_span_pass_window_equals_range_join(spark):
     from casie_spark.operators.begin_repair import (
         SHIFTS,
         events_with_context,
-        repair_begins,
+        repair_edges,
     )
 
     for seed in (3, 4):
@@ -116,8 +116,8 @@ def test_span_pass_window_equals_range_join(spark):
         base = {r["event_id"] + 1000 * r["doc_id"]: r["first_token_id"]
                 for r in spans.collect()}
         for shift in SHIFTS:
-            events = repair_begins(
-                spans, forced_weights(SHIFTS.index(shift)),
+            events = repair_edges(
+                spans, forced_weights(SHIFTS.index(shift)), None,
                 label_col="subtype").cache()
             moved = {r["event_id"] + 1000 * r["doc_id"]: r["first_token_id"]
                      for r in events.collect()}
